@@ -380,6 +380,73 @@ def test_sketch_queries_bounded_exchanges(spark):
         assert a.exchanges <= 4, name
 
 
+# metrics where an INCREASE is a scale regression
+_WORSE_IF_MORE = (
+    "exchanges", "python_ops", "sort_merge_joins",
+    "nested_loop_joins", "scans", "partitionless_windows",
+    "read_cols_total",
+)
+
+# Fast plan-shape gate: every cheap similarity-backed query plus a spread of
+# the other heavy families (TPC-H joins, windows, dedup, sketches, text).
+# The full 184-query battery stays slow-marked below.
+PLAN_GATE_QUERIES = (
+    "similarity_topk_bruteforce",
+    "similarity_topk_ivf",
+    "similarity_topk_int8_rerank",
+    "similarity_topk_lsh_bucketed",
+    "pq_topk_adc",
+    "pq_topk_packed_adc",
+    "pq_rerank_topk",
+    "ivfpq_topk_search",
+    "ivfpq_adaptive_probe",
+    "tpch_q3_shipping_priority",
+    "tpch_q9_product_profit",
+    "tpch_q21_suppliers_kept_waiting",
+    "tumbling_window_sum",
+    "sliding_window_sum_panes",
+    "session_window_agg",
+    "exact_dedup_full_rows",
+    "embedding_cosine_near_dup",
+    "countmin_windowed_cells",
+    "window_ranking_battery",
+    "word_count",
+)
+
+
+def _plan_regressions(spark, names=None) -> tuple[list[str], list[str]]:
+    """Compare the live plans of ``names`` (all queries when None) with the
+    committed PLANS.json snapshot. Returns (queries missing from the
+    snapshot, scale regressions)."""
+    import json
+    import os
+    import sys
+
+    snap_path = os.path.join(os.path.dirname(__file__), "..", "PLANS.json")
+    with open(snap_path) as f:
+        snap = json.load(f)
+    sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "tools"))
+    from plan_snapshot import snapshot
+
+    live = snapshot(spark, SF, names)
+    missing = sorted(set(live) - set(snap))
+    problems = [
+        f"{name}: {k} {snap[name][k]} -> {m[k]}"
+        for name, m in live.items() if name in snap
+        for k in _WORSE_IF_MORE if m[k] > snap[name][k]
+    ]
+    return missing, problems
+
+
+@pytest.mark.parametrize("qname", PLAN_GATE_QUERIES)
+def test_plan_shape_gate(spark, qname):
+    """Default-run plan-shape gate over a representative subset: the same
+    comparison as `test_plan_shape_no_regression`, per query."""
+    missing, problems = _plan_regressions(spark, [qname])
+    assert not missing, f"{qname} missing from PLANS.json (run tools/plan_snapshot.py)"
+    assert not problems, "plan-shape regressions:\n" + "\n".join(problems)
+
+
 @pytest.mark.slow
 def test_plan_shape_no_regression(spark):
     """Scale-regression gate: every query's physical plan is compared to
@@ -389,33 +456,8 @@ def test_plan_shape_no_regression(spark):
     suite. Intentional changes are made by regenerating the snapshot
     (python tools/plan_snapshot.py) and committing the diff, which then
     documents the plan change for review."""
-    import json
-    import os
-
-    snap_path = os.path.join(os.path.dirname(__file__), "..", "PLANS.json")
-    with open(snap_path) as f:
-        snap = json.load(f)
-
-    import sys
-
-    sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "tools"))
-    from plan_snapshot import snapshot
-
-    live = snapshot(spark, SF)
-    missing = sorted(set(live) - set(snap))
+    missing, problems = _plan_regressions(spark)
     assert not missing, (
         f"queries missing from PLANS.json (run tools/plan_snapshot.py): {missing}"
     )
-    # metrics where an INCREASE is a scale regression
-    worse_if_more = (
-        "exchanges", "python_ops", "sort_merge_joins",
-        "nested_loop_joins", "scans", "partitionless_windows",
-        "read_cols_total",
-    )
-    problems = []
-    for name, m in live.items():
-        base = snap[name]
-        for k in worse_if_more:
-            if m[k] > base[k]:
-                problems.append(f"{name}: {k} {base[k]} -> {m[k]}")
     assert not problems, "plan-shape regressions:\n" + "\n".join(problems)

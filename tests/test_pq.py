@@ -436,11 +436,69 @@ def test_pq_packed_codes_roundtrip_and_parity(spark, sf_dir):
         assert [(w >> (4 * j)) & 15 for j in range(8)] == list(r.codes)
 
     want = sorted(map(tuple, S.pq_topk(codes, cb, queries, topk=7).collect()))
-    got = sorted(map(tuple, S.pq_topk_packed(packed, cb, queries, topk=7).collect()))
-    assert got == want
+    for got_df in (
+        S.pq_topk_packed(packed, cb, queries, topk=7),
+        S.pq_topk(packed, cb, queries, topk=7),  # pq_topk reads code_word too
+    ):
+        assert sorted(map(tuple, got_df.collect())) == want
 
     with pytest.raises(ValueError):
         S.pq_pack_codes(codes, m=16, k=16)  # 64 bits: one past the BIGINT budget
+
+
+def _exact_l2_topk(vecs, shortlist, topk):
+    """Reference rerank: per query, exact squared L2 (left-to-right double
+    fold, as the engines sum) over its own shortlist, rounded to 6 dp
+    half-up on the shortest repr (Spark's round), ranked by (dist, id)."""
+    from decimal import ROUND_HALF_UP, Decimal
+
+    import numpy as np
+
+    by_q = {}
+    for qid, vid in shortlist:
+        by_q.setdefault(qid, []).append(vid)
+    out = []
+    for qid, vids in by_q.items():
+        qv = np.asarray(vecs[qid], dtype=np.float64)
+        scored = []
+        for vid in vids:
+            d = 0.0
+            for x, y in zip(np.asarray(vecs[vid], dtype=np.float64), qv):
+                d += float((x - y) * (x - y))
+            d = float(Decimal(repr(d)).quantize(Decimal("1e-6"), ROUND_HALF_UP))
+            scored.append((d, vid))
+        scored.sort()
+        out += [(qid, vid, d, r + 1) for r, (d, vid) in enumerate(scored[:topk])]
+    return sorted(out)
+
+
+def test_rerank_stages_match_exact_l2_on_shortlist(spark, sf_dir):
+    """The shared exact-L2 rerank of `pq_topk_rerank` and
+    `ivfpq_topk_rerank` equals a numpy exact top-k over each one's own ADC
+    shortlist (6-dp rounded distance, id tiebreak)."""
+    emb = read_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    corpus = emb.filter(F.col("vec_id") >= 10)
+    queries = emb.filter(F.col("vec_id") < 4)
+    vecs = {r.vec_id: list(r.embedding) for r in emb.collect()}
+    topk, shortlist = 5, 20
+
+    cb = S.pq_train(emb, iters=1)
+    codes = S.pq_encode(corpus, cb).localCheckpoint()
+    pq_short = S.pq_topk(codes, cb, queries, topk=shortlist).select("query_id", "vec_id")
+    pq_rr = S.pq_topk_rerank(codes, cb, queries, corpus, topk=topk, shortlist=shortlist)
+
+    coarse = S.pq_train(emb, m=1, sub_dim=64, k=4, iters=1)
+    ivf_kw = dict(n_cells=4, nprobe=2, coarse=coarse, fine=cb)
+    ivf_short = S.ivfpq_topk(emb, corpus, queries, topk=shortlist, **ivf_kw).select(
+        "query_id", "vec_id"
+    )
+    ivf_rr = S.ivfpq_topk_rerank(
+        emb, corpus, queries, topk=topk, shortlist=shortlist, **ivf_kw
+    )
+    for short, rr in ((pq_short, pq_rr), (ivf_short, ivf_rr)):
+        got = sorted(map(tuple, rr.collect()))
+        want = _exact_l2_topk(vecs, [tuple(r) for r in short.collect()], topk)
+        assert got and got == want
 
 
 def test_probe_pq_index_rejects_inline_topk_on_stream(spark, tmpdir):

@@ -280,3 +280,72 @@ def test_decoder_filter_drops_malformed_frames(spark):
 
     with _pytest.raises(Exception):
         codec.decode_frames(df).collect()  # strict mode still surfaces it
+
+
+def test_spool_files_read_in_flush_order(spark, tmpdir):
+    """Spark's file-stream source orders new files by ms modification
+    time. Quick flushes land within one ms tick, so each spool file gets a
+    strictly increasing mtime in index order; a reader taking the spool one
+    file per trigger then returns the frames in send order."""
+    import os
+
+    n_files, per_file = 12, 3
+    rx = FramedTCPReceiver(tmpdir + "/spool").start()  # flushed directly
+    try:
+        frames = [struct.pack(">I", 4) + struct.pack(">I", i)
+                  for i in range(n_files * per_file)]
+        for f in range(n_files):
+            rx._flush(frames[f * per_file:(f + 1) * per_file])
+    finally:
+        rx.stop()
+
+    names = sorted(os.listdir(tmpdir + "/spool"))
+    assert len(names) == n_files and all(n.startswith("frames_") for n in names)
+    # zero-padded index: name order is index order
+    idx = [int(n.rsplit("_", 1)[1].split(".")[0]) for n in names]
+    assert idx == list(range(n_files))
+    mtimes = [os.stat(tmpdir + "/spool/" + n).st_mtime_ns // 1_000_000 for n in names]
+    assert all(b > a for a, b in zip(mtimes, mtimes[1:])), mtimes
+
+    got = []
+
+    def collect(batch_df, batch_id):
+        got.extend(bytes(r.frame) for r in batch_df.collect())
+
+    q = (
+        spark.readStream.schema("frame binary")
+        .option("maxFilesPerTrigger", 1)
+        .parquet(tmpdir + "/spool")
+        .writeStream.foreachBatch(collect)
+        .option("checkpointLocation", tmpdir + "/ckpt")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(120)
+    assert got == frames
+
+    # concurrent connections flush from their own threads: index and mtime
+    # are handed out together under the receiver lock
+    import sys
+    import threading
+
+    rx = FramedTCPReceiver(tmpdir + "/spool2").start()
+    old_interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        workers = [
+            threading.Thread(target=lambda: [rx._flush(frames[:2]) for _ in range(6)])
+            for _ in range(8)
+        ]
+        for w in workers:
+            w.start()
+        for w in workers:
+            w.join(timeout=60)
+        assert not any(w.is_alive() for w in workers)
+    finally:
+        sys.setswitchinterval(old_interval)
+        rx.stop()
+    names = sorted(os.listdir(tmpdir + "/spool2"))
+    assert len(names) == 48
+    mtimes = [os.stat(tmpdir + "/spool2/" + n).st_mtime_ns // 1_000_000 for n in names]
+    assert all(b > a for a, b in zip(mtimes, mtimes[1:])), mtimes

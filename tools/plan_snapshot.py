@@ -6,10 +6,11 @@ physical-plan scale metrics from `wallaroo_spark.plans.audit`:
     scans, exchanges, broadcast_joins, sort_merge_joins,
     nested_loop_joins, python_ops, windows, partitionless_windows
 
-`tests/test_plans.py::test_plan_shape_no_regression` compares the live
-plans against this file and fails on any SCALE REGRESSION (more shuffles,
-new Python ops, new sort-merge/nested-loop joins, a partition-less
-window) — so a plan can only get cheaper without a deliberate snapshot
+`tests/test_plans.py::test_plan_shape_no_regression` (all queries, slow)
+and `test_plan_shape_gate` (a representative subset, default run) compare
+the live plans against this file and fail on any SCALE REGRESSION (more
+shuffles, new Python ops, new sort-merge/nested-loop joins, a
+partition-less window) — so a plan can only get cheaper without a deliberate snapshot
 update. Run this tool and commit the diff when a change is intentional;
 the diff itself then documents the plan-shape change for review.
 
@@ -36,12 +37,13 @@ TRACKED = (
 )
 
 
-def snapshot(spark, sf_dir: str) -> dict[str, dict[str, int]]:
+def snapshot(spark, sf_dir: str, names=None) -> dict[str, dict[str, int]]:
+    """Plan metrics of ``names`` (every registered query when None)."""
     from wallaroo_spark.plans import audit
     from wallaroo_spark.queries import QUERIES
 
     out: dict[str, dict[str, int]] = {}
-    for name in sorted(QUERIES):
+    for name in sorted(QUERIES if names is None else names):
         a = audit(QUERIES[name](spark, sf_dir))
         m = {k: getattr(a, k) for k in TRACKED if k != "read_cols_total"}
         # total columns leaving all scans: an increase = column-pruning

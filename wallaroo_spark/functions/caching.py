@@ -4,10 +4,10 @@ r16 left three corpus-sized persists referenced by the returned lazy
 plans with no release hook (VERDICT r16 #3/#7): at 100 TB those are
 MEMORY_AND_DISK copies of the corpus that outlive their query. Operators
 whose RESULT is bounded (pair lists, top-k cuts, reports) materialize it
-eagerly and unpersist their internals before returning — the same
-contract dedup._materialize_release pinned for the LSH path in r16.
-Operators with corpus-sized results must instead document a caller
-release contract.
+eagerly and unpersist their internals before returning, through the one
+helper below (the dedup pair operators, semdedup, the residual IVF-PQ
+search). Operators with corpus-sized results must instead document a
+caller release contract.
 """
 
 from __future__ import annotations

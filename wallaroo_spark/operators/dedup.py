@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from wallaroo_spark.functions import hashing as H
+from wallaroo_spark.functions.caching import materialize_release
 from wallaroo_spark.operators.text import tokens
 
 SHINGLE_K = 3
@@ -197,7 +198,7 @@ def ngram_jaccard_pairs(
         .filter(F.col("jaccard") >= threshold)
         .select("doc_a", "doc_b", "jaccard")
     )
-    return _materialize_release(out, *([sh] if owns_cache else []))
+    return materialize_release(out, *([sh] if owns_cache else []))
 
 
 def _ngram_candidates(
@@ -263,21 +264,6 @@ def _ngram_candidates(
         )
         .distinct()
     )
-
-
-
-
-def _materialize_release(out: DataFrame, *cached: DataFrame) -> DataFrame:
-    """Materialize a (small) operator result and release operator-internal
-    caches — the operator owns its cache lifecycle instead of leaking blocks
-    for the caller to clearCache() away. localCheckpoint also truncates the
-    lineage, so downstream plans start from the pair list, not the shingle
-    DAG. (On a real cluster prefer reliable checkpoint dirs for multi-hour
-    jobs; local checkpoint blocks die with their executor.)"""
-    res = out.localCheckpoint(eager=True)
-    for df in cached:
-        df.unpersist()
-    return res
 
 
 def minhash_signatures(
@@ -435,7 +421,7 @@ def minhash_lsh_pairs(
         .filter(F.col("jaccard") >= threshold)
         .select("doc_a", "doc_b", "jaccard")
     )
-    return _materialize_release(out, *([sh] if owns_cache else []))
+    return materialize_release(out, *([sh] if owns_cache else []))
 
 
 def duplicate_clusters(
@@ -521,7 +507,7 @@ def duplicate_clusters(
             f"duplicate_clusters: label propagation did not converge in {max_rounds} rounds"
         )
     out = labels.select(F.col("src").alias(id_col), F.col("lbl").alias("component_id"))
-    return _materialize_release(out, edges, prev_mat)
+    return materialize_release(out, edges, prev_mat)
 
 
 SIMHASH_BITS = 32

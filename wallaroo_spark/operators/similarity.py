@@ -1,14 +1,32 @@
 """Similarity search over embedding columns (array<float>).
 
-Baseline: brute-force cosine top-k — broadcast the (small) query set against
-the (huge) corpus; one pass over the corpus, per-partition top-k via ranking
-window on (query, corpus-partition), no corpus shuffle of raw vectors.
+Every top-k entry point is composed from one copy of each search stage:
 
-Scale path: bucketed search. Sign-bit LSH (here: signs of a fixed subset of
-dimensions — an axis-aligned random-hyperplane family) assigns each vector a
-bucket; candidates are same-bucket only, cutting the pair space by ~2^bits.
-An IVF variant swaps the bucket function for nearest-centroid assignment;
-the plumbing (bucket column → co-partitioned equi-join) is identical.
+- **rank cut** (`_topk`, exposed as `topk_cut`): per-query row_number over
+  an explicit order (score direction + id tiebreak), kept to rank <= k.
+- **cosine candidate scoring**: one query-side prep (`_q_side`: ``_qv``,
+  ``_qn``), one corpus-side prep (`_c_side`: ``_cn``) and one score
+  expression (`_cos`), so a candidate pair costs ONE array dot.
+  `brute_force_topk` (cross join), `bucketed_topk` (LSH-bucket equi-join)
+  and `ivf_topk` (cent_id equi-join) differ only in how candidates pair
+  up; `hard_negative_topk` and `knn_label_purity` add a label filter and
+  rank on the rounded cosine.
+- **nearest-centroid argmax** (`_nearest`): one map-side max_by with
+  min-id tiebreak, used by `kmeans_parallel_seeds`, `kmeans_fit`,
+  `assign_nearest` and the IVF assignment (`_ivf_assign`).
+- **ADC** (asymmetric distance over PQ codes): one query-table builder
+  (`_adc_tables`, keyed by query, or by (query, cell) for the residual
+  variant) and one score step (`_adc_fold`) that folds array ``codes``
+  or shift+masks packed ``code_word`` — `pq_topk` (hence
+  `pq_topk_packed`), the `ivfpq_*` searches and `ivfpq_probe`.
+- **IVF-PQ index setup** (`_ivfpq_index`): auto geometry, the overlapped
+  coarse/fine `pq_train` chains, cell and code encoding — shared by
+  `ivfpq_topk`, `ivfpq_adaptive_topk` and (coarse half)
+  `ivfpq_residual_topk`; `_probe_window` is the one fixed-``nprobe``
+  probe, `_ivfpq_scan` the one cell-candidate ADC scan.
+- **exact-L2 rerank** (`_l2_rerank`): `pq_topk_rerank` and
+  `ivfpq_topk_rerank` re-score their ADC shortlist on float vectors.
+  (`int8_topk_rerank` re-scores by exact cosine through the rank cut.)
 
 All arithmetic is double-precision, computed with native higher-order
 functions (zip_with/aggregate — JVM, no Python). The DuckDB oracle uses
@@ -21,6 +39,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
+
+from wallaroo_spark.functions.caching import materialize_release
+from wallaroo_spark.functions.overlap import overlap_build
 
 LSH_DIMS = (0, 9, 18, 27)  # fixed dimensions whose signs form the bucket id
 
@@ -41,6 +62,81 @@ def cosine(a: Column, b: Column) -> Column:
     return _dot(a, b) / (_norm(a) * _norm(b))
 
 
+def _topk(
+    scored: DataFrame,
+    k: int,
+    part: str,
+    order: list,
+    rank: str = "rank",
+    out: list | None = None,
+) -> DataFrame:
+    """The rank cut every search ends in: row_number per ``part`` over
+    ``order`` (score direction first, then the tiebreak), rows with
+    ``rank`` <= k, projected to ``out`` (all columns when None)."""
+    w = Window.partitionBy(part).orderBy(*order)
+    cut = scored.withColumn(rank, F.row_number().over(w)).filter(F.col(rank) <= k)
+    return cut if out is None else cut.select(*out)
+
+
+def topk_cut(
+    scored: DataFrame,
+    topk: int,
+    query_id: str = "query_id",
+    id_col: str = "vec_id",
+    dist_col: str = "approx_dist",
+) -> DataFrame:
+    """The per-query rank cut shared by every ANN search: rounded
+    distance, id tiebreak. On a stream, apply per micro-batch inside
+    foreachBatch (a query's candidates all arrive in its batch, so the
+    batch-local cut IS the global one)."""
+    return _topk(
+        scored, topk, query_id, [F.col(dist_col), F.col(id_col)],
+        out=[query_id, id_col, dist_col, "rank"],
+    )
+
+
+def _q_side(df: DataFrame, qid: str, id_col: str, vec_col: str, *extras) -> DataFrame:
+    """Query side of cosine scoring: (qid, *extras, _qv, _qn)."""
+    v = F.col(vec_col)
+    return df.select(F.col(id_col).alias(qid), *extras, v.alias("_qv"), _norm(v).alias("_qn"))
+
+
+def _c_side(df: DataFrame, id_col: str, vec_col: str, *extras) -> DataFrame:
+    """Corpus side of cosine scoring: (id, *extras, vec, _cn)."""
+    return df.select(id_col, *extras, vec_col, _norm(F.col(vec_col)).alias("_cn"))
+
+
+def _pair_cos(vec_col: str) -> Column:
+    """Cosine of a paired (corpus, query) row from the precomputed norms."""
+    return _dot(F.col(vec_col), F.col("_qv")) / (F.col("_cn") * F.col("_qn"))
+
+
+def _cosine_topk(
+    pairs: DataFrame, k: int, query_id: str, id_col: str, vec_col: str, keep: tuple = ()
+) -> DataFrame:
+    """Exact-cosine top-k over candidate pairs: rank on the raw cosine (id
+    tiebreak), emit it rounded to 4 dp. Output: (query_id, *keep, id,
+    cosine, rank)."""
+    scored = pairs.select(query_id, *keep, id_col, _pair_cos(vec_col).alias("_cos"))
+    return _topk(
+        scored, k, query_id, [F.col("_cos").desc(), F.col(id_col)],
+        out=[query_id, *keep, id_col, F.round("_cos", 4).alias("cosine"), "rank"],
+    )
+
+
+def _nearest(scored: DataFrame, key: str, cent: str, score: str, carry: list) -> DataFrame:
+    """Nearest-centroid argmax as a map-side max_by hash aggregate (no
+    window sort of the rows x centroids expansion): per ``key``, the
+    ``carry`` columns of the highest-``score`` row, tiebreak min ``cent``
+    (-cent in the key) — the ranked rule the oracles replay."""
+    best = scored.groupBy(key).agg(
+        F.max_by(
+            F.struct(*[F.col(c) for c in carry]), F.struct(F.col(score), -F.col(cent))
+        ).alias("_best")
+    )
+    return best.select(key, *[F.col(f"_best.{c}").alias(c) for c in carry])
+
+
 def brute_force_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -54,26 +150,9 @@ def brute_force_topk(
     queries must be small (broadcast); corpus streams through unshuffled.
     Output: (query_id, vec_id, cosine, rank).
     """
-    # precompute L2 norms per side: cosine inside the pair loop then costs
-    # ONE array aggregate (the dot) instead of three per pair
-    q = queries.select(
-        F.col(id_col).alias(query_id),
-        F.col(vec_col).alias("_qv"),
-        _norm(F.col(vec_col)).alias("_qn"),
-    )
-    c = corpus.select(id_col, vec_col, _norm(F.col(vec_col)).alias("_cn"))
-    joined = c.crossJoin(F.broadcast(q))
-    scored = joined.select(
-        query_id,
-        id_col,
-        (_dot(F.col(vec_col), F.col("_qv")) / (F.col("_cn") * F.col("_qn"))).alias("_cos"),
-    )
-    w = Window.partitionBy(query_id).orderBy(F.col("_cos").desc(), F.col(id_col))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id, id_col, F.round("_cos", 4).alias("cosine"), "rank")
-    )
+    q = _q_side(queries, query_id, id_col, vec_col)
+    pairs = _c_side(corpus, id_col, vec_col).crossJoin(F.broadcast(q))
+    return _cosine_topk(pairs, k, query_id, id_col, vec_col)
 
 
 def hard_negative_topk(
@@ -98,33 +177,17 @@ def hard_negative_topk(
 
     Output: (query_id, query_label, vec_id, label, cosine, rank).
     """
-    q = queries.select(
-        F.col(id_col).alias(query_id),
-        F.col(label_col).alias("query_label"),
-        F.col(vec_col).alias("_qv"),
-        _norm(F.col(vec_col)).alias("_qn"),
-    )
-    c = corpus.select(
-        id_col, label_col, vec_col, _norm(F.col(vec_col)).alias("_cn")
-    )
+    q = _q_side(queries, query_id, id_col, vec_col, F.col(label_col).alias("query_label"))
     scored = (
-        c.crossJoin(F.broadcast(q))
+        _c_side(corpus, id_col, vec_col, label_col)
+        .crossJoin(F.broadcast(q))
         .filter(F.col(label_col) != F.col("query_label"))
         .select(
-            query_id,
-            "query_label",
-            id_col,
-            label_col,
-            F.round(
-                _dot(F.col(vec_col), F.col("_qv")) / (F.col("_cn") * F.col("_qn")), 4
-            ).alias("cosine"),
+            query_id, "query_label", id_col, label_col,
+            F.round(_pair_cos(vec_col), 4).alias("cosine"),
         )
     )
-    w = Window.partitionBy(query_id).orderBy(F.col("cosine").desc(), F.col(id_col))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return _topk(scored, k, query_id, [F.col("cosine").desc(), F.col(id_col)])
 
 
 def knn_label_purity(
@@ -164,28 +227,17 @@ def knn_label_purity(
         ).limit(max_probes)
     else:
         probes = df.filter(F.col(id_col) % sample_mod == 0)
-    q = probes.select(
-        F.col(id_col).alias("_qid"),
-        F.col(label_col).alias("_qlabel"),
-        F.col(vec_col).alias("_qv"),
-        _norm(F.col(vec_col)).alias("_qn"),
-    )
-    c = df.select(id_col, label_col, vec_col, _norm(F.col(vec_col)).alias("_cn"))
+    q = _q_side(probes, "_qid", id_col, vec_col, F.col(label_col).alias("_qlabel"))
     scored = (
-        c.crossJoin(F.broadcast(q))
+        _c_side(df, id_col, vec_col, label_col)
+        .crossJoin(F.broadcast(q))
         .filter(F.col(id_col) != F.col("_qid"))
         .select(
-            "_qid",
-            "_qlabel",
-            id_col,
-            label_col,
-            F.round(
-                _dot(F.col(vec_col), F.col("_qv")) / (F.col("_cn") * F.col("_qn")), 4
-            ).alias("_cos"),
+            "_qid", "_qlabel", id_col, label_col,
+            F.round(_pair_cos(vec_col), 4).alias("_cos"),
         )
     )
-    w = Window.partitionBy("_qid").orderBy(F.col("_cos").desc(), F.col(id_col))
-    nn = scored.withColumn("_rk", F.row_number().over(w)).filter(F.col("_rk") <= k)
+    nn = _topk(scored, k, "_qid", [F.col("_cos").desc(), F.col(id_col)], rank="_rk")
     per_query = nn.groupBy("_qid", "_qlabel").agg(
         (F.sum((F.col(label_col) == F.col("_qlabel")).cast("int")) / F.count("*")).alias(
             "_purity"
@@ -224,17 +276,9 @@ def bucketed_topk(
     recovered at the cost of probing ``1 + probe_bits`` buckets per query
     (the corpus side is untouched, so the index cost is unchanged).
     """
-    c = corpus.select(
-        id_col, vec_col,
-        lsh_bucket(F.col(vec_col)).alias("_bkt"),
-        _norm(F.col(vec_col)).alias("_cn"),
-    )
-    q = queries.select(
-        F.col(id_col).alias(query_id),
-        F.col(vec_col).alias("_qv"),
-        lsh_bucket(F.col(vec_col)).alias("_bkt"),
-        _norm(F.col(vec_col)).alias("_qn"),
-    )
+    bkt = lsh_bucket(F.col(vec_col)).alias("_bkt")
+    c = _c_side(corpus, id_col, vec_col, bkt)
+    q = _q_side(queries, query_id, id_col, vec_col, bkt)
     if probe_bits:
         if probe_bits > len(LSH_DIMS):
             raise ValueError(f"probe_bits must be <= {len(LSH_DIMS)}")
@@ -246,18 +290,7 @@ def bucketed_topk(
             *[F.col("_bkt").bitwiseXOR(F.lit(1 << i)) for i in range(probe_bits)],
         )
         q = q.withColumn("_bkt", F.explode(probes))
-    joined = c.join(F.broadcast(q), "_bkt")
-    scored = joined.select(
-        query_id,
-        id_col,
-        (_dot(F.col(vec_col), F.col("_qv")) / (F.col("_cn") * F.col("_qn"))).alias("_cos"),
-    )
-    w = Window.partitionBy(query_id).orderBy(F.col("_cos").desc(), F.col(id_col))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id, id_col, F.round("_cos", 4).alias("cosine"), "rank")
-    )
+    return _cosine_topk(c.join(F.broadcast(q), "_bkt"), k, query_id, id_col, vec_col)
 
 
 def _ivf_cents(centroids, id_col, vec_col, cent_id):
@@ -270,51 +303,23 @@ def _ivf_cents(centroids, id_col, vec_col, cent_id):
     )
 
 
-def _ivf_assign(df, cents, out_id, keep_n, extras, vec_col, cent_id):
-    """ivf_topk's assignment stage, hoisted verbatim (round 12) so the
-    query-side probe ranking is callable standalone: broadcast centroids,
-    cosine ranking, tiebreak min centroid id; keep_n=1 runs as a map-side
-    max_by hash aggregate, keep_n>1 as the ranked window."""
-    d = df.withColumn("_vn", _norm(F.col(vec_col)))
-    scored = d.crossJoin(F.broadcast(cents)).select(
-        F.col(out_id),
-        *extras,
-        vec_col,
-        "_vn",
+def _ivf_assign(df, cents, key, keep_n, vec, norm, cent_id):
+    """IVF assignment of a cosine-prepped side (`_q_side`/`_c_side`):
+    broadcast centroids, cosine ranking, tiebreak min centroid id; every
+    column of ``df`` rides along. keep_n=1 is the map-side `_nearest`
+    argmax, keep_n>1 the ranked window (the query-side probe set)."""
+    carry = [c for c in df.columns if c != key]
+    scored = df.crossJoin(F.broadcast(cents)).select(
+        key,
+        *carry,
         cent_id,
-        (_dot(F.col(vec_col), F.col("_cv")) / (F.col("_vn") * F.col("_cvn"))).alias("_ccos"),
+        (_dot(F.col(vec), F.col("_cv")) / (F.col(norm) * F.col("_cvn"))).alias("_ccos"),
     )
     if keep_n == 1:
-        # argmax as a hash aggregate (map-side partial combine) instead
-        # of a Window sort: at scale the window shuffles AND sorts the
-        # full (corpus x centroids) expansion; max_by reduces it map-
-        # side to one row per vector. Tiebreak identical to the ranked
-        # path: max cosine, then min centroid id (-cent_id in the key).
-        return (
-            scored.groupBy(out_id)
-            .agg(
-                F.max_by(
-                    F.struct(
-                        F.col(vec_col), F.col("_vn"), F.col(cent_id),
-                        *[F.col(x) for x in extras],
-                    ),
-                    F.struct(F.col("_ccos"), -F.col(cent_id)),
-                ).alias("_best")
-            )
-            .select(
-                out_id,
-                F.col(f"_best.{vec_col}").alias(vec_col),
-                F.col("_best._vn").alias("_vn"),
-                F.col(f"_best.{cent_id}").alias(cent_id),
-                *[F.col(f"_best.{x}").alias(x) for x in extras],
-            )
-        )
-    w = Window.partitionBy(out_id).orderBy(F.col("_ccos").desc(), F.col(cent_id))
-    return (
-        scored.withColumn("_crk", F.row_number().over(w))
-        .filter(F.col("_crk") <= keep_n)
-        .drop("_ccos", "_crk")
-    )
+        return _nearest(scored, key, cent_id, "_ccos", [*carry, cent_id])
+    return _topk(
+        scored, keep_n, key, [F.col("_ccos").desc(), F.col(cent_id)], rank="_crk"
+    ).drop("_ccos", "_crk")
 
 
 def ivf_probed_cells(
@@ -334,8 +339,7 @@ def ivf_probed_cells(
     only (the set is collected at plan time)."""
     cents = _ivf_cents(centroids, id_col, vec_col, cent_id)
     q = _ivf_assign(
-        queries.select(F.col(id_col).alias("_qid"), vec_col),
-        cents, "_qid", nprobe, [], vec_col, cent_id,
+        _q_side(queries, "_qid", id_col, vec_col), cents, "_qid", nprobe, "_qv", "_qn", cent_id
     )
     return q.select(cent_id).distinct()
 
@@ -377,23 +381,16 @@ def ivf_topk(
     if corpus_assigned is not None:
         # persisted-index path: assignments were computed once at build
         # time (examples/ann_index.py); recompute only the norm column
-        c_assigned = corpus_assigned.select(
-            id_col, vec_col, cent_id, *extras
-        ).withColumn("_vn", _norm(F.col(vec_col)))
+        c_assigned = _c_side(corpus_assigned, id_col, vec_col, cent_id, *extras)
     else:
         c_assigned = _ivf_assign(
-            corpus.select(id_col, vec_col, *extras),
-            cents, id_col, 1, extras, vec_col, cent_id,
+            _c_side(corpus, id_col, vec_col, *extras),
+            cents, id_col, 1, vec_col, "_cn", cent_id,
         )
     q_assigned = _ivf_assign(
-        queries.select(F.col(id_col).alias(query_id), vec_col, *extras),
-        cents, query_id, nprobe, extras, vec_col, cent_id,
-    ).select(
-        query_id,
-        F.col(vec_col).alias("_qv"),
-        F.col("_vn").alias("_qn"),
-        cent_id,
-        *[F.col(x).alias("_qlabel") for x in extras],
+        _q_side(queries, query_id, id_col, vec_col,
+                *[F.col(x).alias("query_label") for x in extras]),
+        cents, query_id, nprobe, "_qv", "_qn", cent_id,
     )
 
     # query-probe side = |queries| * nprobe rows — always the small side:
@@ -402,27 +399,9 @@ def ivf_topk(
     # optimizer falls back to a sort-merge join on cent_id).
     joined = c_assigned.join(F.broadcast(q_assigned), cent_id)
     if exclude_label:
-        joined = joined.filter(F.col(exclude_label) != F.col("_qlabel"))
-    out_extras = (
-        [F.col("_qlabel").alias("query_label"), F.col(exclude_label)]
-        if exclude_label
-        else []
-    )
-    scored = joined.select(
-        query_id,
-        *out_extras,
-        id_col,
-        (_dot(F.col(vec_col), F.col("_qv")) / (F.col("_vn") * F.col("_qn"))).alias("_cos"),
-    )
-    w = Window.partitionBy(query_id).orderBy(F.col("_cos").desc(), F.col(id_col))
-    final_cols = [query_id]
-    if exclude_label:
-        final_cols += ["query_label", exclude_label]
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(*final_cols, id_col, F.round("_cos", 4).alias("cosine"), "rank")
-    )
+        joined = joined.filter(F.col(exclude_label) != F.col("query_label"))
+        extras = ["query_label", exclude_label]
+    return _cosine_topk(joined, k, query_id, id_col, vec_col, tuple(extras))
 
 
 def cosine_near_dup_pairs(
@@ -539,11 +518,8 @@ def kmeans_parallel_seeds(
     scored = corpus.crossJoin(F.broadcast(cand)).select(
         id_col, "_cid", cosine(F.col(vec_col), F.col("_cv")).alias("_cos")
     )
-    # nearest-candidate argmax as a map-side max_by (no window sort of the
-    # corpus x candidates expansion); tiebreak = min candidate id
     counts = (
-        scored.groupBy(id_col)
-        .agg(F.max_by(F.col("_cid"), F.struct(F.col("_cos"), -F.col("_cid"))).alias("_cid"))
+        _nearest(scored, id_col, "_cid", "_cos", ["_cid"])
         .groupBy("_cid")
         .agg(F.count("*").alias("_w"))
     )
@@ -629,19 +605,7 @@ def kmeans_fit(
             "cent_id",
             cosine(F.col("_v"), F.col("_cv")).alias("_cos"),
         )
-        # argmax assignment as a map-side max_by: no sort-shuffle of the
-        # (corpus x k) expansion; tiebreak = min cent_id, same as the
-        # ranked form the oracle replays
-        assigned = (
-            scored.groupBy(id_col)
-            .agg(
-                F.max_by(
-                    F.struct(F.col("cent_id"), F.col("_v")),
-                    F.struct(F.col("_cos"), -F.col("cent_id")),
-                ).alias("_best")
-            )
-            .select(F.col("_best.cent_id").alias("cent_id"), F.col("_best._v").alias("_v"))
-        )
+        assigned = _nearest(scored, id_col, "cent_id", "_cos", ["cent_id", "_v"])
         dims = assigned.select("cent_id", F.posexplode("_v").alias("dim", "x"))
         means = dims.groupBy("cent_id", "dim").agg(
             F.round(F.avg("x"), round_dp).alias("m")
@@ -926,19 +890,8 @@ def assign_nearest(
             cents.select("cent_id", F.col(vec_col).cast("array<double>").alias("_cv"))
         )
     ).select(id_col, "_v", "cent_id", cosine(F.col("_v"), F.col("_cv")).alias("_cos"))
-    return (
-        scored.groupBy(id_col)
-        .agg(
-            F.max_by(
-                F.struct(F.col("cent_id"), F.col("_v")),
-                F.struct(F.col("_cos"), -F.col("cent_id")),
-            ).alias("_best")
-        )
-        .select(
-            id_col,
-            F.col("_best._v").alias(vec_col),
-            F.col("_best.cent_id").alias("cent_id"),
-        )
+    return _nearest(scored, id_col, "cent_id", "_cos", ["_v", "cent_id"]).withColumnRenamed(
+        "_v", vec_col
     )
 
 
@@ -1031,8 +984,6 @@ def semdedup(
     # is corpus-LENGTH but narrow (~16 B/row: id, cent_id, kept — no
     # vectors), ~3% of the cache it frees, so the checkpoint-and-release
     # trade is right even at 100 TB.
-    from wallaroo_spark.functions.caching import materialize_release
-
     return materialize_release(out, a)
 
 
@@ -1071,10 +1022,9 @@ def int8_topk_rerank(
         )
         .withColumn("_q8n", _norm(F.col("_q8d")))
     )
-    q = queries.select(
-        F.col(id_col).alias(query_id),
-        F.col(vec_col).cast("array<double>").alias("_qv"),
-    ).withColumn("_qn", _norm(F.col("_qv")))
+    q = _query_vecs(queries, id_col, vec_col, query_id).withColumn(
+        "_qn", _norm(F.col("_qv"))
+    )
     coarse = qz.crossJoin(F.broadcast(q)).select(
         query_id,
         id_col,
@@ -1082,11 +1032,9 @@ def int8_topk_rerank(
             _dot(F.col("_qv"), F.col("_q8d")) / (F.col("_qn") * F.col("_q8n"))
         ).alias("_s8"),
     )
-    wc = Window.partitionBy(query_id).orderBy(F.desc("_s8"), F.col(id_col))
-    cand = (
-        coarse.withColumn("_rn", F.row_number().over(wc))
-        .filter(F.col("_rn") <= coarse_k)
-        .select(query_id, id_col)
+    cand = _topk(
+        coarse, coarse_k, query_id, [F.desc("_s8"), F.col(id_col)], rank="_rn",
+        out=[query_id, id_col],
     )
     exact = corpus.select(
         id_col, F.col(vec_col).cast("array<double>").alias("_v")
@@ -1098,11 +1046,9 @@ def int8_topk_rerank(
             "_cos"
         ),
     )
-    wr = Window.partitionBy(query_id).orderBy(F.desc("_cos"), F.col(id_col))
-    return (
-        scored.withColumn("rank", F.row_number().over(wr))
-        .filter(F.col("rank") <= k)
-        .select(query_id, id_col, F.round("_cos", 4).alias("cosine"), "rank")
+    return _topk(
+        scored, k, query_id, [F.desc("_cos"), F.col(id_col)],
+        out=[query_id, id_col, F.round("_cos", 4).alias("cosine"), "rank"],
     )
 
 
@@ -1466,6 +1412,14 @@ def pq_encode(
     )
 
 
+def _query_vecs(queries: DataFrame, id_col: str, vec_col: str, query_id: str) -> DataFrame:
+    """(query_id, _qv array<double>): the query side of the L2 stages."""
+    return queries.select(
+        F.col(id_col).alias(query_id),
+        F.col(vec_col).cast("array<double>").alias("_qv"),
+    )
+
+
 def _adc_table_agg(k: int):
     """ADC distance-table aggregate: a map keyed by sub*k + cent_id.
 
@@ -1486,12 +1440,52 @@ def _adc_table_agg(k: int):
     ).alias("_tbl")
 
 
-def _adc_fold(m: int, k: int, round_dp: int):
-    """In-row ADC distance: sum_j tbl[j*k + codes[j]] over the keyed map.
+def _adc_tables(
+    qsv: DataFrame, codebook: DataFrame, keys: list, k: int, round_dp: int
+) -> DataFrame:
+    """The ADC query tables: per ``keys`` group (the query, or (query,
+    cell) for residual IVF-PQ), the subvector -> every surviving centroid
+    rounded distance, as one <= m*k keyed map. ``qsv`` is (*keys, sub,
+    _sv); the codebook broadcasts."""
+    cb = codebook.select("sub", "cent_id", F.col("centroid").alias("_cv"))
+    return (
+        qsv.join(F.broadcast(cb), "sub")
+        .select(
+            *keys, "sub", "cent_id",
+            F.round(_sqdist(F.col("_sv"), F.col("_cv")), round_dp).alias("_d"),
+        )
+        .groupBy(*keys)
+        .agg(_adc_table_agg(k))
+    )
+
+
+def _query_tables(queries, codebook, m, sub_dim, k, id_col, vec_col, query_id, round_dp):
+    """Query-keyed ADC tables over raw query subvectors."""
+    qsv = _pq_subvecs(queries, m, sub_dim, id_col, vec_col).withColumnRenamed(
+        id_col, query_id
+    )
+    return _adc_tables(qsv, codebook, [query_id], k, round_dp)
+
+
+def _adc_fold(m: int, k: int, round_dp: int, packed: bool = False):
+    """In-row ADC distance: sum_j tbl[j*k + code_j] over the keyed map,
+    left to right, rounded. Array ``codes`` fold with an aggregate; a
+    packed ``code_word`` (pq_pack_codes) unrolls a static shift+mask per
+    subspace (shiftright needs a literal bit count) — the same
+    left-to-right sum, so distances are bit-identical.
 
     codes always reference centroids that exist in the codebook (pq_encode
     argmins over the same codebook), so the lookup never misses.
     """
+    if packed:
+        bits = max(1, (k - 1).bit_length())
+        mask = (1 << bits) - 1
+        dist = None
+        for j in range(m):
+            code_j = F.shiftright(F.col("code_word"), j * bits).bitwiseAND(F.lit(mask))
+            t = F.element_at(F.col("_tbl"), (F.lit(j * k) + code_j).cast("int"))
+            dist = t if dist is None else dist + t
+        return F.round(dist, round_dp).alias("approx_dist")
     return F.round(
         F.aggregate(
             F.sequence(F.lit(0), F.lit(m - 1)),
@@ -1526,36 +1520,40 @@ def pq_topk(
     m-element fold against the broadcast table, no shuffle of the corpus,
     no decode back to floats. Per-query cost per corpus row: m adds (vs d
     multiply-adds for brute force). Ranking is on the rounded distance
-    with id tiebreak (the engine-portable cut). Output: (query_id, vec_id,
-    approx_dist, rank)."""
-    qsv = _pq_subvecs(queries, m, sub_dim, id_col, vec_col).withColumnRenamed(
-        id_col, query_id
-    )
-    cb = codebook.select("sub", "cent_id", F.col("centroid").alias("_cv"))
-    tables = (
-        qsv.join(F.broadcast(cb), "sub")
-        .select(
-            query_id,
-            "sub",
-            "cent_id",
-            F.round(_sqdist(F.col("_sv"), F.col("_cv")), round_dp).alias("_d"),
-        )
-        .groupBy(query_id)
-        .agg(
-            _adc_table_agg(k)
-        )
+    with id tiebreak (the engine-portable cut). ``codes_df`` carries
+    array ``codes`` (pq_encode) or a packed ``code_word``
+    (pq_pack_codes); the distances are bit-identical. Output: (query_id,
+    vec_id, approx_dist, rank)."""
+    tables = _query_tables(
+        queries, codebook, m, sub_dim, k, id_col, vec_col, query_id, round_dp
     )
     scored = codes_df.crossJoin(F.broadcast(tables)).select(
         query_id,
         id_col,
-        _adc_fold(m, k, round_dp),
+        _adc_fold(m, k, round_dp, "code_word" in codes_df.columns),
     )
-    w = Window.partitionBy(query_id).orderBy(F.col("approx_dist"), F.col(id_col))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= topk)
-        .select(query_id, id_col, "approx_dist", "rank")
+    return topk_cut(scored, topk, query_id, id_col)
+
+
+def _l2_rerank(corpus, queries, cands, topk, id_col, vec_col, query_id, round_dp):
+    """Exact-L2 rerank of an ADC shortlist: only the (query_id, id)
+    candidates join back to their float vectors (the candidate set
+    broadcasts into the corpus scan), re-scored by the rounded exact
+    distance and cut with id tiebreak. Output: (query_id, id, l2_dist,
+    rank)."""
+    q = _query_vecs(queries, id_col, vec_col, query_id)
+    exact = (
+        corpus.join(F.broadcast(cands), id_col)
+        .join(F.broadcast(q), query_id)
+        .select(
+            query_id,
+            id_col,
+            F.round(
+                _sqdist(F.col(vec_col).cast("array<double>"), F.col("_qv")), round_dp
+            ).alias("l2_dist"),
+        )
     )
+    return topk_cut(exact, topk, query_id, id_col, "l2_dist")
 
 
 def pq_topk_rerank(
@@ -1584,27 +1582,7 @@ def pq_topk_rerank(
         codes_df, codebook, queries, shortlist, m, sub_dim, k,
         id_col, vec_col, query_id,
     ).select(query_id, id_col)
-    q = queries.select(
-        F.col(id_col).alias(query_id),
-        F.col(vec_col).cast("array<double>").alias("_qv"),
-    )
-    exact = (
-        corpus.join(F.broadcast(cands), id_col)
-        .join(F.broadcast(q), query_id)
-        .select(
-            query_id,
-            id_col,
-            F.round(
-                _sqdist(F.col(vec_col).cast("array<double>"), F.col("_qv")), 6
-            ).alias("l2_dist"),
-        )
-    )
-    w = Window.partitionBy(query_id).orderBy(F.col("l2_dist"), F.col(id_col))
-    return (
-        exact.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= topk)
-        .select(query_id, id_col, "l2_dist", "rank")
-    )
+    return _l2_rerank(corpus, queries, cands, topk, id_col, vec_col, query_id, 6)
 
 
 # FAISS's clustering guideline: warn under ~39 training points per
@@ -1623,6 +1601,107 @@ def _coarse_sample_rows(
     if coarse_sample == "auto":
         return IVF_TRAIN_POINTS_PER_CELL * int(n_cells) if auto_geo else None
     return coarse_sample
+
+
+def _coarse_cells(df, coarse, d, id_col, vec_col, round_dp):
+    """(id, _cell): coarse-cell assignment = a one-subspace pq_encode."""
+    return pq_encode(
+        df, coarse, m=1, sub_dim=d, id_col=id_col, vec_col=vec_col, round_dp=round_dp
+    ).select(id_col, F.element_at("codes", 1).alias("_cell"))
+
+
+def _ivfpq_index(
+    train_df, corpus, topk, n_cells, dial, dial_key, coarse_sample,
+    m, sub_dim, k, id_col, vec_col, round_dp,
+    coarse=None, fine=None, cells=None, codes=None, plain=True,
+):
+    """IVF-PQ index setup shared by the ivfpq_* searches. Resolves the
+    geometry (n_cells=None / dial=None take `ivf_auto_size` from one
+    corpus count; ``dial_key`` names the probe dial), trains whatever
+    codebooks were not passed in and encodes corpus cells and codes.
+    ``plain=False`` (residual IVF-PQ) stops after the coarse half: its
+    fine codebook trains on residuals. Returns (dial, coarse, fine, cells,
+    codes)."""
+    # sampling keys off the COARSE dial alone: an explicit n_cells with a
+    # defaulted probe dial is still a hand-pinned quantizer geometry and
+    # keeps full-corpus training (matches build_pq_index's n_cells-is-None
+    # rule)
+    auto_geo = n_cells is None
+    if n_cells is None or dial is None:
+        auto = ivf_auto_size(corpus.count(), topk)
+        n_cells = n_cells if n_cells is not None else auto["n_cells"]
+        dial = dial if dial is not None else auto[dial_key]
+    d = m * sub_dim
+
+    def train_coarse():
+        return pq_train(
+            train_df, m=1, sub_dim=d, k=n_cells, iters=2,
+            id_col=id_col, vec_col=vec_col, round_dp=round_dp,
+            sample=_coarse_sample_rows(coarse_sample, auto_geo, n_cells),
+        )
+
+    def train_fine():
+        return pq_train(
+            train_df, m=m, sub_dim=sub_dim, k=k, iters=2,
+            id_col=id_col, vec_col=vec_col, round_dp=round_dp,
+        )
+
+    if plain and coarse is None and fine is None:
+        # the two Lloyd chains are INDEPENDENT (the fine codebook trains on
+        # raw subvectors, not residuals): build them overlapped (guide §2.6)
+        # — each is a string of tiny eager jobs (localCheckpoint barriers)
+        # that leaves the cluster idle; results identical by construction,
+        # only the driver-side sequencing of the chains' jobs changes
+        coarse, fine = overlap_build(train_coarse, train_fine)
+    if coarse is None:
+        coarse = train_coarse()
+    if plain and fine is None:
+        fine = train_fine()
+    if cells is None:
+        cells = _coarse_cells(corpus, coarse, d, id_col, vec_col, round_dp)
+    if plain and codes is None:
+        codes = pq_encode(corpus, fine, m=m, sub_dim=sub_dim, id_col=id_col,
+                          vec_col=vec_col, round_dp=round_dp)
+    return dial, coarse, fine, cells, codes
+
+
+def _cell_dists(queries, coarse, id_col, vec_col, query_id, round_dp, keep=()):
+    """(query_id, _cell, *keep, _pd): every query against every coarse
+    cell (Q x n_cells — tiny, the codebook broadcasts), rounded L2."""
+    ccb = coarse.select(F.col("cent_id").alias("_cell"), F.col("centroid").alias("_cv"))
+    return _query_vecs(queries, id_col, vec_col, query_id).crossJoin(F.broadcast(ccb)).select(
+        query_id, "_cell", *keep,
+        F.round(_sqdist(F.col("_qv"), F.col("_cv")), round_dp).alias("_pd"),
+    )
+
+
+def _probe_window(queries, coarse, nprobe, id_col, vec_col, query_id, round_dp, keep=()):
+    """The fixed-``nprobe`` probe: each query's nprobe nearest coarse
+    cells (rounded distance, cell tiebreak) as (query_id, _cell, *keep)."""
+    return _topk(
+        _cell_dists(queries, coarse, id_col, vec_col, query_id, round_dp, keep),
+        nprobe, query_id, [F.col("_pd"), F.col("_cell")], rank="_pr",
+        out=[query_id, "_cell", *keep],
+    )
+
+
+def _ivfpq_scan(cells, codes, probes, tables, keys, topk, m, k, id_col, query_id, round_dp):
+    """The cell-candidate ADC scan: corpus rows of the probed cells join
+    their codes and their ADC table (joined on ``keys``: the query, or
+    (query, cell)), fold and cut."""
+    cands = cells.join(
+        F.broadcast(probes.select(query_id, "_cell")), "_cell"
+    ).select(*keys, id_col)
+    scored = (
+        cands.join(codes, id_col)
+        .join(F.broadcast(tables), keys)
+        .select(
+            query_id,
+            id_col,
+            _adc_fold(m, k, round_dp),
+        )
+    )
+    return topk_cut(scored, topk, query_id, id_col)
 
 
 def ivfpq_topk(
@@ -1684,102 +1763,16 @@ def ivfpq_topk(
     test geometry, unchanged). Pass an int to pin the sample size, or
     None to force full-corpus training at auto geometry.
     """
-    # sampling keys off the COARSE dial alone: an explicit n_cells with a
-    # defaulted nprobe is still a hand-pinned quantizer geometry and keeps
-    # full-corpus training (matches build_pq_index's n_cells-is-None rule)
-    auto_geo = n_cells is None
-    if n_cells is None or nprobe is None:
-        auto = ivf_auto_size(corpus.count(), topk)
-        n_cells = n_cells if n_cells is not None else auto["n_cells"]
-        nprobe = nprobe if nprobe is not None else auto["nprobe"]
-    d = m * sub_dim
-    if coarse is None and fine is None:
-        # the two Lloyd chains are INDEPENDENT (the fine codebook trains on
-        # raw subvectors, not residuals): build them overlapped (guide §2.6)
-        # — each is a string of tiny eager jobs (localCheckpoint barriers)
-        # that leaves the cluster idle; results identical by construction,
-        # only the driver-side sequencing of the chains' jobs changes
-        from wallaroo_spark.functions.overlap import overlap_build
-
-        coarse, fine = overlap_build(
-            lambda: pq_train(
-                train_df, m=1, sub_dim=d, k=n_cells, iters=2,
-                id_col=id_col, vec_col=vec_col, round_dp=round_dp,
-                sample=_coarse_sample_rows(coarse_sample, auto_geo, n_cells),
-            ),
-            lambda: pq_train(
-                train_df, m=m, sub_dim=sub_dim, k=k, iters=2,
-                id_col=id_col, vec_col=vec_col, round_dp=round_dp,
-            ),
-        )
-    if coarse is None:
-        coarse = pq_train(
-            train_df, m=1, sub_dim=d, k=n_cells, iters=2,
-            id_col=id_col, vec_col=vec_col, round_dp=round_dp,
-            sample=_coarse_sample_rows(coarse_sample, auto_geo, n_cells),
-        )
-    if fine is None:
-        fine = pq_train(
-            train_df, m=m, sub_dim=sub_dim, k=k, iters=2,
-            id_col=id_col, vec_col=vec_col, round_dp=round_dp,
-        )
-    if cells is None:
-        cells = pq_encode(corpus, coarse, m=1, sub_dim=d, id_col=id_col,
-                          vec_col=vec_col, round_dp=round_dp).select(
-            id_col, F.element_at("codes", 1).alias("_cell")
-        )
-    if codes is None:
-        codes = pq_encode(corpus, fine, m=m, sub_dim=sub_dim, id_col=id_col,
-                          vec_col=vec_col, round_dp=round_dp)
-
-    # query -> nprobe nearest coarse cells (tiny: Q x n_cells)
-    qv = queries.select(
-        F.col(id_col).alias(query_id),
-        F.col(vec_col).cast("array<double>").alias("_qv"),
+    nprobe, coarse, fine, cells, codes = _ivfpq_index(
+        train_df, corpus, topk, n_cells, nprobe, "nprobe", coarse_sample,
+        m, sub_dim, k, id_col, vec_col, round_dp, coarse, fine, cells, codes,
     )
-    ccb = coarse.select(F.col("cent_id").alias("_cell"), F.col("centroid").alias("_cv"))
-    probe_w = Window.partitionBy(query_id).orderBy(F.col("_pd"), F.col("_cell"))
-    probes = (
-        qv.crossJoin(F.broadcast(ccb))
-        .select(
-            query_id, "_cell",
-            F.round(_sqdist(F.col("_qv"), F.col("_cv")), round_dp).alias("_pd"),
-        )
-        .withColumn("_pr", F.row_number().over(probe_w))
-        .filter(F.col("_pr") <= nprobe)
-        .select(query_id, "_cell")
+    probes = _probe_window(queries, coarse, nprobe, id_col, vec_col, query_id, round_dp)
+    tables = _query_tables(
+        queries, fine, m, sub_dim, k, id_col, vec_col, query_id, round_dp
     )
-
-    # per-query flat ADC table over the fine codebook (as in pq_topk)
-    qsv = _pq_subvecs(queries, m, sub_dim, id_col, vec_col).withColumnRenamed(
-        id_col, query_id
-    )
-    fcb = fine.select("sub", "cent_id", F.col("centroid").alias("_cv"))
-    tables = (
-        qsv.join(F.broadcast(fcb), "sub")
-        .select(
-            query_id, "sub", "cent_id",
-            F.round(_sqdist(F.col("_sv"), F.col("_cv")), round_dp).alias("_d"),
-        )
-        .groupBy(query_id)
-        .agg(_adc_table_agg(k))
-    )
-
-    cands = cells.join(F.broadcast(probes), "_cell").select(query_id, id_col)
-    scored = (
-        cands.join(codes, id_col)
-        .join(F.broadcast(tables), query_id)
-        .select(
-            query_id,
-            id_col,
-            _adc_fold(m, k, round_dp),
-        )
-    )
-    w = Window.partitionBy(query_id).orderBy(F.col("approx_dist"), F.col(id_col))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= topk)
-        .select(query_id, id_col, "approx_dist", "rank")
+    return _ivfpq_scan(
+        cells, codes, probes, tables, [query_id], topk, m, k, id_col, query_id, round_dp
     )
 
 
@@ -1824,28 +1817,7 @@ def ivfpq_topk_rerank(
         coarse=coarse, fine=fine, cells=cells, codes=codes,
         coarse_sample=coarse_sample,
     ).select(query_id, id_col)
-    q = queries.select(
-        F.col(id_col).alias(query_id),
-        F.col(vec_col).cast("array<double>").alias("_qv"),
-    )
-    exact = (
-        corpus.join(F.broadcast(cands), id_col)
-        .join(F.broadcast(q), query_id)
-        .select(
-            query_id,
-            id_col,
-            F.round(
-                _sqdist(F.col(vec_col).cast("array<double>"), F.col("_qv")),
-                round_dp,
-            ).alias("l2_dist"),
-        )
-    )
-    w = Window.partitionBy(query_id).orderBy(F.col("l2_dist"), F.col(id_col))
-    return (
-        exact.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= topk)
-        .select(query_id, id_col, "l2_dist", "rank")
-    )
+    return _l2_rerank(corpus, queries, cands, topk, id_col, vec_col, query_id, round_dp)
 
 
 def ivfpq_residual_topk(
@@ -1888,14 +1860,11 @@ def ivfpq_residual_topk(
     variant shares with the plain/adaptive compositions — the fine
     codebook cannot be shared, it trains on residuals).
     """
-    # sampling keys off the COARSE dial alone: an explicit n_cells with a
-    # defaulted nprobe is still a hand-pinned quantizer geometry and keeps
-    # full-corpus training (matches build_pq_index's n_cells-is-None rule)
-    auto_geo = n_cells is None
-    if n_cells is None or nprobe is None:
-        auto = ivf_auto_size(corpus.count(), topk)
-        n_cells = n_cells if n_cells is not None else auto["n_cells"]
-        nprobe = nprobe if nprobe is not None else auto["nprobe"]
+    nprobe, coarse, _, corpus_cells, _ = _ivfpq_index(
+        train_df, corpus, topk, n_cells, nprobe, "nprobe", coarse_sample,
+        m, sub_dim, k, id_col, vec_col, round_dp, coarse, cells=corpus_cells,
+        plain=False,
+    )
     d = m * sub_dim
 
     def _res(v, c):
@@ -1903,35 +1872,23 @@ def ivfpq_residual_topk(
             v.cast("array<double>"), c, lambda x, y: x - y
         )
 
-    if coarse is None:
-        coarse = pq_train(
-            train_df, m=1, sub_dim=d, k=n_cells, iters=2,
-            id_col=id_col, vec_col=vec_col, round_dp=round_dp,
-            sample=_coarse_sample_rows(coarse_sample, auto_geo, n_cells),
-        )
     ccb = coarse.select(
-        F.col("cent_id").alias("_cell"), F.col("centroid").alias("_ccv")
+        F.col("cent_id").alias("_cell"), F.col("centroid").alias("_cv")
     )
 
-    def cells_of(df, pre=None):
-        if pre is not None:
-            return pre
-        return pq_encode(
-            df, coarse, m=1, sub_dim=d, id_col=id_col, vec_col=vec_col,
-            round_dp=round_dp,
-        ).select(id_col, F.element_at("codes", 1).alias("_cell"))
-
-    def residuals_of(df, pre=None):
+    def residuals_of(df, cells):
         return (
-            df.join(cells_of(df, pre), id_col)
+            df.join(cells, id_col)
             .join(F.broadcast(ccb), "_cell")
             .select(
                 id_col, "_cell",
-                _res(F.col(vec_col), F.col("_ccv")).alias("_rv"),
+                _res(F.col(vec_col), F.col("_cv")).alias("_rv"),
             )
         )
 
-    tres = residuals_of(train_df)
+    tres = residuals_of(
+        train_df, _coarse_cells(train_df, coarse, d, id_col, vec_col, round_dp)
+    )
     # persist: the corpus residuals feed BOTH the fine encode and the cell
     # list, and each re-read replays the coarse in-row encode + residual
     # subtraction over the whole corpus (the r16 plan audit counted 11
@@ -1944,8 +1901,6 @@ def ivfpq_residual_topk(
     # run lazily inside the final search job, strictly AFTER fine training.
     # Overlap the two: fine's Lloyd barriers are tiny eager jobs that leave
     # the cluster idle while the corpus-sized cres pass fills the cache.
-    from wallaroo_spark.functions.overlap import overlap_build
-
     fine, _ = overlap_build(
         lambda: pq_train(
             tres, m=m, sub_dim=sub_dim, k=k, iters=2,
@@ -1957,28 +1912,14 @@ def ivfpq_residual_topk(
         cres, fine, m=m, sub_dim=sub_dim, id_col=id_col, vec_col="_rv",
         round_dp=round_dp,
     )
-    cells = cres.select(id_col, "_cell")
 
-    qv = queries.select(
-        F.col(id_col).alias(query_id),
-        F.col(vec_col).cast("array<double>").alias("_qv"),
+    probes = _probe_window(
+        queries, coarse, nprobe, id_col, vec_col, query_id, round_dp, keep=["_cv"]
     )
-    probe_w = Window.partitionBy(query_id).orderBy(F.col("_pd"), F.col("_cell"))
-    probes = (
-        qv.crossJoin(F.broadcast(ccb))
-        .select(
-            query_id, "_cell", "_ccv",
-            F.round(_sqdist(F.col("_qv"), F.col("_ccv")), round_dp).alias("_pd"),
-        )
-        .withColumn("_pr", F.row_number().over(probe_w))
-        .filter(F.col("_pr") <= nprobe)
-        .select(query_id, "_cell", "_ccv")
+    # per-(query, probed cell) residual -> ADC table over the fine codebook
+    qres = probes.join(_query_vecs(queries, id_col, vec_col, query_id), query_id).select(
+        query_id, "_cell", _res(F.col("_qv"), F.col("_cv")).alias("_rv")
     )
-    # per-(query, probed cell) residual -> flat ADC table over fine codebook
-    qres = probes.join(qv, query_id).select(
-        query_id, "_cell", _res(F.col("_qv"), F.col("_ccv")).alias("_rv")
-    )
-    fcb = fine.select("sub", "cent_id", F.col("centroid").alias("_fcv"))
     qsub = qres.select(
         query_id, "_cell",
         F.posexplode(
@@ -1986,37 +1927,14 @@ def ivfpq_residual_topk(
                       for j in range(m)])
         ).alias("sub", "_sv"),
     )
-    tables = (
-        qsub.join(F.broadcast(fcb), "sub")
-        .select(
-            query_id, "_cell", "sub", "cent_id",
-            F.round(_sqdist(F.col("_sv"), F.col("_fcv")), round_dp).alias("_d"),
-        )
-        .groupBy(query_id, "_cell")
-        .agg(_adc_table_agg(k))
-    )
-    cands = cells.join(
-        F.broadcast(probes.select(query_id, "_cell")), "_cell"
-    ).select(query_id, "_cell", id_col)
-    scored = (
-        cands.join(codes, id_col)
-        .join(F.broadcast(tables), [query_id, "_cell"])
-        .select(
-            query_id,
-            id_col,
-            _adc_fold(m, k, round_dp),
-        )
-    )
-    w = Window.partitionBy(query_id).orderBy(F.col("approx_dist"), F.col(id_col))
-    out = (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= topk)
-        .select(query_id, id_col, "approx_dist", "rank")
+    keys = [query_id, "_cell"]
+    out = _ivfpq_scan(
+        cres.select(id_col, "_cell"), codes, probes,
+        _adc_tables(qsub, fine, keys, k, round_dp), keys,
+        topk, m, k, id_col, query_id, round_dp,
     )
     # Q*topk rows — materialize and release the corpus-sized residual cache
     # (VERDICT r16 #7: cres outlived the query with no release hook)
-    from wallaroo_spark.functions.caching import materialize_release
-
     return materialize_release(out, cres)
 
 
@@ -2060,61 +1978,17 @@ def ivfpq_adaptive_topk(
     ``coarse``/``fine``/``cells``/``codes`` accept precomputed index
     artifacts (see ivfpq_topk) for the shared-training audit path.
     """
-    # as in ivfpq_topk: only an auto n_cells makes the TRAINING sampled
-    auto_geo = n_cells is None
-    if n_cells is None or candidate_budget is None:
-        auto = ivf_auto_size(corpus.count(), topk)
-        n_cells = n_cells if n_cells is not None else auto["n_cells"]
-        candidate_budget = (
-            candidate_budget if candidate_budget is not None
-            else auto["candidate_budget"]
-        )
-    d = m * sub_dim
-    if coarse is None and fine is None:
-        # independent Lloyd chains — overlapped, as in ivfpq_topk (§2.6);
-        # the fine build is hoisted from below, which changes nothing: it
-        # has no dependency on the probe cut computed in between
-        from wallaroo_spark.functions.overlap import overlap_build
-
-        coarse, fine = overlap_build(
-            lambda: pq_train(
-                train_df, m=1, sub_dim=d, k=n_cells, iters=2,
-                id_col=id_col, vec_col=vec_col, round_dp=round_dp,
-                sample=_coarse_sample_rows(coarse_sample, auto_geo, n_cells),
-            ),
-            lambda: pq_train(
-                train_df, m=m, sub_dim=sub_dim, k=k, iters=2,
-                id_col=id_col, vec_col=vec_col, round_dp=round_dp,
-            ),
-        )
-    if coarse is None:
-        coarse = pq_train(
-            train_df, m=1, sub_dim=d, k=n_cells, iters=2,
-            id_col=id_col, vec_col=vec_col, round_dp=round_dp,
-            sample=_coarse_sample_rows(coarse_sample, auto_geo, n_cells),
-        )
-    if cells is None:
-        cells = pq_encode(corpus, coarse, m=1, sub_dim=d, id_col=id_col,
-                          vec_col=vec_col, round_dp=round_dp).select(
-            id_col, F.element_at("codes", 1).alias("_cell")
-        )
-    sizes = cells.groupBy("_cell").agg(F.count("*").alias("_n"))
-
-    qv = queries.select(
-        F.col(id_col).alias(query_id),
-        F.col(vec_col).cast("array<double>").alias("_qv"),
+    candidate_budget, coarse, fine, cells, codes = _ivfpq_index(
+        train_df, corpus, topk, n_cells, candidate_budget, "candidate_budget",
+        coarse_sample, m, sub_dim, k, id_col, vec_col, round_dp,
+        coarse, fine, cells, codes,
     )
-    ccb = coarse.select(F.col("cent_id").alias("_cell"), F.col("centroid").alias("_cv"))
+    sizes = cells.groupBy("_cell").agg(F.count("*").alias("_n"))
     ranked = (
-        qv.crossJoin(F.broadcast(ccb))
-        .select(
-            query_id, "_cell",
-            F.round(_sqdist(F.col("_qv"), F.col("_cv")), round_dp).alias("_pd"),
-        )
+        _cell_dists(queries, coarse, id_col, vec_col, query_id, round_dp)
         .join(F.broadcast(sizes), "_cell", "left")
         .na.fill({"_n": 0})
     )
-    w_rank = Window.partitionBy(query_id).orderBy(F.col("_pd"), F.col("_cell"))
     w_cum = (
         Window.partitionBy(query_id)
         .orderBy(F.col("_pd"), F.col("_cell"))
@@ -2125,43 +1999,11 @@ def ivfpq_adaptive_topk(
         .filter(F.col("_before") < candidate_budget)
         .select(query_id, "_cell")
     )
-
-    if fine is None:
-        fine = pq_train(
-            train_df, m=m, sub_dim=sub_dim, k=k, iters=2,
-            id_col=id_col, vec_col=vec_col, round_dp=round_dp,
-        )
-    if codes is None:
-        codes = pq_encode(corpus, fine, m=m, sub_dim=sub_dim, id_col=id_col,
-                          vec_col=vec_col, round_dp=round_dp)
-    qsv = _pq_subvecs(queries, m, sub_dim, id_col, vec_col).withColumnRenamed(
-        id_col, query_id
+    tables = _query_tables(
+        queries, fine, m, sub_dim, k, id_col, vec_col, query_id, round_dp
     )
-    fcb = fine.select("sub", "cent_id", F.col("centroid").alias("_cv"))
-    tables = (
-        qsv.join(F.broadcast(fcb), "sub")
-        .select(
-            query_id, "sub", "cent_id",
-            F.round(_sqdist(F.col("_sv"), F.col("_cv")), round_dp).alias("_d"),
-        )
-        .groupBy(query_id)
-        .agg(_adc_table_agg(k))
-    )
-    cands = cells.join(F.broadcast(probes), "_cell").select(query_id, id_col)
-    scored = (
-        cands.join(codes, id_col)
-        .join(F.broadcast(tables), query_id)
-        .select(
-            query_id,
-            id_col,
-            _adc_fold(m, k, round_dp),
-        )
-    )
-    w = Window.partitionBy(query_id).orderBy(F.col("approx_dist"), F.col(id_col))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= topk)
-        .select(query_id, id_col, "approx_dist", "rank")
+    return _ivfpq_scan(
+        cells, codes, probes, tables, [query_id], topk, m, k, id_col, query_id, round_dp
     )
 
 
@@ -2916,13 +2758,9 @@ def ivfpq_probe_cells_join(
     # nulls LAST to match array_sort's struct ordering in the literal
     # path (a null/short vector yields null distances; asc default would
     # put them FIRST and select different cells)
-    w = Window.partitionBy(query_id).orderBy(
-        F.col("_d").asc_nulls_last(), F.col(cell_col)
-    )
-    return (
-        scored.withColumn("_rk", F.row_number().over(w))
-        .filter(F.col("_rk") <= nprobe)
-        .select(query_id, cell_col)
+    return _topk(
+        scored, nprobe, query_id, [F.col("_d").asc_nulls_last(), F.col(cell_col)],
+        rank="_rk", out=[query_id, cell_col],
     )
 
 
@@ -3047,41 +2885,8 @@ def ivfpq_probe(
             F.map_from_entries(F.array(*entries)).alias("_tbl"),
             F.explode(F.transform(probes, lambda s: s["cell"])).alias(cell_col),
         )
-    joined = probed.join(codes_with_cells, cell_col)
-    if "code_word" in codes_with_cells.columns:
-        # packed index (pq_pack_codes): unpack per subspace with a static
-        # shift+mask — same left-to-right fold, bit-identical distances
-        bits = max(1, (k - 1).bit_length())
-        mask = (1 << bits) - 1
-        dist = None
-        for j in range(m):
-            code_j = F.shiftright(F.col("code_word"), j * bits).bitwiseAND(
-                F.lit(mask)
-            )
-            t = F.element_at(F.col("_tbl"), (F.lit(j * k) + code_j).cast("int"))
-            dist = t if dist is None else dist + t
-        return joined.select(
-            query_id, id_col, F.round(dist, round_dp).alias("approx_dist")
-        )
-    return joined.select(query_id, id_col, _adc_fold(m, k, round_dp))
-
-
-def topk_cut(
-    scored: DataFrame,
-    topk: int,
-    query_id: str = "query_id",
-    id_col: str = "vec_id",
-    dist_col: str = "approx_dist",
-) -> DataFrame:
-    """The per-query rank cut shared by every ANN search: rounded
-    distance, id tiebreak. On a stream, apply per micro-batch inside
-    foreachBatch (a query's candidates all arrive in its batch, so the
-    batch-local cut IS the global one)."""
-    w = Window.partitionBy(query_id).orderBy(F.col(dist_col), F.col(id_col))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= topk)
-        .select(query_id, id_col, dist_col, "rank")
+    return probed.join(codes_with_cells, cell_col).select(
+        query_id, id_col, _adc_fold(m, k, round_dp, "code_word" in codes_with_cells.columns)
     )
 
 
@@ -3137,41 +2942,9 @@ def pq_topk_packed(
     deployment stores and scans: the codes column is a single
     fixed-width integer (dictionary/bit-packed by parquet), the
     distance fold is m shifts + m map lookups per row."""
-    bits = max(1, (k - 1).bit_length())
-    mask = (1 << bits) - 1
-    qsv = _pq_subvecs(queries, m, sub_dim, id_col, vec_col).withColumnRenamed(
-        id_col, query_id
-    )
-    cb = codebook.select("sub", "cent_id", F.col("centroid").alias("_cv"))
-    tables = (
-        qsv.join(F.broadcast(cb), "sub")
-        .select(
-            query_id,
-            "sub",
-            "cent_id",
-            F.round(_sqdist(F.col("_sv"), F.col("_cv")), round_dp).alias("_d"),
-        )
-        .groupBy(query_id)
-        .agg(_adc_table_agg(k))
-    )
-    # static unroll (shiftright needs a literal bit count); the sum runs
-    # left-to-right exactly like _adc_fold's aggregate, so distances are
-    # bit-identical to the array-codes path
-    dist = None
-    for j in range(m):
-        code_j = F.shiftright(F.col("code_word"), j * bits).bitwiseAND(F.lit(mask))
-        t = F.element_at(F.col("_tbl"), (F.lit(j * k) + code_j).cast("int"))
-        dist = t if dist is None else dist + t
-    scored = packed_df.crossJoin(F.broadcast(tables)).select(
-        query_id,
-        id_col,
-        F.round(dist, round_dp).alias("approx_dist"),
-    )
-    w = Window.partitionBy(query_id).orderBy(F.col("approx_dist"), F.col(id_col))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= topk)
-        .select(query_id, id_col, "approx_dist", "rank")
+    return pq_topk(
+        packed_df, codebook, queries, topk, m, sub_dim, k,
+        id_col, vec_col, query_id, round_dp,
     )
 
 

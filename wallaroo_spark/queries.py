@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from wallaroo_spark.functions import epoch_seconds
+from wallaroo_spark.functions.overlap import overlap_build
 from wallaroo_spark.operators import asof, compute, relational, windows
 from wallaroo_spark.sources import read_table
 
@@ -6176,16 +6177,6 @@ def _opq_perm_e_sql(
     """
 
 
-def _overlap(*thunks):
-    """Run independent ARTIFACT-BUILD thunks concurrently from driver
-    threads — see functions.overlap.overlap_build (guide §2.6). Results
-    are identical by construction to the sequential build; only the
-    driver-side sequencing of the chains' tiny jobs changes."""
-    from wallaroo_spark.functions.overlap import overlap_build
-
-    return overlap_build(*thunks)
-
-
 def _ann_exact_truth(emb: DataFrame, topk: int) -> DataFrame:
     """Exact L2 top-k ground truth shared by ALL recall audits
     (ann_recall_audit / opq_recall_audit / opq_rotation_audit /
@@ -6315,7 +6306,7 @@ def ann_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # localCheckpoint pins each so no arm re-runs a Lloyd chain.
     #
     # r16: the four artifact chains below are mutually independent, so
-    # they build OVERLAPPED (_overlap, guide §2.6) instead of serially —
+    # they build OVERLAPPED (overlap_build, guide §2.6) instead of serially —
     # each chain is a string of tiny jobs that left the cluster idle;
     # artifacts and results are identical, only the driver-side
     # sequencing changed (profiled 163 jobs/run, build:exec ≈ 6:1).
@@ -6349,7 +6340,7 @@ def ann_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # consumer anyway — pre-sharing only added eager-checkpoint barriers
     # (same-host A/B: 28.2 s without vs 29.8 s with). Left unshared.
     #
-    # r16 second pass: the two-group _overlap left a BARRIER between the
+    # r16 second pass: the two-group overlap_build left a BARRIER between the
     # artifact chains and the dependent residual/adaptive/residual_opq
     # constructions — each of which needs only SOME group-1 artifacts
     # (residual: coarse; adaptive: coarse+fine; residual_opq: perm), so a
@@ -6499,7 +6490,7 @@ def opq_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # from several branches (seed scan, subvector persist, encode, query
     # side), and the transform lineage would re-run per branch.
     # r16: the three transform+PQ arms and the exact truth are mutually
-    # independent chains — built OVERLAPPED (_overlap, guide §2.6; the
+    # independent chains — built OVERLAPPED (overlap_build, guide §2.6; the
     # serial build profiled 21-31 s against a 3 s final exec). Same
     # artifacts and results, the tiny Lloyd/encode jobs just share the
     # idle cores.
@@ -6516,7 +6507,7 @@ def opq_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).localCheckpoint(eager=True)
         return pq_arm(rr)
 
-    truth, plain_arm, perm_arm, rr_arm = _overlap(
+    truth, plain_arm, perm_arm, rr_arm = overlap_build(
         lambda: _ann_exact_truth(emb, topk),
         lambda: pq_arm(emb),
         _perm_arm,
@@ -7107,7 +7098,7 @@ def opq_rotation_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     # r16: truth and the four arms are independent chains given the
-    # rotation fits — overlapped (_overlap, guide §2.6; serial build
+    # rotation fits — overlapped (overlap_build, guide §2.6; serial build
     # profiled 17-23 s vs 1.8 s exec). The parametric fit gates both
     # rotation arms (rot_np refines FROM rot), so the rot chain computes
     # it once, then its two arms overlap as a nested pair. Artifacts and
@@ -7125,14 +7116,14 @@ def opq_rotation_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             )
 
-        return _overlap(
+        return overlap_build(
             lambda: pq_arm(
                 similarity.apply_rotation(emb, rot).localCheckpoint(eager=True)
             ),
             _rot_np_arm,
         )
 
-    truth, plain_arm, perm_arm, (rot_arm, rot_np_arm) = _overlap(
+    truth, plain_arm, perm_arm, (rot_arm, rot_np_arm) = overlap_build(
         lambda: _ann_exact_truth(emb, topk),
         lambda: pq_arm(emb),
         lambda: pq_arm(
@@ -7270,7 +7261,7 @@ def opq_rotation_invariants(spark: SparkSession, sf_dir: str) -> DataFrame:
         perm = similarity.opq_fit_permutation(emb)
         return perm, [(int(r["new_pos"]), int(r["src_dim"])) for r in perm.collect()]
 
-    (rot, rot_np), (perm, perm_rows) = _overlap(_rot_chain, _perm_chain)
+    (rot, rot_np), (perm, perm_rows) = overlap_build(_rot_chain, _perm_chain)
 
     def ortho_resid_ok(mat: list[list[float]]) -> bool:
         a = np.array(mat, dtype=float)
@@ -7447,7 +7438,7 @@ def ann_recall_prod_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # serves every arm; one coarse book per geometry.
     # r16: the six artifact chains (fine, 3 coarse geometries, sampled
     # fine, truth) are mutually independent — built OVERLAPPED
-    # (_overlap, guide §2.6; profiled build:exec 44-112 s : 2-4 s
+    # (overlap_build, guide §2.6; profiled build:exec 44-112 s : 2-4 s
     # serial). Same artifacts, same results, overlapped tiny jobs.
     def _fine_chain():
         cb = similarity.pq_train(emb, iters=2)
@@ -7485,7 +7476,7 @@ def ann_recall_prod_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         # within noise of the full-corpus arm.
         (coarse_s, cells_s),
         (cb_sf, codes_sf),
-    ) = _overlap(
+    ) = overlap_build(
         lambda: _ann_exact_truth(emb, topk),
         _fine_chain,
         lambda: coarse_and_cells(nc),
@@ -7699,13 +7690,13 @@ def ann_recall_clustered_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # r16: the four chains (truth, fine book, full-trained coarse,
     # sampled coarse) are independent given embc — overlapped
-    # (_overlap, guide §2.6). Same artifacts, same results.
+    # (overlap_build, guide §2.6). Same artifacts, same results.
     (
         truth,
         (cb, codes),
         (coarse_f, cells_f),
         (coarse_s, cells_s),
-    ) = _overlap(
+    ) = overlap_build(
         lambda: _ann_exact_truth(embc, topk),
         _fine_chain,
         lambda: coarse_and_cells(None),

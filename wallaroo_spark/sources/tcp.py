@@ -27,6 +27,7 @@ Spark mapping — the socket edge lands in a durable spool:
 from __future__ import annotations
 
 import io
+import os
 import socket
 import struct
 import threading
@@ -88,6 +89,7 @@ class FramedTCPReceiver:
         # earlier instance's files by reusing index 0 (r15 fix)
         self._uniq = uuid.uuid4().hex[:8]
         self._file_idx = 0
+        self._last_mtime_ms = 0
         self._lock = threading.Lock()
         self._stop = threading.Event()
         self._thread = threading.Thread(target=self._serve, daemon=True)
@@ -144,13 +146,20 @@ class FramedTCPReceiver:
         import pyarrow as pa
         import pyarrow.parquet as pq
 
+        # Spark's file-stream source orders new files by modification time
+        # in ms, so two flushes within one ms tick could be read out of
+        # order. Each file gets a strictly increasing ms mtime, handed out
+        # with its index under the lock: mtime order == index order.
         with self._lock:
             idx = self._file_idx
             self._file_idx += 1
+            mtime_ms = max(time.time_ns() // 1_000_000, self._last_mtime_ms + 1)
+            self._last_mtime_ms = mtime_ms
         table = pa.table({"frame": pa.array(frames, type=pa.binary())})
-        tmp = self.spool / f"_tmp_{self._uniq}_{idx}.parquet"
+        tmp = self.spool / f"_tmp_{self._uniq}_{idx:09d}.parquet"
         pq.write_table(table, tmp)
-        tmp.rename(self.spool / f"frames_{self._uniq}_{idx}.parquet")  # atomic publish
+        os.utime(tmp, ns=(mtime_ms * 1_000_000, mtime_ms * 1_000_000))
+        tmp.rename(self.spool / f"frames_{self._uniq}_{idx:09d}.parquet")  # atomic publish
         # count AFTER the publish so wait_for() means "landed in the spool"
         with self._lock:
             self.frames_received += len(frames)
