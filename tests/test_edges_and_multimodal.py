@@ -12,18 +12,49 @@ from wallaroo_spark.sources import codec, gen
 def test_frame_codec_roundtrip(spark):
     msgs = [
         (1700000000000 + i, f"key{i}".encode(), f"payload-{i}".encode()) for i in range(20)
-    ]
+    ] + [(-86_400_001, b"neg", b"before-1970")]
     frames = [Row(frame=codec.encode_frame(*m)) for m in msgs]
     df = spark.createDataFrame(frames)
     decoded = codec.decode_frames(df).orderBy("key")
     rows = decoded.collect()
-    assert len(rows) == 20
+    assert len(rows) == 21
     r0 = rows[0]
     assert r0.key == "key0" and bytes(r0.payload) == b"payload-0"
     assert r0.event_ts == dt.datetime(2023, 11, 14, 22, 13, 20)
     # encode side: re-encoding reproduces the original wire bytes
     re = codec.encode_frames(decoded).collect()
     assert sorted(bytes(r.frame) for r in re) == sorted(bytes(r.frame) for r in frames)
+
+
+def test_frame_codec_event_time_is_zone_free(spark):
+    """``event_ts`` is the frame's epoch instant under any session time
+    zone, and encode(decode(frames)) gives the frames back byte for byte."""
+    ms = [1700000000123, 0, -1, -86_400_001, 1_710_054_000_000]  # incl. a DST switch
+    frames = [codec.encode_frame(t, f"k{i}".encode(), b"p") for i, t in enumerate(ms)]
+    df = spark.createDataFrame([(bytearray(f),) for f in frames], "frame binary")
+    old_tz = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+    try:
+        decoded = codec.decode_frames(df)
+        got = decoded.select("key", F.unix_millis("event_ts").alias("ms")).collect()
+        assert sorted((r.key, r.ms) for r in got) == [(f"k{i}", t) for i, t in enumerate(ms)]
+        again = codec.encode_frames(decoded).collect()
+        assert sorted(bytes(r.frame) for r in again) == sorted(frames)
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", old_tz)
+
+
+def test_encode_frames_rejects_nulls(spark):
+    """The wire format has no null: a null ts, key or payload fails the job
+    instead of being written as a placeholder."""
+    import pytest
+
+    ok = (dt.datetime(2024, 1, 1), "k", b"p")
+    for i in range(3):
+        row = tuple(None if j == i else v for j, v in enumerate(ok))
+        df = spark.createDataFrame([ok, row], "event_ts timestamp, key string, payload binary")
+        with pytest.raises(Exception, match="null ts, key or payload"):
+            codec.encode_frames(df).collect()
 
 
 def test_gen_batch_sequence(spark):

@@ -40,3 +40,35 @@ def test_parallel_classifier_tags_pids_losslessly(spark):
     # validate.py rule 2: the classify stage ran on multiple workers
     pids = {t.rsplit(":", 1)[1] for t in rows}
     assert len(pids) > 1, pids
+
+
+def test_python_workers_reused_across_tasks(spark):
+    """Sequential Python tasks run in warm workers: after the first job,
+    each job's task runs in a worker that existed before the job was
+    submitted, not in one forked for it (which would import pandas and
+    pyarrow again, ~0.28 s, most of a streaming micro-batch's fixed cost).
+    Idle workers are handed out first-in first-out, so in a long session
+    the jobs may each get a different warm worker; start times, not pids,
+    tell warm from fresh. Both clocks are the boot clock in /proc."""
+
+    def started(batches):
+        import os
+
+        import pandas as _pd
+
+        for _ in batches:
+            pass
+        with open("/proc/self/stat") as fh:  # field 22: start time in ticks
+            ticks = int(fh.read().rsplit(")", 1)[1].split()[19])
+        yield _pd.DataFrame({"start_s": [ticks / os.sysconf("SC_CLK_TCK")]})
+
+    def uptime_s():
+        with open("/proc/uptime") as fh:
+            return float(fh.read().split()[0])
+
+    df = spark.range(1, numPartitions=1).mapInPandas(started, "start_s double")
+    warm = 0
+    for _ in range(8):
+        submitted = uptime_s()
+        warm += df.collect()[0].start_s < submitted
+    assert warm >= 7, warm

@@ -10,6 +10,7 @@ per-window ordering, and per-key gap-freedom of the flattened sequences.
 """
 
 import datetime as dt
+import itertools
 import json
 import shutil
 import struct
@@ -28,6 +29,11 @@ from wallaroo_spark.sources.tcp import (
     send_frames,
     tcp_frame_sink,
 )
+from wallaroo_spark.sources.kafka_wire import KafkaWireReceiver, MiniKafkaBroker
+from wallaroo_spark.sources.kinesis import KinesisShardReceiver, MockKinesisStream
+from wallaroo_spark.sources.rabbitmq import AMQPQueueReceiver, MockAMQPBroker
+from wallaroo_spark.sources.redis import MiniRedis, RedisSubscriberReceiver
+from wallaroo_spark.sources.udp import UDPDatagramReceiver
 
 T0 = dt.datetime(2024, 1, 1, tzinfo=dt.timezone.utc)
 N_PER_KEY = 100
@@ -269,8 +275,11 @@ def test_decoder_filter_drops_malformed_frames(spark):
         struct.pack(">I", 100) + b"\x00" * 12,       # total past the buffer
         struct.pack(">IqI", 20, 0, 99) + b"\x00" * 8,  # key length past body
         struct.pack(">IqI", 14, 0, 2) + b"\xff\xfe",   # invalid utf-8 key
+        struct.pack(">IqI", 20, 0, 0xFFFFFFFF) + b"\x00" * 8,  # key length u32 max
+        struct.pack(">IqI", 0xFFFFFFFF, 0, 1) + b"a" * 8,      # total length u32 max
     ]
-    frames = [f for pair in zip(good, bad + [b"\x00"]) for f in pair]
+    frames = [f for pair in itertools.zip_longest(good, bad + [b"\x00"])
+              for f in pair if f is not None]
     df = spark.createDataFrame([(bytearray(f),) for f in frames], "frame binary")
 
     out = codec.decode_frames(df, drop_malformed=True).collect()
@@ -282,25 +291,65 @@ def test_decoder_filter_drops_malformed_frames(spark):
         codec.decode_frames(df).collect()  # strict mode still surfaces it
 
 
-def test_spool_files_read_in_flush_order(spark, tmpdir):
+def _started_receiver(kind, spool, stack):
+    """A started ``kind`` receiver on ``spool`` (with the mock server it
+    needs), stopped when ``stack`` closes. Nothing is sent to it: the test
+    calls its ``_flush`` directly."""
+    if kind == "tcp":
+        rx = FramedTCPReceiver(spool)
+    elif kind == "udp":
+        rx = UDPDatagramReceiver(spool)
+    elif kind == "redis":
+        srv = MiniRedis().start()
+        stack.callback(srv.stop)
+        rx = RedisSubscriberReceiver(spool, srv.host, srv.port, "ch")
+    elif kind == "rabbitmq":
+        rx = AMQPQueueReceiver(spool, MockAMQPBroker(), "q")
+    elif kind == "kinesis":
+        rx = KinesisShardReceiver(spool, MockKinesisStream(shards=1), "shardId-000000000000")
+    else:
+        broker = MiniKafkaBroker().start()
+        stack.callback(broker.stop)
+        broker.create_topic("t", partitions=1)
+        rx = KafkaWireReceiver(spool, broker.host, broker.port, "t", 0)
+    rx.start()
+    stack.callback(rx.stop)
+    return rx
+
+
+# receiver kind -> (spool file prefix, payload column, payloads -> _flush input)
+SPOOL_RECEIVERS = {
+    "tcp": ("frames", "frame", list),
+    "udp": ("datagrams", "datagram", list),
+    "redis": ("messages", "message", list),
+    "rabbitmq": ("messages", "message", list),
+    "kinesis": ("records", "data", lambda ps: [
+        {"Data": p, "PartitionKey": "k", "SequenceNumber": i} for i, p in enumerate(ps)]),
+    "kafka_wire": ("records", "value", lambda ps: [(i, b"k", p, 0) for i, p in enumerate(ps)]),
+}
+
+
+@pytest.mark.parametrize("kind", list(SPOOL_RECEIVERS))
+def test_spool_files_read_in_flush_order(spark, tmpdir, kind):
     """Spark's file-stream source orders new files by ms modification
     time. Quick flushes land within one ms tick, so each spool file gets a
     strictly increasing mtime in index order; a reader taking the spool one
-    file per trigger then returns the frames in send order."""
+    file per trigger then returns the payloads in send order. Every
+    receiver publishes through the same spool writer."""
+    import contextlib
     import os
 
+    prefix, col, batch = SPOOL_RECEIVERS[kind]
     n_files, per_file = 12, 3
-    rx = FramedTCPReceiver(tmpdir + "/spool").start()  # flushed directly
-    try:
-        frames = [struct.pack(">I", 4) + struct.pack(">I", i)
-                  for i in range(n_files * per_file)]
+    frames = [struct.pack(">I", 4) + struct.pack(">I", i)
+              for i in range(n_files * per_file)]
+    with contextlib.ExitStack() as stack:
+        rx = _started_receiver(kind, tmpdir + "/spool", stack)
         for f in range(n_files):
-            rx._flush(frames[f * per_file:(f + 1) * per_file])
-    finally:
-        rx.stop()
+            rx._flush(batch(frames[f * per_file:(f + 1) * per_file]))
 
     names = sorted(os.listdir(tmpdir + "/spool"))
-    assert len(names) == n_files and all(n.startswith("frames_") for n in names)
+    assert len(names) == n_files and all(n.startswith(prefix + "_") for n in names)
     # zero-padded index: name order is index order
     idx = [int(n.rsplit("_", 1)[1].split(".")[0]) for n in names]
     assert idx == list(range(n_files))
@@ -310,10 +359,10 @@ def test_spool_files_read_in_flush_order(spark, tmpdir):
     got = []
 
     def collect(batch_df, batch_id):
-        got.extend(bytes(r.frame) for r in batch_df.collect())
+        got.extend(bytes(r[0]) for r in batch_df.collect())
 
     q = (
-        spark.readStream.schema("frame binary")
+        spark.readStream.schema(f"{col} binary")
         .option("maxFilesPerTrigger", 1)
         .parquet(tmpdir + "/spool")
         .writeStream.foreachBatch(collect)
@@ -325,16 +374,17 @@ def test_spool_files_read_in_flush_order(spark, tmpdir):
     assert got == frames
 
     # concurrent connections flush from their own threads: index and mtime
-    # are handed out together under the receiver lock
+    # are handed out together under the writer's lock
     import sys
     import threading
 
-    rx = FramedTCPReceiver(tmpdir + "/spool2").start()
     old_interval = sys.getswitchinterval()
-    sys.setswitchinterval(1e-5)
-    try:
+    with contextlib.ExitStack() as stack:
+        rx = _started_receiver(kind, tmpdir + "/spool2", stack)
+        sys.setswitchinterval(1e-5)
+        stack.callback(sys.setswitchinterval, old_interval)
         workers = [
-            threading.Thread(target=lambda: [rx._flush(frames[:2]) for _ in range(6)])
+            threading.Thread(target=lambda: [rx._flush(batch(frames[:2])) for _ in range(6)])
             for _ in range(8)
         ]
         for w in workers:
@@ -342,9 +392,6 @@ def test_spool_files_read_in_flush_order(spark, tmpdir):
         for w in workers:
             w.join(timeout=60)
         assert not any(w.is_alive() for w in workers)
-    finally:
-        sys.setswitchinterval(old_interval)
-        rx.stop()
     names = sorted(os.listdir(tmpdir + "/spool2"))
     assert len(names) == 48
     mtimes = [os.stat(tmpdir + "/spool2/" + n).st_mtime_ns // 1_000_000 for n in names]

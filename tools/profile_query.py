@@ -36,33 +36,18 @@ def main() -> None:
 
     evdir = tempfile.mkdtemp(prefix="ws_evlog_")
     os.environ.setdefault("SPARK_GRAFT_CPUS", "32")
-    from pyspark.sql import SparkSession
-
+    # event logging is set at JVM launch, so the session is get_spark's own
+    os.environ["PYSPARK_SUBMIT_ARGS"] = " ".join(
+        [
+            "--conf spark.eventLog.enabled=true",
+            f"--conf spark.eventLog.dir=file://{evdir}",
+            "--conf spark.eventLog.compress=false",
+            "pyspark-shell",
+        ]
+    )
     from wallaroo_spark.session import get_spark
 
-    SparkSession.builder.config("spark.eventLog.enabled", "true").config(
-        "spark.eventLog.dir", evdir
-    )
-    # get_spark ignores extra builder state unless same builder; easiest:
-    # replicate its config here with event logging added.
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("profile")
-        .config("spark.sql.shuffle.partitions", str(cpus))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
-        .config("spark.ui.enabled", "false")
-        .config("spark.python.worker.reuse", "false")
-        .config("spark.eventLog.enabled", "true")
-        .config("spark.eventLog.dir", evdir)
-        .config("spark.eventLog.compress", "false")
-        .getOrCreate()
-    )
+    spark = get_spark("profile")
     spark.sparkContext.setLogLevel("ERROR")
     from wallaroo_spark.queries import QUERIES
 

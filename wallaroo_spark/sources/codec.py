@@ -7,16 +7,19 @@ length, then key bytes and payload bytes. `@decoder`/`@encoder`
 
 Our engine keeps the same edge contract but lands on typed columns:
 ``decode_frames`` turns a binary column of frames into (event_ts, key,
-payload) columns; ``encode_frames`` packs rows back. Implemented with
-Arrow-batched mapInPandas (binary struct unpack is genuinely imperative) —
-the decode cost is one pass at the edge, everything downstream is columnar.
+payload) columns; ``encode_frames`` packs rows back. Both are plain Column
+expressions (``substring`` + ``hex``/``conv`` for the big-endian integers,
+``timestamp_millis``/``unix_millis`` for the event time), so the edge runs
+in the JVM with the rest of the plan: no Python worker, no Arrow hop.
+``event_ts`` is the frame's epoch instant whatever the session time zone.
 """
 
 from __future__ import annotations
 
 import struct
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
+from pyspark.sql import functions as F
 
 
 FRAME_HEADER = ">IqI"  # u32 total payload len, i64 event_time_ms, u32 key_len
@@ -29,6 +32,16 @@ def encode_frame(event_time_ms: int, key: bytes, payload: bytes) -> bytes:
     return struct.pack(">I", len(body)) + body
 
 
+def _u32(frame: Column, pos: int) -> Column:
+    """Big-endian u32 at 1-based byte ``pos`` as a bigint."""
+    return F.conv(F.hex(F.substring(frame, pos, 4)), 16, 10).cast("bigint")
+
+
+def _be_bytes(n: Column, width: int) -> Column:
+    """``n`` as ``width`` big-endian bytes (two's complement, as ``hex``)."""
+    return F.unhex(F.lpad(F.hex(n), 2 * width, "0"))
+
+
 def decode_frames(
     df: DataFrame, frame_col: str = "frame", drop_malformed: bool = False
 ) -> DataFrame:
@@ -38,54 +51,57 @@ def decode_frames(
     (`testing/correctness/apps/decoder_filter`): a frame the decoder cannot
     parse (truncated header, key length past the buffer, invalid utf-8) is
     silently filtered instead of failing the job — the behavior a live
-    socket edge needs when peers send garbage or keepalives."""
-
-    def run(batches):
-        import struct as _struct
-
-        import pandas as _pd
-
-        for pdf in batches:
-            out = {"event_ts": [], "key": [], "payload": []}
-            for raw in pdf[frame_col]:
-                raw = bytes(raw)
-                try:
-                    (total,) = _struct.unpack(">I", raw[:4])
-                    ts_ms, klen = _struct.unpack(">qI", raw[4:16])
-                    if 12 + klen > total or 4 + total > len(raw):
-                        raise ValueError("frame lengths inconsistent")
-                    key = raw[16 : 16 + klen].decode("utf-8")
-                    payload = raw[16 + klen : 4 + total]
-                except Exception:
-                    if drop_malformed:
-                        continue
-                    raise
-                out["event_ts"].append(_pd.Timestamp(ts_ms, unit="ms"))
-                out["key"].append(key)
-                out["payload"].append(payload)
-            yield _pd.DataFrame(out)
-
-    return df.mapInPandas(run, schema="event_ts timestamp, key string, payload binary")
+    socket edge needs when peers send garbage or keepalives. Without it a
+    malformed frame fails the job."""
+    frame = F.col(frame_col)
+    header = F.octet_length(frame) >= 16
+    total = F.when(header, _u32(frame, 1))
+    klen = F.when(header, _u32(frame, 13))
+    # every cast and substring below sits behind this guard, so a frame
+    # whose u32 lengths disagree with its size never reaches them
+    sized = header & (12 + klen <= total) & (4 + total <= F.octet_length(frame))
+    key_raw = F.when(sized, F.substring(frame, 17, klen.cast("int")).cast("string"))
+    ok = F.coalesce(sized & F.is_valid_utf8(key_raw), F.lit(False))
+    # i64 event time: signed high word * 2^32 + unsigned low word
+    hi, lo = _u32(frame, 5), _u32(frame, 9)
+    ts_ms = F.when(hi >= 1 << 31, hi - (1 << 32)).otherwise(hi) * (1 << 32) + lo
+    payload = F.substring(frame, (17 + klen).cast("int"), (total - 12 - klen).cast("int"))
+    keep = F.col("_ok")
+    if not drop_malformed:  # a filter, so no column pruning skips the check
+        keep = F.when(keep, True).otherwise(
+            F.raise_error(F.lit("malformed frame: lengths or utf-8 key invalid")))
+    return (
+        df.select(
+            F.when(ok, F.timestamp_millis(ts_ms)).alias("event_ts"),
+            F.when(ok, key_raw).alias("key"),
+            F.when(ok, payload).alias("payload"),
+            ok.alias("_ok"),
+        )
+        .where(keep)
+        .drop("_ok")
+    )
 
 
 def encode_frames(
     df: DataFrame, ts_col: str = "event_ts", key_col: str = "key", payload_col: str = "payload"
 ) -> DataFrame:
-    """(event_ts, key, payload) -> single binary frame column (sink edge)."""
-
-    def run(batches):
-        import struct as _struct
-
-        import pandas as _pd
-
-        for pdf in batches:
-            frames = []
-            for ts, key, payload in zip(pdf[ts_col], pdf[key_col], pdf[payload_col]):
-                kb = str(key).encode("utf-8")
-                pb = bytes(payload)
-                ts_ms = int(_pd.Timestamp(ts).value // 1_000_000)
-                body = _struct.pack(">qI", ts_ms, len(kb)) + kb + pb
-                frames.append(_struct.pack(">I", len(body)) + body)
-            yield _pd.DataFrame({"frame": frames})
-
-    return df.mapInPandas(run, schema="frame binary")
+    """(event_ts, key, payload) -> single binary frame column (sink edge).
+    A null ``ts``, ``key`` or ``payload`` fails the job: the wire format
+    has no null."""
+    ts, key, payload = F.col(ts_col), F.col(key_col), F.col(payload_col)
+    kb = F.encode(key.cast("string"), "UTF-8")
+    pb = payload.cast("binary")
+    klen = F.octet_length(kb).cast("bigint")
+    frame = F.concat(
+        _be_bytes(12 + klen + F.octet_length(pb), 4),
+        _be_bytes(F.unix_millis(ts), 8),
+        _be_bytes(klen, 4),
+        kb,
+        pb,
+    )
+    return df.select(
+        F.when(ts.isNull() | key.isNull() | payload.isNull(),
+               F.raise_error(F.lit("encode_frames: null ts, key or payload")))
+        .otherwise(frame)
+        .alias("frame")
+    )

@@ -43,11 +43,12 @@ import hashlib
 import struct
 import threading
 import time
-import uuid
 import zlib
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
+
+from wallaroo_spark.sources.spool import SpoolWriter
 
 API_PRODUCE = 0
 API_FETCH = 1
@@ -548,7 +549,6 @@ class KafkaWireReceiver:
         from_earliest: bool = True,
     ):
         self.spool = Path(spool_dir)
-        self.spool.mkdir(parents=True, exist_ok=True)
         self.topic, self.partition = topic, partition
         self._client = KafkaWireClient(host, port)
         self._offset = self._client.list_offset(
@@ -556,8 +556,7 @@ class KafkaWireReceiver:
         )
         self.poll_s = poll_s
         self.records_received = 0
-        self._uniq = uuid.uuid4().hex[:8]
-        self._file_idx = 0
+        self._writer = SpoolWriter(self.spool, "records")
         self._stop = threading.Event()
         self._thread = threading.Thread(target=self._poll, daemon=True)
 
@@ -581,22 +580,19 @@ class KafkaWireReceiver:
 
     def _flush(self, recs) -> None:
         import pyarrow as pa
-        import pyarrow.parquet as pq
 
-        table = pa.table(
-            {
-                "key": pa.array([k for _, k, _v, _t in recs], type=pa.binary()),
-                "value": pa.array([v for _, _k, v, _t in recs], type=pa.binary()),
-                "ts_ms": pa.array([t for *_x, t in recs], type=pa.int64()),
-                "topic": pa.array([self.topic] * len(recs)),
-                "partition": pa.array([self.partition] * len(recs), type=pa.int32()),
-                "offset": pa.array([o for o, *_x in recs], type=pa.int64()),
-            }
+        self._writer.publish(
+            pa.table(
+                {
+                    "key": pa.array([k for _, k, _v, _t in recs], type=pa.binary()),
+                    "value": pa.array([v for _, _k, v, _t in recs], type=pa.binary()),
+                    "ts_ms": pa.array([t for *_x, t in recs], type=pa.int64()),
+                    "topic": pa.array([self.topic] * len(recs)),
+                    "partition": pa.array([self.partition] * len(recs), type=pa.int32()),
+                    "offset": pa.array([o for o, *_x in recs], type=pa.int64()),
+                }
+            )
         )
-        tmp = self.spool / f"_tmp_{self._uniq}_{self._file_idx}.parquet"
-        pq.write_table(table, tmp)
-        tmp.rename(self.spool / f"records_{self._uniq}_{self._file_idx}.parquet")
-        self._file_idx += 1
         self.records_received += len(recs)
 
     def wait_for(self, n: int, timeout_s: float = 30.0) -> int:

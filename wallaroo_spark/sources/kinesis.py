@@ -33,10 +33,11 @@ from __future__ import annotations
 import hashlib
 import threading
 import time
-import uuid
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
+
+from wallaroo_spark.sources.spool import SpoolWriter
 
 _KEYSPACE = 1 << 128  # Kinesis routes md5(partition_key) over [0, 2^128)
 
@@ -131,15 +132,13 @@ class KinesisShardReceiver:
         flush_every: int = 64,
     ):
         self.spool = Path(spool_dir)
-        self.spool.mkdir(parents=True, exist_ok=True)
         self.stream = stream
         self.shard_id = shard_id
         self._it = stream.get_shard_iterator(shard_id, iterator_type)
         self.poll_s = poll_s
         self.flush_every = flush_every
         self.records_received = 0
-        self._uniq = uuid.uuid4().hex[:8]
-        self._file_idx = 0
+        self._writer = SpoolWriter(self.spool, "records")
         self._lock = threading.Lock()
         self._stop = threading.Event()
         self._thread = threading.Thread(target=self._poll, daemon=True)
@@ -164,19 +163,12 @@ class KinesisShardReceiver:
 
     def _flush(self, recs: list[dict]) -> None:
         import pyarrow as pa
-        import pyarrow.parquet as pq
 
-        with self._lock:
-            idx = self._file_idx
-            self._file_idx += 1
-        table = pa.table({
+        self._writer.publish(pa.table({
             "data": pa.array([r["Data"] for r in recs], pa.binary()),
             "partition_key": pa.array([r["PartitionKey"] for r in recs], pa.string()),
             "seq": pa.array([r["SequenceNumber"] for r in recs], pa.int64()),
-        })
-        tmp = self.spool / f"_tmp_{self._uniq}_{idx}.parquet"
-        pq.write_table(table, tmp)
-        tmp.rename(self.spool / f"records_{self._uniq}_{idx}.parquet")
+        }))
         with self._lock:
             self.records_received += len(recs)
 

@@ -38,11 +38,12 @@ from __future__ import annotations
 import itertools
 import threading
 import time
-import uuid
 from collections import deque
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
+
+from wallaroo_spark.sources.spool import SpoolWriter
 
 
 class MockAMQPBroker:
@@ -162,7 +163,6 @@ class AMQPQueueReceiver:
         crash_after_ack: bool = False,
     ):
         self.spool = Path(spool_dir)
-        self.spool.mkdir(parents=True, exist_ok=True)
         self.broker = broker
         self.queue = queue
         self.ack_after_commit = ack_after_commit
@@ -172,11 +172,7 @@ class AMQPQueueReceiver:
         self._crash_after_ack = crash_after_ack
         self.messages_received = 0
         self.crashed = False
-        # per-instance unique prefix: a second receiver (or a restart
-        # after a crash) sharing this spool must never overwrite an
-        # earlier instance's files by reusing index 0 (r15 fix)
-        self._uniq = uuid.uuid4().hex[:8]
-        self._file_idx = 0
+        self._writer = SpoolWriter(self.spool, "messages")
         self._lock = threading.Lock()
         self._stop = threading.Event()
         self._thread = threading.Thread(target=self._consume, daemon=True)
@@ -232,15 +228,8 @@ class AMQPQueueReceiver:
 
     def _flush(self, messages: list[bytes]) -> None:
         import pyarrow as pa
-        import pyarrow.parquet as pq
 
-        with self._lock:
-            idx = self._file_idx
-            self._file_idx += 1
-        table = pa.table({"message": pa.array(messages, type=pa.binary())})
-        tmp = self.spool / f"_tmp_{self._uniq}_{idx}.parquet"
-        pq.write_table(table, tmp)
-        tmp.rename(self.spool / f"messages_{self._uniq}_{idx}.parquet")  # atomic publish
+        self._writer.publish(pa.table({"message": pa.array(messages, type=pa.binary())}))
         with self._lock:
             self.messages_received += len(messages)
 

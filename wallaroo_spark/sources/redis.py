@@ -31,10 +31,11 @@ from __future__ import annotations
 import socket
 import threading
 import time
-import uuid
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
+
+from wallaroo_spark.sources.spool import SpoolWriter
 
 _CRLF = b"\r\n"
 
@@ -270,17 +271,12 @@ class RedisSubscriberReceiver:
         idle_flush_s: float = 0.25,
     ):
         self.spool = Path(spool_dir)
-        self.spool.mkdir(parents=True, exist_ok=True)
         self.channel = channel.encode()
         self._client = RespClient(host, port)
         self.flush_every = flush_every
         self.idle_flush_s = idle_flush_s
         self.messages_received = 0
-        # per-instance unique prefix: a second receiver (or a restart
-        # after a crash) sharing this spool must never overwrite an
-        # earlier instance's files by reusing index 0 (r15 fix)
-        self._uniq = uuid.uuid4().hex[:8]
-        self._file_idx = 0
+        self._writer = SpoolWriter(self.spool, "messages")
         self._lock = threading.Lock()
         self._stop = threading.Event()
         self._thread = threading.Thread(target=self._listen, daemon=True)
@@ -334,15 +330,8 @@ class RedisSubscriberReceiver:
 
     def _flush(self, messages: list[bytes]) -> None:
         import pyarrow as pa
-        import pyarrow.parquet as pq
 
-        with self._lock:
-            idx = self._file_idx
-            self._file_idx += 1
-        table = pa.table({"message": pa.array(messages, type=pa.binary())})
-        tmp = self.spool / f"_tmp_{self._uniq}_{idx}.parquet"
-        pq.write_table(table, tmp)
-        tmp.rename(self.spool / f"messages_{self._uniq}_{idx}.parquet")  # atomic publish
+        self._writer.publish(pa.table({"message": pa.array(messages, type=pa.binary())}))
         with self._lock:
             self.messages_received += len(messages)
 

@@ -26,16 +26,15 @@ Spark mapping — the socket edge lands in a durable spool:
 
 from __future__ import annotations
 
-import io
-import os
 import socket
 import struct
 import threading
 import time
-import uuid
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
+
+from wallaroo_spark.sources.spool import SpoolWriter
 
 
 def send_frames(frames: list[bytes], host: str, port: int, rate_per_s: float | None = None) -> int:
@@ -75,7 +74,6 @@ class FramedTCPReceiver:
     def __init__(self, spool_dir: str, host: str = "127.0.0.1", port: int = 0,
                  flush_every: int = 256, idle_flush_s: float = 0.25):
         self.spool = Path(spool_dir)
-        self.spool.mkdir(parents=True, exist_ok=True)
         self._srv = socket.socket(socket.AF_INET, socket.SOCK_STREAM)
         self._srv.setsockopt(socket.SOL_SOCKET, socket.SO_REUSEADDR, 1)
         self._srv.bind((host, port))
@@ -84,12 +82,7 @@ class FramedTCPReceiver:
         self.flush_every = flush_every
         self.idle_flush_s = idle_flush_s
         self.frames_received = 0
-        # per-instance unique prefix: a second receiver (or a restart
-        # after a crash) sharing this spool must never overwrite an
-        # earlier instance's files by reusing index 0 (r15 fix)
-        self._uniq = uuid.uuid4().hex[:8]
-        self._file_idx = 0
-        self._last_mtime_ms = 0
+        self._writer = SpoolWriter(self.spool, "frames")
         self._lock = threading.Lock()
         self._stop = threading.Event()
         self._thread = threading.Thread(target=self._serve, daemon=True)
@@ -144,22 +137,8 @@ class FramedTCPReceiver:
 
     def _flush(self, frames: list[bytes]) -> None:
         import pyarrow as pa
-        import pyarrow.parquet as pq
 
-        # Spark's file-stream source orders new files by modification time
-        # in ms, so two flushes within one ms tick could be read out of
-        # order. Each file gets a strictly increasing ms mtime, handed out
-        # with its index under the lock: mtime order == index order.
-        with self._lock:
-            idx = self._file_idx
-            self._file_idx += 1
-            mtime_ms = max(time.time_ns() // 1_000_000, self._last_mtime_ms + 1)
-            self._last_mtime_ms = mtime_ms
-        table = pa.table({"frame": pa.array(frames, type=pa.binary())})
-        tmp = self.spool / f"_tmp_{self._uniq}_{idx:09d}.parquet"
-        pq.write_table(table, tmp)
-        os.utime(tmp, ns=(mtime_ms * 1_000_000, mtime_ms * 1_000_000))
-        tmp.rename(self.spool / f"frames_{self._uniq}_{idx:09d}.parquet")  # atomic publish
+        self._writer.publish(pa.table({"frame": pa.array(frames, type=pa.binary())}))
         # count AFTER the publish so wait_for() means "landed in the spool"
         with self._lock:
             self.frames_received += len(frames)

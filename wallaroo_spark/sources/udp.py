@@ -36,10 +36,11 @@ from __future__ import annotations
 import socket
 import threading
 import time
-import uuid
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
+
+from wallaroo_spark.sources.spool import SpoolWriter
 
 _MAX_DGRAM = 65535  # recv size covering the 65507-byte UDP payload max
 
@@ -82,7 +83,6 @@ class UDPDatagramReceiver:
         rcvbuf_bytes: int = 1 << 22,
     ):
         self.spool = Path(spool_dir)
-        self.spool.mkdir(parents=True, exist_ok=True)
         self._sock = socket.socket(socket.AF_INET, socket.SOCK_DGRAM)
         try:
             self._sock.setsockopt(socket.SOL_SOCKET, socket.SO_RCVBUF, rcvbuf_bytes)
@@ -94,11 +94,7 @@ class UDPDatagramReceiver:
         self.idle_flush_s = idle_flush_s
         self.strip = strip_whitespace
         self.datagrams_received = 0
-        # per-instance unique prefix: a second receiver (or a restart
-        # after a crash) sharing this spool must never overwrite an
-        # earlier instance's files by reusing index 0 (r15 fix)
-        self._uniq = uuid.uuid4().hex[:8]
-        self._file_idx = 0
+        self._writer = SpoolWriter(self.spool, "datagrams")
         self._lock = threading.Lock()
         self._stop = threading.Event()
         self._thread = threading.Thread(target=self._serve, daemon=True)
@@ -139,15 +135,8 @@ class UDPDatagramReceiver:
 
     def _flush(self, datagrams: list[bytes]) -> None:
         import pyarrow as pa
-        import pyarrow.parquet as pq
 
-        with self._lock:
-            idx = self._file_idx
-            self._file_idx += 1
-        table = pa.table({"datagram": pa.array(datagrams, type=pa.binary())})
-        tmp = self.spool / f"_tmp_{self._uniq}_{idx}.parquet"
-        pq.write_table(table, tmp)
-        tmp.rename(self.spool / f"datagrams_{self._uniq}_{idx}.parquet")  # atomic publish
+        self._writer.publish(pa.table({"datagram": pa.array(datagrams, type=pa.binary())}))
         # count AFTER the publish so wait_for() means "landed in the spool"
         with self._lock:
             self.datagrams_received += len(datagrams)
