@@ -17,8 +17,9 @@ from pyspark.sql import functions as F
 
 from wallaroo_spark.sources.kinesis import (
     KinesisShardReceiver,
+    KinesisWireGateway,
     MockKinesisStream,
-    kinesis_put_sink,
+    kinesis_put_sink_wire,
     record_batch,
 )
 
@@ -81,7 +82,8 @@ def test_iterator_semantics_chain_latest_resume():
 def test_shard_receivers_and_put_sink_roundtrip(spark, tmpdir):
     """Per-shard receivers drain a 2-shard stream completely (every record
     in exactly one spool, keys shard-consistent); a streaming aggregation
-    put_records into an output stream with the same md5 routing."""
+    put_records into an output stream, through the wire gateway, with the
+    same md5 routing."""
     st = MockKinesisStream(shards=2)
     n = 120
     for i in range(n):
@@ -111,7 +113,8 @@ def test_shard_receivers_and_put_sink_roundtrip(spark, tmpdir):
         for r in frames[s].select("partition_key").distinct().collect():
             assert st.shard_for(r.partition_key) == s
 
-    # downstream agg -> put_record sink into an OUTPUT stream
+    # downstream agg -> put_record sink into an OUTPUT stream, put from
+    # the executors through the gateway
     out_stream = MockKinesisStream(shards=2)
     agg = (
         spark.readStream.schema("data binary, partition_key string, seq long")
@@ -120,16 +123,20 @@ def test_shard_receivers_and_put_sink_roundtrip(spark, tmpdir):
         .agg(F.count("*").alias("n"))
         .select("partition_key", F.to_json(F.struct("n")).alias("payload"))
     )
-    q = (
-        agg.writeStream.foreachBatch(
-            kinesis_put_sink(out_stream, "partition_key", "payload")
+    gw = KinesisWireGateway(out_stream).start()
+    try:
+        q = (
+            agg.writeStream.foreachBatch(
+                kinesis_put_sink_wire(gw.host, gw.port, "partition_key", "payload")
+            )
+            .outputMode("complete")
+            .option("checkpointLocation", tmpdir + "/chk")
+            .trigger(availableNow=True)
+            .start()
         )
-        .outputMode("complete")
-        .option("checkpointLocation", tmpdir + "/chk")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
+        q.awaitTermination(120)
+    finally:
+        gw.stop()
     got = {}
     for s in range(2):
         it = out_stream.get_shard_iterator(f"shardId-{s:012d}", "TRIM_HORIZON")
@@ -148,11 +155,6 @@ def test_wire_gateway_executor_side_puts(spark, tmpdir):
     processes through the TCP gateway — no driver-side collect in the
     data path — and the mock applies the same md5-keyspace routing and
     per-shard sequencing as the direct-call path."""
-    from wallaroo_spark.sources.kinesis import (
-        KinesisWireGateway,
-        kinesis_put_sink_wire,
-    )
-
     stream = MockKinesisStream(shards=4)
     gw = KinesisWireGateway(stream).start()
     try:

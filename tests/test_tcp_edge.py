@@ -33,7 +33,7 @@ from wallaroo_spark.sources.kafka_wire import KafkaWireReceiver, MiniKafkaBroker
 from wallaroo_spark.sources.kinesis import KinesisShardReceiver, MockKinesisStream
 from wallaroo_spark.sources.rabbitmq import AMQPQueueReceiver, MockAMQPBroker
 from wallaroo_spark.sources.redis import MiniRedis, RedisSubscriberReceiver
-from wallaroo_spark.sources.udp import UDPDatagramReceiver
+from wallaroo_spark.sources.udp import DatagramCollector, UDPDatagramReceiver
 
 T0 = dt.datetime(2024, 1, 1, tzinfo=dt.timezone.utc)
 N_PER_KEY = 100
@@ -277,6 +277,7 @@ def test_decoder_filter_drops_malformed_frames(spark):
         struct.pack(">IqI", 14, 0, 2) + b"\xff\xfe",   # invalid utf-8 key
         struct.pack(">IqI", 20, 0, 0xFFFFFFFF) + b"\x00" * 8,  # key length u32 max
         struct.pack(">IqI", 0xFFFFFFFF, 0, 1) + b"a" * 8,      # total length u32 max
+        codec.encode_frame(1 << 62, b"k", b"x"),     # event time past timestamp range
     ]
     frames = [f for pair in itertools.zip_longest(good, bad + [b"\x00"])
               for f in pair if f is not None]
@@ -291,10 +292,9 @@ def test_decoder_filter_drops_malformed_frames(spark):
         codec.decode_frames(df).collect()  # strict mode still surfaces it
 
 
-def _started_receiver(kind, spool, stack):
-    """A started ``kind`` receiver on ``spool`` (with the mock server it
-    needs), stopped when ``stack`` closes. Nothing is sent to it: the test
-    calls its ``_flush`` directly."""
+def _receiver(kind, spool, stack):
+    """A ``kind`` receiver on ``spool``, not started; the mock server it
+    needs is started and stopped when ``stack`` closes."""
     if kind == "tcp":
         rx = FramedTCPReceiver(spool)
     elif kind == "udp":
@@ -312,7 +312,14 @@ def _started_receiver(kind, spool, stack):
         stack.callback(broker.stop)
         broker.create_topic("t", partitions=1)
         rx = KafkaWireReceiver(spool, broker.host, broker.port, "t", 0)
-    rx.start()
+    return rx
+
+
+def _started_receiver(kind, spool, stack):
+    """A started ``kind`` receiver on ``spool`` (with the mock server it
+    needs), stopped when ``stack`` closes. Nothing is sent to it: the test
+    calls its ``_flush`` directly."""
+    rx = _receiver(kind, spool, stack).start()
     stack.callback(rx.stop)
     return rx
 
@@ -396,3 +403,69 @@ def test_spool_files_read_in_flush_order(spark, tmpdir, kind):
     assert len(names) == 48
     mtimes = [os.stat(tmpdir + "/spool2/" + n).st_mtime_ns // 1_000_000 for n in names]
     assert all(b > a for a, b in zip(mtimes, mtimes[1:])), mtimes
+
+
+@pytest.mark.parametrize("kind", [*SPOOL_RECEIVERS, "frame_collector", "datagram_collector"])
+def test_receiver_stop_before_start_is_clean(tmpdir, kind):
+    """stop() on a receiver or sink collector that was never started is a
+    no-op, however often it is called: no join error and nothing spooled.
+    Every receiver and collector shares one lifecycle."""
+    import contextlib
+    import os
+
+    spool = tmpdir + "/spool"
+    with contextlib.ExitStack() as stack:
+        if kind == "frame_collector":
+            rx = FrameCollector()
+        elif kind == "datagram_collector":
+            rx = DatagramCollector()
+        else:
+            rx = _receiver(kind, spool, stack)
+        rx.stop()
+        rx.stop()
+    assert not os.path.exists(spool) or os.listdir(spool) == []
+
+
+def test_concurrent_connections_share_one_buffer(tmpdir):
+    """All connections of a receiver feed one pending buffer, flushed by
+    count from the connection threads and by the idle flusher. Under
+    concurrent senders and a short switch interval, every frame lands
+    exactly once, and each connection's frames keep their send order
+    across the spool files read in index order."""
+    import os
+    import sys
+    import threading
+
+    import pyarrow.parquet as pq
+
+    n_conns, per_conn = 8, 300
+    sent = [
+        [struct.pack(">I", 8) + struct.pack(">II", c, i) for i in range(per_conn)]
+        for c in range(n_conns)
+    ]
+    rx = FramedTCPReceiver(tmpdir + "/spool", flush_every=64, idle_flush_s=0.01).start()
+    old_interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        senders = [
+            threading.Thread(target=send_frames, args=(frames, rx.host, rx.port))
+            for frames in sent
+        ]
+        for t in senders:
+            t.start()
+        for t in senders:
+            t.join(timeout=60)
+        assert not any(t.is_alive() for t in senders)
+        assert rx.wait_for(n_conns * per_conn, timeout_s=30) == n_conns * per_conn
+    finally:
+        sys.setswitchinterval(old_interval)
+        rx.stop()
+
+    got = [
+        bytes(f)
+        for name in sorted(os.listdir(tmpdir + "/spool"))
+        for f in pq.read_table(tmpdir + "/spool/" + name).column("frame").to_pylist()
+    ]
+    assert sorted(got) == sorted(f for frames in sent for f in frames)
+    for c in range(n_conns):
+        assert [f for f in got if f[4:8] == struct.pack(">I", c)] == sent[c]

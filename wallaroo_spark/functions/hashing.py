@@ -74,8 +74,18 @@ def det_round_col(c: Column, d: int = 2) -> Column:
     the raw double flips between decimal-exact and multiply-based libm
     implementations precisely there. Pair with ``det_round_sql`` in the
     oracle; the pane queries (`sliding_window_sum_panes`) proved the
-    pattern driver-green in r15."""
-    return F.round(c.cast("decimal(38,12)"), d).cast("double")
+    pattern driver-green in r15.
+
+    Spark casts a double to DECIMAL through its shortest decimal string,
+    which can cross a half boundary the exact binary value does not
+    (``268435456.6352215`` casts to ``...635221500000``, exactly
+    ``...6352214813``). So the whole part and the fraction are cast apart:
+    ``c % 1`` is exact and keeps ``c``'s sign (half-up stays symmetric),
+    and a fraction's shortest string carries ~17 significant digits, far
+    past scale 12. The whole part keeps DECIMAL(38,12)'s 26 digits."""
+    frac = c % 1
+    whole = (c - frac).cast("decimal(26,0)")
+    return (whole + F.round(frac.cast("decimal(38,12)"), d)).cast("double")
 
 
 def det_round_sql(expr: str, d: int = 2) -> str:

@@ -163,7 +163,7 @@ def _parts_matcher(parts: dict):
     per-(col, B) bucket sets, derived lazily since B is only known from a
     file's own segment) are built up front — at 1e5 snapshot files the
     naive per-file set rebuild was the dominant probe-metadata cost
-    (measured in tools/manifest_replay_study.py)."""
+    (SCALE.md, "Manifest metadata at 1e4-1e5 committed files")."""
     allowed_plain = {
         col: ({str(v) for v in vals if v is not None},
               any(v is None for v in vals))

@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 
 
 FRAME_HEADER = ">IqI"  # u32 total payload len, i64 event_time_ms, u32 key_len
+_MAX_TS_MS = (1 << 63) // 1000  # timestamp_millis keeps microseconds in a long
 
 
 def encode_frame(event_time_ms: int, key: bytes, payload: bytes) -> bytes:
@@ -49,7 +50,8 @@ def decode_frames(
 
     ``drop_malformed=True`` gives the reference's decoder-filter semantics
     (`testing/correctness/apps/decoder_filter`): a frame the decoder cannot
-    parse (truncated header, key length past the buffer, invalid utf-8) is
+    parse (truncated header, key length past the buffer, invalid utf-8,
+    an event time outside the timestamp range) is
     silently filtered instead of failing the job — the behavior a live
     socket edge needs when peers send garbage or keepalives. Without it a
     malformed frame fails the job."""
@@ -61,15 +63,18 @@ def decode_frames(
     # whose u32 lengths disagree with its size never reaches them
     sized = header & (12 + klen <= total) & (4 + total <= F.octet_length(frame))
     key_raw = F.when(sized, F.substring(frame, 17, klen.cast("int")).cast("string"))
-    ok = F.coalesce(sized & F.is_valid_utf8(key_raw), F.lit(False))
-    # i64 event time: signed high word * 2^32 + unsigned low word
+    # i64 event time: signed high word * 2^32 + unsigned low word; a time
+    # whose microseconds overflow a long (|ms| > ~292,000 years) has no
+    # timestamp, so its frame is malformed too
     hi, lo = _u32(frame, 5), _u32(frame, 9)
     ts_ms = F.when(hi >= 1 << 31, hi - (1 << 32)).otherwise(hi) * (1 << 32) + lo
+    ts_ok = ts_ms.between(-_MAX_TS_MS, _MAX_TS_MS)
+    ok = F.coalesce(sized & F.is_valid_utf8(key_raw) & ts_ok, F.lit(False))
     payload = F.substring(frame, (17 + klen).cast("int"), (total - 12 - klen).cast("int"))
     keep = F.col("_ok")
     if not drop_malformed:  # a filter, so no column pruning skips the check
         keep = F.when(keep, True).otherwise(
-            F.raise_error(F.lit("malformed frame: lengths or utf-8 key invalid")))
+            F.raise_error(F.lit("malformed frame: lengths, utf-8 key or event time invalid")))
     return (
         df.select(
             F.when(ok, F.timestamp_millis(ts_ms)).alias("event_ts"),

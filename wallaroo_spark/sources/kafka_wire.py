@@ -44,11 +44,10 @@ import struct
 import threading
 import time
 import zlib
-from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
-from wallaroo_spark.sources.spool import SpoolWriter
+from wallaroo_spark.sources.spool import Listener, Receiver, read_exact
 
 API_PRODUCE = 0
 API_FETCH = 1
@@ -172,24 +171,15 @@ def partition_for(key: bytes | None, n: int) -> int:
 # broker
 # ---------------------------------------------------------------------------
 
-class MiniKafkaBroker:
+class MiniKafkaBroker(Listener):
     """In-process broker speaking Metadata/Produce/Fetch/ListOffsets v0
     over real sockets. Topic logs are in-memory lists per partition;
     offsets are dense from 0; produce validates every record's CRC."""
 
     def __init__(self, host: str = "127.0.0.1", port: int = 0):
-        import socket as _socket
-
+        super().__init__(self._handle, host, port)
         self._logs: dict[str, list[list[tuple[bytes | None, bytes | None, int]]]] = {}
         self._lock = threading.Lock()
-        self._srv = _socket.socket(_socket.AF_INET, _socket.SOCK_STREAM)
-        self._srv.setsockopt(_socket.SOL_SOCKET, _socket.SO_REUSEADDR, 1)
-        self._srv.bind((host, port))
-        self._srv.listen(32)
-        self.host, self.port = self._srv.getsockname()
-        self._stop = threading.Event()
-        self._threads: list[threading.Thread] = []
-        self._accept = threading.Thread(target=self._serve, daemon=True)
 
     # --- admin ---
     def create_topic(self, topic: str, partitions: int = 2) -> None:
@@ -197,40 +187,15 @@ class MiniKafkaBroker:
             if topic not in self._logs:
                 self._logs[topic] = [[] for _ in range(partitions)]
 
-    def start(self) -> "MiniKafkaBroker":
-        self._accept.start()
-        return self
-
-    def stop(self) -> None:
-        self._stop.set()
-        try:
-            self._srv.close()
-        except OSError:
-            pass
-        if self._accept.ident is not None:
-            self._accept.join(timeout=2)
-        for t in self._threads:
-            t.join(timeout=2)
-
     # --- socket plumbing ---
-    def _serve(self) -> None:
-        while not self._stop.is_set():
-            try:
-                conn, _ = self._srv.accept()
-            except OSError:
-                break
-            t = threading.Thread(target=self._handle, args=(conn,), daemon=True)
-            t.start()
-            self._threads.append(t)
-
     def _handle(self, conn) -> None:
         try:
             while True:
-                hdr = _read_exact(conn, 4)
+                hdr = read_exact(conn, 4)
                 if hdr is None:
                     break
                 size = struct.unpack(">i", hdr)[0]
-                payload = _read_exact(conn, size)
+                payload = read_exact(conn, size)
                 if payload is None:
                     break
                 r = _Reader(payload)
@@ -241,13 +206,8 @@ class MiniKafkaBroker:
                 body = self._dispatch(api_key, r)
                 resp = struct.pack(">i", corr) + body
                 conn.sendall(struct.pack(">i", len(resp)) + resp)
-        except (OSError, ValueError):
-            pass
-        finally:
-            try:
-                conn.close()
-            except OSError:
-                pass
+        except ValueError:
+            pass  # a malformed request ends the connection
 
     # --- request handlers ---
     def _dispatch(self, api_key: int, r: _Reader) -> bytes:
@@ -398,16 +358,6 @@ class MiniKafkaBroker:
         return out
 
 
-def _read_exact(conn, n: int) -> bytes | None:
-    buf = b""
-    while len(buf) < n:
-        chunk = conn.recv(n - len(buf))
-        if not chunk:
-            return None
-        buf += chunk
-    return buf
-
-
 # ---------------------------------------------------------------------------
 # client
 # ---------------------------------------------------------------------------
@@ -437,10 +387,10 @@ class KafkaWireClient:
             + body
         )
         self._sock.sendall(struct.pack(">i", len(req)) + req)
-        hdr = _read_exact(self._sock, 4)
+        hdr = read_exact(self._sock, 4)
         if hdr is None:
             raise ConnectionError("broker closed")
-        payload = _read_exact(self._sock, struct.unpack(">i", hdr)[0])
+        payload = read_exact(self._sock, struct.unpack(">i", hdr)[0])
         if payload is None:
             raise ConnectionError("broker closed mid-response")
         r = _Reader(payload)
@@ -533,10 +483,11 @@ class KafkaWireClient:
 # Spark edges: receiver (consumer -> spool) and executor-side producer sink
 # ---------------------------------------------------------------------------
 
-class KafkaWireReceiver:
+class KafkaWireReceiver(Receiver):
     """Consume ONE partition over the wire into a parquet spool — the
     reference's consumer-per-partition shape, landing the connector
-    column set (key, value, ts_ms, topic, partition, offset)."""
+    column set (key, value, ts_ms, topic, partition, offset). Each
+    fetch's records land as one spool file."""
 
     def __init__(
         self,
@@ -548,21 +499,15 @@ class KafkaWireReceiver:
         poll_s: float = 0.05,
         from_earliest: bool = True,
     ):
-        self.spool = Path(spool_dir)
+        super().__init__(spool_dir, "records", self._poll)
         self.topic, self.partition = topic, partition
         self._client = KafkaWireClient(host, port)
         self._offset = self._client.list_offset(
             topic, partition, earliest=from_earliest
         )
         self.poll_s = poll_s
-        self.records_received = 0
-        self._writer = SpoolWriter(self.spool, "records")
-        self._stop = threading.Event()
-        self._thread = threading.Thread(target=self._poll, daemon=True)
 
-    def start(self) -> "KafkaWireReceiver":
-        self._thread.start()
-        return self
+    records_received = property(lambda self: self._received)
 
     def _poll(self) -> None:
         while not self._stop.is_set():
@@ -571,43 +516,29 @@ class KafkaWireReceiver:
                     self.topic, self.partition, self._offset
                 )
             except (ConnectionError, ValueError, OSError):
-                break
+                return
             if recs:
                 self._flush(recs)
                 self._offset = recs[-1][0] + 1
             else:
-                time.sleep(self.poll_s)
+                self._stop.wait(self.poll_s)
 
-    def _flush(self, recs) -> None:
+    def _close(self) -> None:
+        self._client.close()
+
+    def _table(self, recs):
         import pyarrow as pa
 
-        self._writer.publish(
-            pa.table(
-                {
-                    "key": pa.array([k for _, k, _v, _t in recs], type=pa.binary()),
-                    "value": pa.array([v for _, _k, v, _t in recs], type=pa.binary()),
-                    "ts_ms": pa.array([t for *_x, t in recs], type=pa.int64()),
-                    "topic": pa.array([self.topic] * len(recs)),
-                    "partition": pa.array([self.partition] * len(recs), type=pa.int32()),
-                    "offset": pa.array([o for o, *_x in recs], type=pa.int64()),
-                }
-            )
+        return pa.table(
+            {
+                "key": pa.array([k for _, k, _v, _t in recs], type=pa.binary()),
+                "value": pa.array([v for _, _k, v, _t in recs], type=pa.binary()),
+                "ts_ms": pa.array([t for *_x, t in recs], type=pa.int64()),
+                "topic": pa.array([self.topic] * len(recs)),
+                "partition": pa.array([self.partition] * len(recs), type=pa.int32()),
+                "offset": pa.array([o for o, *_x in recs], type=pa.int64()),
+            }
         )
-        self.records_received += len(recs)
-
-    def wait_for(self, n: int, timeout_s: float = 30.0) -> int:
-        deadline = time.monotonic() + timeout_s
-        while time.monotonic() < deadline:
-            if self.records_received >= n:
-                return self.records_received
-            time.sleep(0.02)
-        return self.records_received
-
-    def stop(self) -> None:
-        self._stop.set()
-        if self._thread.ident is not None:
-            self._thread.join(timeout=2)
-        self._client.close()
 
 
 _SPOOL_SCHEMA = (

@@ -22,22 +22,20 @@ double — the `kafka_mock.MockBroker` posture for Kinesis's contract:
 ``KinesisShardReceiver`` mirrors the reference's one-process-per-shard
 source: poll one shard, spool records to parquet (``data`` binary +
 ``partition_key`` string + ``seq`` long), the TCP/UDP/Redis/AMQP spool
-discipline. ``kinesis_put_sink`` mirrors the sink's put_record loop; like
-`kafka_mock.mock_kafka_sink` it collects each micro-batch on the driver
-(the mock stream is in-process state — NOT a data-path component; a real
-deployment's boto3 client writes executor-side like the UDP/Redis sinks).
+discipline. ``kinesis_put_sink_wire`` mirrors the sink's put_record loop
+from the executors, through ``KinesisWireGateway`` (a socket front for
+the in-process mock stream), as a real boto3 producer would.
 """
 
 from __future__ import annotations
 
 import hashlib
+import struct
 import threading
-import time
-from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
-from wallaroo_spark.sources.spool import SpoolWriter
+from wallaroo_spark.sources.spool import Listener, Receiver, read_exact
 
 _KEYSPACE = 1 << 128  # Kinesis routes md5(partition_key) over [0, 2^128)
 
@@ -112,12 +110,13 @@ class MockKinesisStream:
         }
 
 
-class KinesisShardReceiver:
+class KinesisShardReceiver(Receiver):
     """Poll ONE shard into a parquet spool — the reference's
     one-connector-process-per-shard shape (`connectors/kinesis_source`
-    takes ``shard`` as a required param). Spool columns: ``data`` binary,
-    ``partition_key`` string, ``seq`` long. Reference parity note: the
-    reference opens its iterator at LATEST (records put before the
+    takes ``shard`` as a required param). Each poll's records (at most
+    ``flush_every``) land as one spool file. Spool columns: ``data``
+    binary, ``partition_key`` string, ``seq`` long. Reference parity note:
+    the reference opens its iterator at LATEST (records put before the
     connector starts are never seen); TRIM_HORIZON is the replay-friendly
     default here — pass ``iterator_type="LATEST"`` for the reference's
     exact behavior."""
@@ -131,21 +130,13 @@ class KinesisShardReceiver:
         poll_s: float = 0.02,
         flush_every: int = 64,
     ):
-        self.spool = Path(spool_dir)
+        super().__init__(spool_dir, "records", self._poll, flush_every)
         self.stream = stream
         self.shard_id = shard_id
         self._it = stream.get_shard_iterator(shard_id, iterator_type)
         self.poll_s = poll_s
-        self.flush_every = flush_every
-        self.records_received = 0
-        self._writer = SpoolWriter(self.spool, "records")
-        self._lock = threading.Lock()
-        self._stop = threading.Event()
-        self._thread = threading.Thread(target=self._poll, daemon=True)
 
-    def start(self) -> "KinesisShardReceiver":
-        self._thread.start()
-        return self
+    records_received = property(lambda self: self._received)
 
     def _poll(self) -> None:
         while not self._stop.is_set():
@@ -161,28 +152,14 @@ class KinesisShardReceiver:
         if out["Records"]:
             self._flush(out["Records"])
 
-    def _flush(self, recs: list[dict]) -> None:
+    def _table(self, recs: list[dict]):
         import pyarrow as pa
 
-        self._writer.publish(pa.table({
+        return pa.table({
             "data": pa.array([r["Data"] for r in recs], pa.binary()),
             "partition_key": pa.array([r["PartitionKey"] for r in recs], pa.string()),
             "seq": pa.array([r["SequenceNumber"] for r in recs], pa.int64()),
-        }))
-        with self._lock:
-            self.records_received += len(recs)
-
-    def wait_for(self, n: int, timeout_s: float = 30.0) -> int:
-        deadline = time.monotonic() + timeout_s
-        while time.monotonic() < deadline:
-            if self.records_received >= n:
-                return self.records_received
-            time.sleep(0.02)
-        return self.records_received
-
-    def stop(self) -> None:
-        self._stop.set()
-        self._thread.join(timeout=5)
+        })
 
 
 def record_stream(spark: SparkSession, spool_dir: str) -> DataFrame:
@@ -198,32 +175,12 @@ def record_batch(spark: SparkSession, spool_dir: str) -> DataFrame:
     ).parquet(spool_dir)
 
 
-def kinesis_put_sink(stream: MockKinesisStream, key_col: str, data_col: str):
-    """foreachBatch fn: put_record per row (`connectors/kinesis_sink`'s
-    loop), direct-to-object variant for driver-process tests. Collects
-    each micro-batch on the driver because the bare mock stream is
-    in-process state — MOCK-ONLY posture, never a data-path shape.
-    Production posture: `kinesis_put_sink_wire` + `KinesisWireGateway`
-    (r16) puts from the executors over a socket like a real boto3
-    producer, with zero driver-side collect."""
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        for row in batch_df.select(key_col, data_col).collect():
-            d = row[data_col]
-            data = bytes(d) if isinstance(d, (bytes, bytearray)) else str(d).encode()
-            stream.put_record(str(row[key_col]), data)
-
-    return sink
-
-
-class KinesisWireGateway:
+class KinesisWireGateway(Listener):
     """TCP front for ``MockKinesisStream.put_record`` so EXECUTOR
-    processes can put records (r16, VERDICT r15 #6): the old sink
-    collected each micro-batch to the driver because the mock is
-    in-process state — acceptable for a mock, but the wrong posture to
-    demonstrate (a real boto3 producer writes executor-side). This
-    gateway gives the mock a wire, the same wire-level-mock discipline
-    as MiniRedis, so the sink's data path is the production shape:
+    processes can put records: a real boto3 producer writes
+    executor-side, and the mock is in-process state, so this gateway
+    gives it a wire (the same wire-level-mock discipline as MiniRedis).
+    The sink's data path is then the production shape:
     ``foreachPartition`` -> socket -> service.
 
     Frame protocol (one connection, many puts):
@@ -233,77 +190,22 @@ class KinesisWireGateway:
 
     def __init__(self, stream: MockKinesisStream, host: str = "127.0.0.1",
                  port: int = 0):
-        import socket as _socket
-
+        super().__init__(self._handle, host, port)
         self.stream = stream
-        self._srv = _socket.socket(_socket.AF_INET, _socket.SOCK_STREAM)
-        self._srv.setsockopt(_socket.SOL_SOCKET, _socket.SO_REUSEADDR, 1)
-        self._srv.bind((host, port))
-        self._srv.listen(32)
-        self.host, self.port = self._srv.getsockname()
-        self._stop = threading.Event()
-        self._threads: list[threading.Thread] = []
-        self._accept = threading.Thread(target=self._serve, daemon=True)
-
-    def start(self) -> "KinesisWireGateway":
-        self._accept.start()
-        return self
-
-    def _serve(self) -> None:
-        while not self._stop.is_set():
-            try:
-                conn, _ = self._srv.accept()
-            except OSError:
-                break
-            t = threading.Thread(target=self._handle, args=(conn,), daemon=True)
-            t.start()
-            self._threads.append(t)
 
     def _handle(self, conn) -> None:
-        import struct
+        while True:
+            key, data = _read_field(conn), _read_field(conn)
+            if key is None or data is None:
+                return
+            shard_id, seq = self.stream.put_record(key.decode(), data)
+            conn.sendall(struct.pack(">IQ", int(shard_id.rsplit("-", 1)[-1]), seq))
 
-        def read_exact(n: int) -> bytes | None:
-            buf = b""
-            while len(buf) < n:
-                chunk = conn.recv(n - len(buf))
-                if not chunk:
-                    return None
-                buf += chunk
-            return buf
 
-        try:
-            while True:
-                hdr = read_exact(4)
-                if hdr is None:
-                    break
-                key = read_exact(struct.unpack(">I", hdr)[0])
-                dlen = read_exact(4)
-                if key is None or dlen is None:
-                    break
-                data = read_exact(struct.unpack(">I", dlen)[0])
-                if data is None:
-                    break
-                shard_id, seq = self.stream.put_record(key.decode(), data)
-                s = int(shard_id.rsplit("-", 1)[-1])
-                conn.sendall(struct.pack(">IQ", s, seq))
-        except OSError:
-            pass
-        finally:
-            try:
-                conn.close()
-            except OSError:
-                pass
-
-    def stop(self) -> None:
-        self._stop.set()
-        try:
-            self._srv.close()
-        except OSError:
-            pass
-        if self._accept.ident is not None:
-            self._accept.join(timeout=2)
-        for t in self._threads:
-            t.join(timeout=2)
+def _read_field(conn) -> bytes | None:
+    """One ``>I`` length-prefixed field of the gateway protocol."""
+    n = read_exact(conn, 4)
+    return None if n is None else read_exact(conn, struct.unpack(">I", n)[0])
 
 
 def kinesis_put_sink_wire(host: str, port: int, key_col: str, data_col: str):
@@ -313,7 +215,6 @@ def kinesis_put_sink_wire(host: str, port: int, key_col: str, data_col: str):
     like the UDP/Redis sinks). No driver-side collect anywhere in the
     data path; responses are drained per put so server backpressure
     propagates to the writer."""
-    import struct
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         def send_partition(rows) -> None:
@@ -334,12 +235,8 @@ def kinesis_put_sink_wire(host: str, port: int, key_col: str, data_col: str):
                         struct.pack(">I", len(key)) + key
                         + struct.pack(">I", len(data)) + data
                     )
-                    resp = b""
-                    while len(resp) < 12:
-                        chunk = sock.recv(12 - len(resp))
-                        if not chunk:
-                            raise ConnectionError("gateway closed mid-put")
-                        resp += chunk
+                    if read_exact(sock, 12) is None:
+                        raise ConnectionError("gateway closed mid-put")
             finally:
                 if sock is not None:
                     sock.close()

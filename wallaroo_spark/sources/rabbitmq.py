@@ -30,20 +30,18 @@ the handshake/frame state machine is a protocol stack, not a loop).
     id makes the pipeline effectively-once (pytest replays the crash
     window and pins the dedup).
 
-``message_stream`` / ``message_batch`` read the spool.
+``message_stream`` / ``message_batch`` read the spool (the Redis edge's
+readers: both spools have the same ``message`` layout).
 """
 
 from __future__ import annotations
 
 import itertools
 import threading
-import time
 from collections import deque
-from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession
-
-from wallaroo_spark.sources.spool import SpoolWriter
+from wallaroo_spark.sources.redis import message_batch, message_stream  # noqa: F401
+from wallaroo_spark.sources.spool import Receiver
 
 
 class MockAMQPBroker:
@@ -142,7 +140,7 @@ class MockAMQPBroker:
             return len(self._unacked)
 
 
-class AMQPQueueReceiver:
+class AMQPQueueReceiver(Receiver):
     """Consume a queue into a parquet spool. See module docstring for the
     two ack modes. ``crash_after_ack`` / ``crash_before_ack`` are test
     hooks that simulate the consumer dying inside each mode's window —
@@ -162,37 +160,24 @@ class AMQPQueueReceiver:
         crash_before_ack: bool = False,
         crash_after_ack: bool = False,
     ):
-        self.spool = Path(spool_dir)
+        super().__init__(spool_dir, "messages", self._consume, flush_every, idle_flush_s)
         self.broker = broker
         self.queue = queue
         self.ack_after_commit = ack_after_commit
-        self.flush_every = flush_every
-        self.idle_flush_s = idle_flush_s
         self._crash_before_ack = crash_before_ack
         self._crash_after_ack = crash_after_ack
-        self.messages_received = 0
         self.crashed = False
-        self._writer = SpoolWriter(self.spool, "messages")
-        self._lock = threading.Lock()
-        self._stop = threading.Event()
-        self._thread = threading.Thread(target=self._consume, daemon=True)
+
+    messages_received = property(lambda self: self._received)
 
     def start(self) -> "AMQPQueueReceiver":
         self.broker.queue_declare(self.queue)
-        self._thread.start()
-        return self
+        return super().start()
 
     def _consume(self) -> None:
-        pending: list[bytes] = []
-        tags: list[int] = []
         while not self._stop.is_set():
             got = self.broker.basic_get(self.queue)
             if got is None:
-                if pending:
-                    self._commit(pending, tags)
-                    if self.crashed:
-                        return
-                    pending, tags = [], []
                 self._stop.wait(self.idle_flush_s)
                 continue
             tag, body = got
@@ -202,62 +187,31 @@ class AMQPQueueReceiver:
                 # at-most-once loss window lives right here
                 self.broker.basic_ack(tag)
                 if self._crash_after_ack:
-                    self.crashed = True  # acked, never spooled: message LOST
+                    self._crash()  # acked, never spooled: message LOST
                     return
-            else:
-                tags.append(tag)
-            pending.append(body)
-            if len(pending) >= self.flush_every:
-                self._commit(pending, tags)
-                if self.crashed:
-                    return
-                pending, tags = [], []
-        if pending:
-            self._commit(pending, tags)
+            self._add((tag, body))
 
-    def _commit(self, pending: list[bytes], tags: list[int]) -> None:
-        self._flush(pending)
+    def _commit(self, items: list[tuple[int, bytes]]) -> None:
+        self._flush([body for _tag, body in items])
         if self.ack_after_commit:
             if self._crash_before_ack:
                 # flushed but NOT acked: the broker will redeliver —
                 # the duplicate-in-spool window of at-least-once
-                self.crashed = True
+                self._crash()
                 return
-            for t in tags:
-                self.broker.basic_ack(t)
+            for tag, _body in items:
+                self.broker.basic_ack(tag)
 
-    def _flush(self, messages: list[bytes]) -> None:
+    def _crash(self) -> None:
+        """The consumer dies: its loops exit and ``wait_for`` returns."""
+        self.crashed = True
+        self._stop.set()
+
+    def _table(self, messages: list[bytes]):
         import pyarrow as pa
 
-        self._writer.publish(pa.table({"message": pa.array(messages, type=pa.binary())}))
-        with self._lock:
-            self.messages_received += len(messages)
-
-    def wait_for(self, n: int, timeout_s: float = 30.0) -> int:
-        deadline = time.monotonic() + timeout_s
-        while time.monotonic() < deadline:
-            if self.messages_received >= n or self.crashed:
-                return self.messages_received
-            time.sleep(0.02)
-        return self.messages_received
+        return pa.table({"message": pa.array(messages, type=pa.binary())})
 
     def wait_crashed(self, timeout_s: float = 30.0) -> bool:
-        deadline = time.monotonic() + timeout_s
-        while time.monotonic() < deadline:
-            if self.crashed:
-                return True
-            time.sleep(0.02)
-        return False
-
-    def stop(self) -> None:
-        self._stop.set()
-        self._thread.join(timeout=2)
-
-
-def message_stream(spark: SparkSession, spool_dir: str) -> DataFrame:
-    """Streaming view of the spool (binary `message` column)."""
-    return spark.readStream.schema("message binary").parquet(spool_dir)
-
-
-def message_batch(spark: SparkSession, spool_dir: str) -> DataFrame:
-    return spark.read.schema("message binary").parquet(spool_dir)
+        self._stop.wait(timeout_s)  # a crash stops the receiver
+        return self.crashed

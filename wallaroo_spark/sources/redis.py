@@ -30,12 +30,10 @@ from __future__ import annotations
 
 import socket
 import threading
-import time
-from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
-from wallaroo_spark.sources.spool import SpoolWriter
+from wallaroo_spark.sources.spool import Listener, Receiver
 
 _CRLF = b"\r\n"
 
@@ -115,7 +113,7 @@ class RespClient:
             self._sock.close()
 
 
-class MiniRedis:
+class MiniRedis(Listener):
     """Embedded RESP server: hashes + pub/sub, the connector command set.
 
     Per-connection reader threads; published messages are pushed to each
@@ -123,36 +121,17 @@ class MiniRedis:
     receive nothing else, so pushes never interleave with replies)."""
 
     def __init__(self, host: str = "127.0.0.1", port: int = 0):
-        self._srv = socket.socket(socket.AF_INET, socket.SOCK_STREAM)
-        self._srv.setsockopt(socket.SOL_SOCKET, socket.SO_REUSEADDR, 1)
-        self._srv.bind((host, port))
-        self._srv.listen(16)
-        self.host, self.port = self._srv.getsockname()
+        super().__init__(self._handle, host, port)
         self.hashes: dict[bytes, dict[bytes, bytes]] = {}
         self._subs: dict[bytes, list[tuple[socket.socket, threading.Lock]]] = {}
         self._lock = threading.Lock()
-        self._stop = threading.Event()
-        self._thread = threading.Thread(target=self._serve, daemon=True)
-
-    def start(self) -> "MiniRedis":
-        self._thread.start()
-        return self
-
-    def _serve(self) -> None:
-        self._srv.settimeout(0.2)
-        while not self._stop.is_set():
-            try:
-                conn, _ = self._srv.accept()
-            except (socket.timeout, OSError):
-                continue
-            threading.Thread(target=self._handle, args=(conn,), daemon=True).start()
 
     def _handle(self, conn: socket.socket) -> None:
         f = conn.makefile("rb")
         wlock = threading.Lock()
         subscribed: list[bytes] = []
         try:
-            while not self._stop.is_set():
+            while True:
                 try:
                     cmd = _read_reply(f)
                 except (ConnectionError, OSError, RuntimeError):
@@ -174,10 +153,7 @@ class MiniRedis:
                     self._subs.get(ch, [])[:] = [
                         s for s in self._subs.get(ch, []) if s[0] is not conn
                     ]
-            try:
-                f.close()
-            finally:
-                conn.close()
+            f.close()
 
     def _dispatch(self, conn, wlock, subscribed, name, args) -> bool:
         def reply(data: bytes) -> None:
@@ -247,13 +223,8 @@ class MiniRedis:
         with self._lock:
             return dict(self.hashes.get(k, {}))
 
-    def stop(self) -> None:
-        self._stop.set()
-        self._thread.join(timeout=2)
-        self._srv.close()
 
-
-class RedisSubscriberReceiver:
+class RedisSubscriberReceiver(Receiver):
     """SUBSCRIBE ``channel`` and spool every published payload to parquet
     (binary ``message`` column) — `connectors/redis_subscriber_source`'s
     pubsub.listen() loop, landing in the replayable-spool shape the
@@ -270,88 +241,44 @@ class RedisSubscriberReceiver:
         flush_every: int = 256,
         idle_flush_s: float = 0.25,
     ):
-        self.spool = Path(spool_dir)
+        super().__init__(spool_dir, "messages", self._listen, flush_every, idle_flush_s)
         self.channel = channel.encode()
         self._client = RespClient(host, port)
-        self.flush_every = flush_every
-        self.idle_flush_s = idle_flush_s
-        self.messages_received = 0
-        self._writer = SpoolWriter(self.spool, "messages")
-        self._lock = threading.Lock()
-        self._stop = threading.Event()
-        self._thread = threading.Thread(target=self._listen, daemon=True)
-        # r16 (ADVICE r15): _pending and the flusher handle are created
-        # HERE, not in start() — stop() (or any _drain) on a
-        # constructed-but-never-started receiver must be a clean no-op,
-        # not an AttributeError/RuntimeError
-        self._pending: list[bytes] = []
-        self._flusher = threading.Thread(target=self._idle_flush, daemon=True)
+
+    messages_received = property(lambda self: self._received)
 
     def start(self) -> "RedisSubscriberReceiver":
         sub = self._client.command("SUBSCRIBE", self.channel)
         assert isinstance(sub, list) and bytes(sub[0]) == b"subscribe", sub
         # NO socket timeout on the reader: a timeout mid-push would corrupt
         # the buffered-file state (makefile + timeouts lose data by
-        # contract). The reader blocks; stop() unblocks it by closing the
-        # socket; a separate flusher thread owns the idle flush.
-        self._thread.start()
-        self._flusher.start()
-        return self
+        # contract). The reader blocks and stop() unblocks it; the
+        # receiver's idle flusher owns the idle flush.
+        return super().start()
 
     def _listen(self) -> None:
         while True:
             try:
                 push = self._client.read_push()
             except (ConnectionError, OSError, RuntimeError, ValueError):
-                break
+                return
             if (
                 isinstance(push, list)
                 and len(push) == 3
                 and bytes(push[0]) == b"message"
             ):
-                flush_now = None
-                with self._lock:
-                    self._pending.append(bytes(push[2]))
-                    if len(self._pending) >= self.flush_every:
-                        flush_now, self._pending = self._pending, []
-                if flush_now:
-                    self._flush(flush_now)
-        self._drain()
+                self._add(bytes(push[2]))
 
-    def _idle_flush(self) -> None:
-        while not self._stop.wait(self.idle_flush_s):
-            self._drain()
+    def _wake(self) -> None:
+        self._client.shutdown()  # EOF the blocked reader (close would deadlock)
 
-    def _drain(self) -> None:
-        with self._lock:
-            batch, self._pending = self._pending, []
-        if batch:
-            self._flush(batch)
+    def _close(self) -> None:
+        self._client.close()
 
-    def _flush(self, messages: list[bytes]) -> None:
+    def _table(self, messages: list[bytes]):
         import pyarrow as pa
 
-        self._writer.publish(pa.table({"message": pa.array(messages, type=pa.binary())}))
-        with self._lock:
-            self.messages_received += len(messages)
-
-    def wait_for(self, n: int, timeout_s: float = 30.0) -> int:
-        deadline = time.monotonic() + timeout_s
-        while time.monotonic() < deadline:
-            if self.messages_received >= n:
-                return self.messages_received
-            time.sleep(0.05)
-        return self.messages_received
-
-    def stop(self) -> None:
-        self._stop.set()
-        self._client.shutdown()  # EOF the blocked reader (close would deadlock)
-        if self._thread.ident is not None:  # never-started: nothing to join
-            self._thread.join(timeout=2)
-        if self._flusher.ident is not None:
-            self._flusher.join(timeout=2)
-        self._client.close()
-        self._drain()
+        return pa.table({"message": pa.array(messages, type=pa.binary())})
 
 
 def publish(host: str, port: int, channel: str, payloads: list[bytes]) -> int:

@@ -27,14 +27,12 @@ Spark mapping — the socket edge lands in a durable spool:
 from __future__ import annotations
 
 import socket
-import struct
-import threading
 import time
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
-from wallaroo_spark.sources.spool import SpoolWriter
+from wallaroo_spark.sources.spool import Listener, Receiver, iter_frames
 
 
 def send_frames(frames: list[bytes], host: str, port: int, rate_per_s: float | None = None) -> int:
@@ -51,16 +49,10 @@ def send_frames(frames: list[bytes], host: str, port: int, rate_per_s: float | N
 
 def send_framed_file(path: str, host: str, port: int, rate_per_s: float | None = None) -> int:
     """Replay a framed binary file (concatenated length-prefixed frames)."""
-    raw = Path(path).read_bytes()
-    frames, off = [], 0
-    while off < len(raw):
-        (total,) = struct.unpack(">I", raw[off : off + 4])
-        frames.append(raw[off : off + 4 + total])
-        off += 4 + total
-    return send_frames(frames, host, port, rate_per_s)
+    return send_frames(list(iter_frames([Path(path).read_bytes()])), host, port, rate_per_s)
 
 
-class FramedTCPReceiver:
+class FramedTCPReceiver(Receiver):
     """Listen on a port, reassemble length-prefixed frames from each
     connection, and append them to a parquet spool directory.
 
@@ -68,93 +60,37 @@ class FramedTCPReceiver:
     across many recv() calls, or many frames in one) — the same loop as the
     reference's notify (`framed_source_notify.pony:90-130`). One spool file
     per flush keeps files small enough for the file-stream source to pick up
-    incrementally.
+    incrementally; a connection's end also flushes, so its last frames land
+    at once.
     """
 
     def __init__(self, spool_dir: str, host: str = "127.0.0.1", port: int = 0,
                  flush_every: int = 256, idle_flush_s: float = 0.25):
-        self.spool = Path(spool_dir)
-        self._srv = socket.socket(socket.AF_INET, socket.SOCK_STREAM)
-        self._srv.setsockopt(socket.SOL_SOCKET, socket.SO_REUSEADDR, 1)
-        self._srv.bind((host, port))
-        self._srv.listen(4)
-        self.host, self.port = self._srv.getsockname()
-        self.flush_every = flush_every
-        self.idle_flush_s = idle_flush_s
-        self.frames_received = 0
-        self._writer = SpoolWriter(self.spool, "frames")
-        self._lock = threading.Lock()
-        self._stop = threading.Event()
-        self._thread = threading.Thread(target=self._serve, daemon=True)
+        super().__init__(spool_dir, "frames", None, flush_every, idle_flush_s)
+        self._listener = Listener(self._handle, host, port)
+        self.host, self.port = self._listener.host, self._listener.port
+
+    frames_received = property(lambda self: self._received)
 
     def start(self) -> "FramedTCPReceiver":
-        self._thread.start()
-        return self
+        self._listener.start()
+        return super().start()
 
-    def _serve(self) -> None:
-        self._srv.settimeout(0.2)
-        while not self._stop.is_set():
-            try:
-                conn, _ = self._srv.accept()
-            except (socket.timeout, OSError):
-                continue
-            threading.Thread(target=self._handle, args=(conn,), daemon=True).start()
+    def _wake(self) -> None:
+        self._listener.stop()
 
     def _handle(self, conn: socket.socket) -> None:
-        buf = bytearray()
-        pending: list[bytes] = []
-        # idle flush: a long-lived connection that goes quiet with fewer than
-        # flush_every buffered frames must still land them in the spool, or
-        # streaming consumers stall until the connection closes
-        conn.settimeout(self.idle_flush_s)
-        with conn:
-            while True:
-                try:
-                    chunk = conn.recv(65536)
-                except socket.timeout:
-                    if pending:
-                        self._flush(pending)
-                        pending = []
-                    if self._stop.is_set():
-                        break
-                    continue
-                except OSError:
-                    break
-                if not chunk:
-                    break
-                buf.extend(chunk)
-                while len(buf) >= 4:
-                    (total,) = struct.unpack(">I", bytes(buf[:4]))
-                    if len(buf) < 4 + total:
-                        break
-                    pending.append(bytes(buf[: 4 + total]))
-                    del buf[: 4 + total]
-                    if len(pending) >= self.flush_every:
-                        self._flush(pending)
-                        pending = []
-        if pending:
-            self._flush(pending)
+        for frame in iter_frames(iter(lambda: conn.recv(65536), b"")):
+            self._add(frame)
+        self._drain()
 
-    def _flush(self, frames: list[bytes]) -> None:
+    def _table(self, frames: list[bytes]):
         import pyarrow as pa
 
-        self._writer.publish(pa.table({"frame": pa.array(frames, type=pa.binary())}))
-        # count AFTER the publish so wait_for() means "landed in the spool"
-        with self._lock:
-            self.frames_received += len(frames)
+        return pa.table({"frame": pa.array(frames, type=pa.binary())})
 
     def wait_for(self, n_frames: int, timeout_s: float = 30.0) -> int:
-        deadline = time.monotonic() + timeout_s
-        while time.monotonic() < deadline:
-            if self.frames_received >= n_frames:
-                return self.frames_received
-            time.sleep(0.05)
-        return self.frames_received
-
-    def stop(self) -> None:
-        self._stop.set()
-        self._thread.join(timeout=2)
-        self._srv.close()
+        return super().wait_for(n_frames, timeout_s)  # public keyword stays n_frames
 
 
 def framed_stream(spark: SparkSession, spool_dir: str) -> DataFrame:
@@ -190,65 +126,13 @@ def tcp_frame_sink(host: str, port: int):
     return sink
 
 
-class FrameCollector:
+class FrameCollector(FramedTCPReceiver):
     """Test-side sink endpoint: accept connections, reassemble frames, keep
     them in memory for validation (the reference harness's sink capture)."""
 
     def __init__(self, host: str = "127.0.0.1", port: int = 0):
-        self._srv = socket.socket(socket.AF_INET, socket.SOCK_STREAM)
-        self._srv.setsockopt(socket.SOL_SOCKET, socket.SO_REUSEADDR, 1)
-        self._srv.bind((host, port))
-        self._srv.listen(8)
-        self.host, self.port = self._srv.getsockname()
         self.frames: list[bytes] = []
-        self._lock = threading.Lock()
-        self._stop = threading.Event()
-        self._thread = threading.Thread(target=self._serve, daemon=True)
+        super().__init__(None, host, port, flush_every=1, idle_flush_s=None)
 
-    def start(self) -> "FrameCollector":
-        self._thread.start()
-        return self
-
-    def _serve(self) -> None:
-        self._srv.settimeout(0.2)
-        while not self._stop.is_set():
-            try:
-                conn, _ = self._srv.accept()
-            except (socket.timeout, OSError):
-                continue
-            threading.Thread(target=self._handle, args=(conn,), daemon=True).start()
-
-    def _handle(self, conn: socket.socket) -> None:
-        buf = bytearray()
-        with conn:
-            while True:
-                try:
-                    chunk = conn.recv(65536)
-                except OSError:
-                    break
-                if not chunk:
-                    break
-                buf.extend(chunk)
-                while len(buf) >= 4:
-                    (total,) = struct.unpack(">I", bytes(buf[:4]))
-                    if len(buf) < 4 + total:
-                        break
-                    frame = bytes(buf[: 4 + total])
-                    del buf[: 4 + total]
-                    with self._lock:
-                        self.frames.append(frame)
-
-    def wait_for(self, n_frames: int, timeout_s: float = 30.0) -> int:
-        deadline = time.monotonic() + timeout_s
-        while time.monotonic() < deadline:
-            with self._lock:
-                if len(self.frames) >= n_frames:
-                    return len(self.frames)
-            time.sleep(0.05)
-        with self._lock:
-            return len(self.frames)
-
-    def stop(self) -> None:
-        self._stop.set()
-        self._thread.join(timeout=2)
-        self._srv.close()
+    def _write(self, frames: list[bytes]) -> None:
+        self.frames.extend(frames)

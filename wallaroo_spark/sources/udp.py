@@ -34,13 +34,11 @@ payloads pass through untouched.
 from __future__ import annotations
 
 import socket
-import threading
 import time
-from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
-from wallaroo_spark.sources.spool import SpoolWriter
+from wallaroo_spark.sources.spool import Receiver
 
 _MAX_DGRAM = 65535  # recv size covering the 65507-byte UDP payload max
 
@@ -62,7 +60,7 @@ def send_datagrams(
     return sent
 
 
-class UDPDatagramReceiver:
+class UDPDatagramReceiver(Receiver):
     """Listen on a UDP port and append each datagram to a parquet spool.
 
     One spool file per flush (``flush_every`` datagrams, or ``idle_flush_s``
@@ -82,7 +80,7 @@ class UDPDatagramReceiver:
         strip_whitespace: bool = False,
         rcvbuf_bytes: int = 1 << 22,
     ):
-        self.spool = Path(spool_dir)
+        super().__init__(spool_dir, "datagrams", self._serve, flush_every, idle_flush_s)
         self._sock = socket.socket(socket.AF_INET, socket.SOCK_DGRAM)
         try:
             self._sock.setsockopt(socket.SOL_SOCKET, socket.SO_RCVBUF, rcvbuf_bytes)
@@ -90,82 +88,38 @@ class UDPDatagramReceiver:
             pass  # kernel caps it; keep whatever we got
         self._sock.bind((host, port))
         self.host, self.port = self._sock.getsockname()
-        self.flush_every = flush_every
-        self.idle_flush_s = idle_flush_s
         self.strip = strip_whitespace
-        self.datagrams_received = 0
-        self._writer = SpoolWriter(self.spool, "datagrams")
-        self._lock = threading.Lock()
-        self._stop = threading.Event()
-        self._thread = threading.Thread(target=self._serve, daemon=True)
 
-    def start(self) -> "UDPDatagramReceiver":
-        self._thread.start()
-        return self
+    datagrams_received = property(lambda self: self._received)
 
     def _serve(self) -> None:
-        self._sock.settimeout(self.idle_flush_s)
-        pending: list[bytes] = []
-        while True:
-            # r16 (ADVICE r15): check _stop on EVERY iteration, not only
-            # after an idle timeout — under sustained traffic the old loop
-            # never saw the flag, stop()'s join always expired, and
-            # shutdown relied on close()ing the socket out from under a
-            # blocked recvfrom (fd-reuse-racy). stop() now also wakes a
-            # blocked recvfrom deterministically with a loopback sentinel.
-            if self._stop.is_set():
-                break
+        # _stop is checked after EVERY datagram, so a flood cannot hold
+        # stop() off; stop() wakes a blocked recvfrom with a sentinel
+        while not self._stop.is_set():
             try:
                 data, _addr = self._sock.recvfrom(_MAX_DGRAM)
-            except socket.timeout:
-                if pending:
-                    self._flush(pending)
-                    pending = []
-                continue
             except OSError:
                 break
             if self._stop.is_set():
                 break  # wake sentinel (or a datagram racing stop): drop it
-            pending.append(data.strip() if self.strip else data)
-            if len(pending) >= self.flush_every:
-                self._flush(pending)
-                pending = []
-        if pending:
-            self._flush(pending)
+            self._add(data.strip() if self.strip else data)
 
-    def _flush(self, datagrams: list[bytes]) -> None:
+    def _wake(self) -> None:
+        # the sentinel is dropped by the loop's post-recv _stop check,
+        # never spooled; on a never-started receiver it is simply unread
+        try:
+            with socket.socket(socket.AF_INET, socket.SOCK_DGRAM) as wake:
+                wake.sendto(b"", (self.host, self.port))
+        except OSError:
+            pass
+
+    def _close(self) -> None:
+        self._sock.close()
+
+    def _table(self, datagrams: list[bytes]):
         import pyarrow as pa
 
-        self._writer.publish(pa.table({"datagram": pa.array(datagrams, type=pa.binary())}))
-        # count AFTER the publish so wait_for() means "landed in the spool"
-        with self._lock:
-            self.datagrams_received += len(datagrams)
-
-    def wait_for(self, n: int, timeout_s: float = 30.0) -> int:
-        deadline = time.monotonic() + timeout_s
-        while time.monotonic() < deadline:
-            if self.datagrams_received >= n:
-                return self.datagrams_received
-            time.sleep(0.05)
-        return self.datagrams_received
-
-    def stop(self) -> None:
-        self._stop.set()
-        if self._thread.is_alive():
-            # wake a recvfrom blocked inside its idle_flush_s timeout so
-            # the serve loop observes _stop NOW; the sentinel datagram is
-            # dropped by the post-recv _stop check, never spooled
-            try:
-                wake = socket.socket(socket.AF_INET, socket.SOCK_DGRAM)
-                try:
-                    wake.sendto(b"", (self.host, self.port))
-                finally:
-                    wake.close()
-            except OSError:
-                pass
-        if self._thread.ident is not None:  # no-op on a never-started receiver
-            self._thread.join(timeout=2)
-        self._sock.close()
+        return pa.table({"datagram": pa.array(datagrams, type=pa.binary())})
 
 
 def datagram_stream(spark: SparkSession, spool_dir: str) -> DataFrame:
@@ -201,51 +155,15 @@ def udp_datagram_sink(host: str, port: int, col: str = "datagram"):
     return sink
 
 
-class DatagramCollector:
+class DatagramCollector(UDPDatagramReceiver):
     """Test-side sink endpoint: collect datagrams in memory for validation
     (the reference harness's sink capture, UDP flavor)."""
 
     def __init__(self, host: str = "127.0.0.1", port: int = 0,
                  rcvbuf_bytes: int = 1 << 22):
-        self._sock = socket.socket(socket.AF_INET, socket.SOCK_DGRAM)
-        try:
-            self._sock.setsockopt(socket.SOL_SOCKET, socket.SO_RCVBUF, rcvbuf_bytes)
-        except OSError:
-            pass
-        self._sock.bind((host, port))
-        self.host, self.port = self._sock.getsockname()
         self.datagrams: list[bytes] = []
-        self._lock = threading.Lock()
-        self._stop = threading.Event()
-        self._thread = threading.Thread(target=self._serve, daemon=True)
+        super().__init__(None, host, port, flush_every=1, idle_flush_s=None,
+                         rcvbuf_bytes=rcvbuf_bytes)
 
-    def start(self) -> "DatagramCollector":
-        self._thread.start()
-        return self
-
-    def _serve(self) -> None:
-        self._sock.settimeout(0.2)
-        while not self._stop.is_set():
-            try:
-                data, _addr = self._sock.recvfrom(_MAX_DGRAM)
-            except socket.timeout:
-                continue
-            except OSError:
-                break
-            with self._lock:
-                self.datagrams.append(data)
-
-    def wait_for(self, n: int, timeout_s: float = 30.0) -> int:
-        deadline = time.monotonic() + timeout_s
-        while time.monotonic() < deadline:
-            with self._lock:
-                if len(self.datagrams) >= n:
-                    return len(self.datagrams)
-            time.sleep(0.05)
-        with self._lock:
-            return len(self.datagrams)
-
-    def stop(self) -> None:
-        self._stop.set()
-        self._thread.join(timeout=2)
-        self._sock.close()
+    def _write(self, datagrams: list[bytes]) -> None:
+        self.datagrams.extend(datagrams)
