@@ -310,6 +310,42 @@ def test_stream_agg_state_restores_across_batches(spark, tmpdir):
     assert rows[int(t0)] == 20.0
 
 
+def test_stream_agg_event_time_timeout_fires(spark, tmpdir):
+    """The timer path: key 'a' leaves its window open and goes quiet; key
+    'b', far in the future, moves the global watermark past a's window
+    end in the next micro-batch, so a's window is emitted by a's
+    event-time timer (hasTimedOut), not by a's own rows."""
+    a = spark.createDataFrame(
+        [Row(key="a", ts=T0 + dt.timedelta(seconds=i), v=1.0) for i in range(5)]
+    )
+    b = spark.createDataFrame(
+        [Row(key="b", ts=T0 + dt.timedelta(seconds=10_000 + i), v=1.0) for i in range(3)]
+    )
+    a.coalesce(1).write.mode("overwrite").parquet(tmpdir + "/in")
+    b.coalesce(1).write.mode("append").parquet(tmpdir + "/in")
+    sdf = (
+        spark.readStream.schema(a.schema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(tmpdir + "/in")
+    )
+    out = A.windowed_agg_stream(
+        sdf.withWatermark("ts", "0 seconds"), ["key"], "ts", make_sum_agg(),
+        "total double", 30,
+    )
+    q = (
+        out.writeStream.format("memory")
+        .queryName("t_agg_timer")
+        .outputMode("update")
+        .option("checkpointLocation", tmpdir + "/chk")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(120)
+    t0 = int(T0.replace(tzinfo=dt.timezone.utc).timestamp())
+    rows = spark.sql("SELECT * FROM t_agg_timer WHERE key = 'a'").collect()
+    assert [(r.window_start, r.window_end, r.total) for r in rows] == [(t0, t0 + 30, 5.0)]
+
+
 def test_output_dict_mapped_by_schema_name(spark):
     """output() dicts bind by out_schema field NAME, not insertion order —
     a dict built in reverse order must still land values in the right

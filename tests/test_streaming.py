@@ -798,6 +798,41 @@ def test_stream_minhash_state_restores_across_batches(spark, tmpdir):
     assert (r.doc_a, r.doc_b) == (1, 2) and r.jaccard >= 0.5
 
 
+def test_stream_minhash_idle_bucket_cleared_by_timer(spark, tmpdir):
+    """The timer path: doc 1's band buckets go idle; doc 2, far in the
+    future, moves the watermark past their horizon, and their event-time
+    timers clear them — only doc 2's buckets stay in the state store."""
+    from wallaroo_spark.functions import hashing as H
+    from wallaroo_spark.streaming.dedup import minhash_lsh_pairs_stream
+
+    b1 = spark.createDataFrame(
+        [Row(doc_id=1, text="one two three four five six seven eight nine ten", ts=T0)]
+    )
+    b2 = spark.createDataFrame(
+        [Row(doc_id=2, text="alpha beta gamma delta epsilon zeta eta theta",
+             ts=T0 + dt.timedelta(seconds=10_000))]
+    )
+    b1.coalesce(1).write.mode("overwrite").parquet(tmpdir + "/in")
+    b2.coalesce(1).write.mode("append").parquet(tmpdir + "/in")
+    sdf = (
+        spark.readStream.schema(b1.schema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(tmpdir + "/in")
+    )
+    out = minhash_lsh_pairs_stream(sdf, "ts", delay_s=60, threshold=0.5)
+    q = (
+        out.writeStream.format("memory")
+        .queryName("t_mh_timer")
+        .outputMode("update")
+        .option("checkpointLocation", tmpdir + "/chk")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(120)
+    assert spark.sql("SELECT * FROM t_mh_timer").count() == 0
+    assert q.lastProgress["stateOperators"][0]["numRowsTotal"] == H.LSH_BANDS
+
+
 def test_stream_minhash_evicts_beyond_horizon(spark, tmpdir):
     """Docs farther apart than the lateness horizon must NOT pair (the
     watermark bounds state, and the guarantee window with it)."""
@@ -1303,34 +1338,88 @@ def test_dsir_score_filter_stream_matches_batch(spark, tmpdir):
     assert got == want and want
 
 
-def test_stream_token_budget_order_stable_across_arrow_chunks(spark, tmpdir):
-    """Review finding: a group spanning multiple Arrow chunks must still be
-    admitted in global (ts, id) order — the state fn concatenates chunks
-    before sorting. Forced with a tiny maxRecordsPerBatch and a file whose
-    row order INVERTS event time."""
+def _chunk_order_token_budget(sdf, n, t0):
     from wallaroo_spark.streaming.admission import token_budget_admit_stream
 
+    # ts ascending = doc_id descending: the LAST 10 ids are admitted
+    out = token_budget_admit_stream(sdf, budget=30, domain="source")
+    want = [(i, (n - i) * 3) for i in range(n - 10, n)]
+    return out, lambda rows: sorted((r.doc_id, r.cum_tokens) for r in rows), want
+
+
+def _chunk_order_keyed_state(sdf, n, t0):
+    def fn(row, state):
+        state["n"] += 1
+        return [{"key": row["key"], "arr": row["arr"], "seq": state["n"]}]
+
+    out = S.keyed_state_stream(
+        sdf, ["key"], fn, lambda: {"n": 0}, "key string, arr bigint, seq bigint",
+        "n bigint", pack=lambda s: (s["n"],), unpack=lambda t: {"n": t[0]},
+        ts_col="ts",
+    )
+    # the per-key sequence number read in event order is 1..n
+    got = lambda rows: [r.seq for r in sorted(rows, key=lambda r: r.arr)]
+    return out, got, list(range(1, n + 1))
+
+
+def _chunk_order_late_policy(sdf, n, t0):
+    from wallaroo_spark.streaming.late import windowed_late_policy_stream
+
+    out = windowed_late_policy_stream(
+        sdf.withWatermark("ts", "0 seconds"),
+        ["key"], "ts", "v", "arr", size_s=10, delay_s=5, policy="drop",
+    )
+    # arrival order = event order, so nothing is late: events at +1..+40 s
+    # close [0,10) [10,20) [20,30) once the key's watermark reaches 35
+    got = lambda rows: sorted((r.window_start - t0, r.n_events, r.is_late_fire) for r in rows)
+    return out, got, [(0, 9, False), (10, 10, False), (20, 10, False)]
+
+
+def _chunk_order_ephemeral(sdf, n, t0):
+    from wallaroo_spark.streaming.ephemeral import ephemeral_windows_stream
+
+    out = ephemeral_windows_stream(
+        sdf.withWatermark("ts", "0 seconds"), ["key"], "ts", "v", 10, 5
+    )
+    # one-shot windows opened at +1 and +17 s close at the first event past
+    # start + 15 s; the one opened at +33 s stays open
+    got = lambda rows: sorted((r.window_start - t0, r.n_events, r.closed) for r in rows)
+    return out, got, [(1.0, 16, True), (17.0, 16, True)]
+
+
+@pytest.mark.parametrize(
+    "build",
+    [_chunk_order_token_budget, _chunk_order_keyed_state,
+     _chunk_order_late_policy, _chunk_order_ephemeral],
+    ids=["token_budget", "keyed_state", "late_policy", "ephemeral"],
+)
+def test_stream_state_order_stable_across_arrow_chunks(spark, tmpdir, build):
+    """A key whose micro-batch spans several Arrow chunks must still be
+    replayed in global event order: the keyed-state runner gathers the
+    chunks and sorts once. Forced with a tiny maxRecordsPerBatch and a
+    file whose row order INVERTS event time."""
     n = 40
     rows = [  # file order = descending ts, so chunk order fights ts order
         Row(
-            source="s", doc_id=i, text=" ".join(["w"] * 3),
-            ts=T0 + dt.timedelta(seconds=n - i),
+            source="s", key="s", doc_id=i, text=" ".join(["w"] * 3),
+            ts=T0 + dt.timedelta(seconds=n - i), v=1.0, arr=n - i,
         )
         for i in range(n)
     ]
     spark.createDataFrame(rows).coalesce(1).write.mode("overwrite").parquet(
         tmpdir + "/in"
     )
+    name = f"t_chunks_{build.__name__}"
     old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
     spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "7")
     try:
         sdf = spark.readStream.schema(
             spark.read.parquet(tmpdir + "/in").schema
         ).parquet(tmpdir + "/in")
-        out = token_budget_admit_stream(sdf, budget=30, domain="source")
+        out, got, want = build(sdf, n, T0.replace(tzinfo=dt.timezone.utc).timestamp())
         q = (
             out.writeStream.format("memory")
-            .queryName("t_budget_chunks")
+            .queryName(name)
             .outputMode("update")
             .option("checkpointLocation", tmpdir + "/chk")
             .trigger(availableNow=True)
@@ -1339,13 +1428,7 @@ def test_stream_token_budget_order_stable_across_arrow_chunks(spark, tmpdir):
         q.awaitTermination(120)
     finally:
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
-    got = sorted(
-        (r.doc_id, r.cum_tokens)
-        for r in spark.sql("SELECT * FROM t_budget_chunks").collect()
-    )
-    # ts ascending = doc_id descending: the LAST 10 ids are admitted
-    want = [(i, (n - i) * 3) for i in range(n - 10, n)]
-    assert got == want
+    assert got(spark.sql(f"SELECT * FROM {name}").collect()) == want
 
 
 def test_stream_pack_sequences_matches_batch(spark, tmpdir):

@@ -17,12 +17,13 @@ before certifying a round.
 from __future__ import annotations
 
 import hashlib
+import os
 import sys
 import traceback
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from wallaroo_spark.session import get_spark, TABLES
 

@@ -20,9 +20,11 @@ Usage: python tools/plan_snapshot.py [sf_dir]
 from __future__ import annotations
 
 import json
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 TRACKED = (
     "read_cols_total",
@@ -60,7 +62,7 @@ def main() -> None:
     spark = get_spark("plan-snapshot")
     spark.sparkContext.setLogLevel("ERROR")
     snap = snapshot(spark, sf_dir)
-    with open("/root/repo/PLANS.json", "w") as f:
+    with open(os.path.join(REPO, "PLANS.json"), "w") as f:
         json.dump(snap, f, indent=1, sort_keys=True)
         f.write("\n")
     print(f"wrote PLANS.json ({len(snap)} queries)")

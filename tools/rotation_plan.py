@@ -17,9 +17,11 @@ from __future__ import annotations
 
 import glob
 import json
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from wallaroo_spark.queries import (  # noqa: E402
     ORACLES,
@@ -32,7 +34,7 @@ from wallaroo_spark.queries import (  # noqa: E402
 def main() -> None:
     batch = int(sys.argv[1]) if len(sys.argv) > 1 else 30
     checked: set[str] = set()
-    for p in sorted(glob.glob("/root/repo/CORRECTNESS_r*.json")):
+    for p in sorted(glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json"))):
         with open(p) as f:
             d = json.load(f)
         if isinstance(d, dict):

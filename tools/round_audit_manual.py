@@ -23,11 +23,12 @@ calibration/classifier chains diverge.
 
 from __future__ import annotations
 
+import os
 import sys
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 DANGER = 1e-9  # absolute distance to k+0.5 under which builds may differ
 

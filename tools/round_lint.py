@@ -52,11 +52,12 @@ Default sf_dirs: sf0.001 sf0.01 sf0.1. Exit 1 if any query is flagged.
 from __future__ import annotations
 
 import re
+import os
 import sys
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 THRESHOLD = 1.0  # scaled units of 1e-9 absolute distance to the boundary
 PROBE_OFFSET = 1.0e15  # marks a raw-round probe value; exact in float64

@@ -8,7 +8,8 @@ A from-scratch rebuild of the capabilities of WallarooLabs/wallaroo
   compiles to DataFrame / Structured Streaming plans so Catalyst optimizes
   them (predicate pushdown, partial aggregation, whole-stage codegen);
 - keyed stateful computation (reference ``topology/runner.pony:314-684``)
-  maps to ``applyInPandasWithState``;
+  maps to one keyed-state runner over ``applyInPandasWithState``
+  (``streaming.state.run_keyed``) that every stateful operator shares;
 - event-time windows (tumbling/sliding/count/global/ephemeral, reference
   ``lib/wallaroo/core/windows/``) map to native ``F.window`` /
   ``F.session_window`` plus custom state ops where Spark lacks a native

@@ -19,8 +19,10 @@ windows run it inside ``applyInPandas`` per (key, window) group, folding
 the same partial-then-merge structure the reference's pane combine uses
 (`panes_range_windows.pony:276-299`), so a contract violation (non-associative
 combine, mutating combine) produces visibly wrong results instead of silently
-passing. Streaming tumbling windows run it in ``applyInPandasWithState`` with
-the pickled accumulator in the state store and an event-time timeout flush.
+passing. Streaming tumbling windows run it on the keyed-state runner
+(``streaming.state.run_keyed``) with the pickled accumulator in the state
+store and an event-time timeout flush; the batch folds run on the same
+runner's batch mode.
 
 Inputs arrive as plain dicts (one per row); for column-expressible
 aggregations prefer native ``pyspark.sql.functions`` aggs (10-100× faster) —
@@ -30,39 +32,26 @@ this class is the *user-extension* surface, like the reference's Python API.
 from __future__ import annotations
 
 import inspect
-from collections.abc import Iterable, Iterator
-
-import pandas as pd
+import pickle
+from itertools import groupby
+from operator import itemgetter
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+from pyspark.sql.types import StructType
 
 from wallaroo_spark.functions import epoch_seconds
-from wallaroo_spark.streaming.epochs import epoch_fn
-
-# Executors do NOT have wallaroo_spark on their path (the engine ships no
-# code to workers — closures travel by value, see streaming/state.py). A user
-# Aggregation subclass would drag this module in by reference through its
-# base class, so register the module for pickle-by-value: the base class and
-# fold helpers serialize INTO the closure. Subclasses defined at module level
-# of the user's own (worker-unimportable) module still need to be local to a
-# function or registered the same way — documented in the class docstring.
-import sys as _sys
-
-try:  # pragma: no cover - vendored cloudpickle always present in pyspark>=3.3
-    from pyspark import cloudpickle as _cloudpickle
-
-    _cloudpickle.register_pickle_by_value(_sys.modules[__name__])
-except Exception:  # pragma: no cover
-    pass
+from wallaroo_spark.streaming.state import EP, key_schema, run_keyed
 
 _CHUNK_ROWS = 1024  # partial-aggregation granularity inside a window group
 
 
 class Aggregation:
     """Base class for user aggregations (subclass and implement the four
-    methods; ``name`` defaults to the class name)."""
+    methods; ``name`` defaults to the class name). Executors do not import
+    wallaroo_spark: the windowed operators ship this module by value, so a
+    subclass must be defined inside a function (or in a module the
+    executors can import) to travel with it."""
 
     def name(self) -> str:
         return type(self).__name__
@@ -138,19 +127,11 @@ def _emit(agg, key, window_end, acc, arity):
     return agg.output(key, acc)
 
 
-def _out_cols(keys: list[str], out_schema: str) -> list[str]:
-    return [*keys, "window_start", "window_end"] + [
-        c.strip().split()[0] for c in out_schema.split(",")
-    ]
-
-
-def _full_schema(df: DataFrame, keys: list[str], out_schema: str) -> str:
-    key_types = {f.name: f.dataType.simpleString() for f in df.schema.fields}
-    return (
-        ", ".join(f"{k} {key_types[k]}" for k in keys)
-        + ", window_start bigint, window_end bigint, "
-        + out_schema
-    )
+def _schemas(df: DataFrame, keys: list[str], out_schema: str) -> tuple[StructType, list[str]]:
+    """(full output schema: keys, window_start/window_end, out_schema fields;
+    the out_schema field names that dict outputs map by)."""
+    full = key_schema(df, keys, "window_start bigint, window_end bigint, " + out_schema)
+    return full, full.fieldNames()[len(keys) + 2 :]
 
 
 def windowed_agg_batch(
@@ -193,16 +174,14 @@ def windowed_agg_batch(
         "_ws", F.explode(F.filter(starts, lambda s: ep < s + size_s))
     )
 
-    schema = _full_schema(df, keys, out_schema)
-    cols = _out_cols(keys, out_schema)
-    fields = _out_fields(out_schema)
+    schema, fields = _schemas(df, keys, out_schema)
     arity = _output_arity(agg)
     single_key = len(keys) == 1
 
     if n_salts > 1:
         return _windowed_agg_batch_salted(
             assigned, keys, ts_col, agg, size_s, n_salts,
-            schema, cols, fields, arity, single_key,
+            schema, fields, arity, single_key,
         )
 
     # Group by KEY ONLY and walk that key's windows inside one pandas call:
@@ -211,41 +190,31 @@ def windowed_agg_batch(
     # (measured 60x slower at sf0.1). Per-key group sizes stay bounded by
     # rows_per_key * windows_per_row, the same memory bound the reference's
     # per-key pane state had.
-    def run(key_tuple: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        import pandas as _pd
-
+    def step(key_tuple, pdf, st, wm):
         key = key_tuple[0] if single_key else tuple(key_tuple)
-        pdf = pdf.sort_values(["_ws", ts_col], kind="mergesort")
-        ws_arr = pdf["_ws"].to_numpy()
-        recs = pdf.drop(columns=["_ws"]).to_dict("records")
         rows = []
-
-        def flush(ws, buf):
-            acc = _fold_window(agg, buf)
-            out = _emit(agg, key, int(ws) + size_s, acc, arity)
+        for ws, buf in _per_window(pdf, pdf.drop(columns=["_ws"]).to_dict("records")):
+            out = _emit(agg, key, ws + size_s, _fold_window(agg, buf), arity)
             if out is not None:
-                rows.append((*key_tuple, int(ws), int(ws) + size_s, *_row_vals(out, fields)))
-
-        # single sequential pass over (window, ts)-sorted rows: a pandas
-        # groupby per window costs ~1ms of framework overhead per group,
-        # which at ~1 row/window dominates everything
-        cur_ws, buf = None, []
-        for ws, rec in zip(ws_arr, recs):
-            if cur_ws is not None and ws != cur_ws:
-                flush(cur_ws, buf)
-                buf = []
-            cur_ws = ws
-            buf.append(rec)
-        if cur_ws is not None:
-            flush(cur_ws, buf)
-        return _pd.DataFrame(rows, columns=cols)
+                rows.append((*key_tuple, ws, ws + size_s, *_row_vals(out, fields)))
+        return rows, None, None
 
     # explicit repartition on the grouping keys: AQE coalesces by BYTES, and
     # this stage is CPU-bound Python — a few MB of rows can be hours of
     # kernel time, so keep the key-hash spread at full parallelism (the
     # explicit numbered repartition is exempt from AQE coalescing)
     n_parts = assigned.sparkSession.sparkContext.defaultParallelism
-    return assigned.repartition(n_parts, *keys).groupBy(*keys).applyInPandas(run, schema=schema)
+    return run_keyed(
+        assigned.repartition(n_parts, *keys), keys, step, schema, order=["_ws", ts_col]
+    )
+
+
+def _per_window(pdf, values):
+    """(window_start, [values]) per run of equal ``_ws`` in a frame sorted by
+    it: one sequential pass, since a pandas groupby per window costs ~1ms of
+    framework overhead per group, which at ~1 row/window dominates."""
+    for ws, grp in groupby(zip(pdf["_ws"].to_numpy(), values), key=itemgetter(0)):
+        yield int(ws), [v for _, v in grp]
 
 
 def _windowed_agg_batch_salted(
@@ -255,8 +224,7 @@ def _windowed_agg_batch_salted(
     agg: Aggregation,
     size_s: int,
     n_salts: int,
-    schema: str,
-    cols: list[str],
+    schema: StructType,
     fields: list[str],
     arity: int,
     single_key: bool,
@@ -274,75 +242,39 @@ def _windowed_agg_batch_salted(
             F.floor((epoch_seconds(ts_col) - F.col("_ws")) / F.lit(pane_len)),
         ).cast("int"),
     )
-    key_types = {f.name: f.dataType.simpleString() for f in assigned.schema.fields}
-    mid_schema = (
-        ", ".join(f"{k} {key_types[k]}" for k in keys)
-        + ", _salt int, _ws bigint, _acc binary"
-    )
 
-    def fold_panes(key_tuple: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        import pandas as _pd
-        import pickle as _pickle
-
-        pdf = pdf.sort_values(["_ws", ts_col], kind="mergesort")
-        ws_arr = pdf["_ws"].to_numpy()
+    def fold_panes(key_tuple, pdf, st, wm):
         recs = pdf.drop(columns=["_ws", "_salt"]).to_dict("records")
-        rows = []
-        cur_ws, buf = None, []
-        for ws, rec in zip(ws_arr, recs):
-            if cur_ws is not None and ws != cur_ws:
-                rows.append((*key_tuple, int(cur_ws), _pickle.dumps(_fold_window(agg, buf))))
-                buf = []
-            cur_ws = ws
-            buf.append(rec)
-        if cur_ws is not None:
-            rows.append((*key_tuple, int(cur_ws), _pickle.dumps(_fold_window(agg, buf))))
-        return _pd.DataFrame(rows, columns=[*keys, "_salt", "_ws", "_acc"])
+        rows = [
+            (*key_tuple, ws, pickle.dumps(_fold_window(agg, buf)))
+            for ws, buf in _per_window(pdf, recs)
+        ]
+        return rows, None, None
 
-    def combine_panes(key_tuple: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        import pandas as _pd
-        import pickle as _pickle
-
+    def combine_panes(key_tuple, pdf, st, wm):
         key = key_tuple[0] if single_key else tuple(key_tuple)
-        pdf = pdf.sort_values(["_ws", "_salt"], kind="mergesort")
         rows = []
-
-        def flush(ws, panes):
+        for ws, panes in _per_window(pdf, pdf["_acc"]):
             acc = agg.initial_accumulator()
             for p in panes:
-                acc = agg.combine(acc, p)
-            out = _emit(agg, key, int(ws) + size_s, acc, arity)
+                acc = agg.combine(acc, pickle.loads(p))
+            out = _emit(agg, key, ws + size_s, acc, arity)
             if out is not None:
-                rows.append((*key_tuple, int(ws), int(ws) + size_s, *_row_vals(out, fields)))
-
-        cur_ws, panes = None, []
-        for ws, blob in zip(pdf["_ws"].to_numpy(), pdf["_acc"]):
-            if cur_ws is not None and ws != cur_ws:
-                flush(cur_ws, panes)
-                panes = []
-            cur_ws = ws
-            panes.append(_pickle.loads(blob))
-        if cur_ws is not None:
-            flush(cur_ws, panes)
-        return _pd.DataFrame(rows, columns=cols)
+                rows.append((*key_tuple, ws, ws + size_s, *_row_vals(out, fields)))
+        return rows, None, None
 
     n_parts = assigned.sparkSession.sparkContext.defaultParallelism
-    partials = (
-        assigned.repartition(n_parts, *keys, "_salt")
-        .groupBy(*keys, "_salt")
-        .applyInPandas(fold_panes, schema=mid_schema)
+    partials = run_keyed(
+        assigned.repartition(n_parts, *keys, "_salt"), [*keys, "_salt"], fold_panes,
+        key_schema(assigned, keys, "_salt int, _ws bigint, _acc binary"),
+        order=["_ws", ts_col],
     )
     # stage 2 moves only O(keys x windows x salts) pickled partials — the
     # per-key serial section is the cheap combine, not the row fold
-    return (
-        partials.repartition(n_parts, *keys)
-        .groupBy(*keys)
-        .applyInPandas(combine_panes, schema=schema)
+    return run_keyed(
+        partials.repartition(n_parts, *keys), keys, combine_panes, schema,
+        order=["_ws", "_salt"],
     )
-
-
-def _out_fields(out_schema: str) -> list[str]:
-    return [c.strip().split()[0] for c in out_schema.split(",")]
 
 
 def _row_vals(out, fields: list[str]) -> tuple:
@@ -393,87 +325,54 @@ def windowed_agg_stream(
     if size_s % slide != 0:
         raise ValueError("window size must be a multiple of slide")
     n_wins = size_s // slide
-    schema = _full_schema(sdf, keys, out_schema)
-    cols = _out_cols(keys, out_schema)
-    fields = _out_fields(out_schema)
-    state_schema = "max_ts double, emit_wm double, wins map<bigint, binary>"
+    schema, fields = _schemas(sdf, keys, out_schema)
     arity = _output_arity(agg)
     single_key = len(keys) == 1
-    # tz-safe: window starts/deadlines are compared to real-epoch watermark
-    to_ep = epoch_fn(sdf)
 
-    def emit_rows(key, wins, ws_list):
-        import pickle as _pickle
-
+    def emit_ripe(key, wins, wm):
+        """Pop and emit every window whose end the watermark has passed."""
         rows = []
         k = key[0] if single_key else tuple(key)
-        for ws in ws_list:
-            acc = _pickle.loads(wins.pop(ws))
-            out = _emit(agg, k, ws + size_s, acc, arity)
+        for ws in [w for w in sorted(wins) if w + size_s <= wm]:
+            out = _emit(agg, k, ws + size_s, pickle.loads(wins.pop(ws)), arity)
             if out is not None:
                 rows.append((*key, int(ws), int(ws) + size_s, *_row_vals(out, fields)))
         return rows
 
-    def run(key: tuple, pdf_iter: Iterable[pd.DataFrame], gs: GroupState) -> Iterator[pd.DataFrame]:
-        import pickle as _pickle
-
-        if gs.hasTimedOut:  # pragma: no cover - live-stream idle flush
-            max_ts, emit_wm, wins = gs.get
-            wins = dict(wins or {})
-            wm_g = gs.getCurrentWatermarkMs() / 1000.0
-            # flush only watermark-passed windows; an idle gap must not force
-            # out partials that a later event could legitimately still update
-            ripe = [w for w in sorted(wins) if w + size_s <= wm_g]
-            rows = emit_rows(key, wins, ripe)
-            if wins:
-                emit_wm = max(emit_wm, wm_g)
-                gs.update((max_ts, emit_wm, wins))
-                deadline_ms = int((min(wins) + size_s) * 1000)
-                gs.setTimeoutTimestamp(max(deadline_ms, gs.getCurrentWatermarkMs() + 1))
-            else:
-                gs.remove()
-            if rows:
-                yield pd.DataFrame(rows, columns=cols)
-            return
-
-        if gs.exists:
-            max_ts, emit_wm, wins = gs.get
-            wins = dict(wins or {})
-        else:
-            max_ts, emit_wm, wins = float("-inf"), float("-inf"), {}
-        outs = []
-        for pdf in pdf_iter:
-            pdf = pdf.sort_values(ts_col, kind="mergesort")
-            for rec in pdf.to_dict("records"):
-                ep = to_ep(rec[ts_col])
-                max_ts = max(max_ts, ep)
-                base = int(ep // slide) * slide
-                for i in range(n_wins):
-                    ws = base - i * slide
-                    if ws + size_s <= emit_wm:
-                        continue  # window already emitted — drop, don't re-open
-                    acc = (
-                        _pickle.loads(wins[ws])
-                        if ws in wins
-                        else agg.initial_accumulator()
-                    )
-                    agg.update(rec, acc)
-                    wins[ws] = _pickle.dumps(acc)
-            wm = max_ts - delay_s
-            outs.extend(emit_rows(key, wins, [w for w in sorted(wins) if w + size_s <= wm]))
-            emit_wm = max(emit_wm, wm)
-        gs.update((max_ts, emit_wm, wins))
+    def step(key, pdf, st, wm_g):
+        max_ts, emit_wm, wins = st
+        for ep, rec in zip(pdf[EP], pdf.drop(columns=EP).to_dict("records")):
+            max_ts = max(max_ts, ep)
+            base = int(ep // slide) * slide
+            for i in range(n_wins):
+                ws = base - i * slide
+                if ws + size_s <= emit_wm:
+                    continue  # window already emitted — drop, don't re-open
+                acc = pickle.loads(wins[ws]) if ws in wins else agg.initial_accumulator()
+                agg.update(rec, acc)
+                wins[ws] = pickle.dumps(acc)
+        wm = max_ts - delay_s
+        rows = emit_ripe(key, wins, wm)
         # always register a timeout: with open windows it drives the idle
         # flush; with none it clears the (max_ts, emit_wm) tombstone once
         # the global watermark passes — events that could re-open an
         # emitted window are globally late by then and Spark drops them,
         # so removing the guard state is safe and the per-key state stays
         # bounded even for keys that go quiet forever
-        deadline_ms = int((max_ts + delay_s + size_s) * 1000)
-        gs.setTimeoutTimestamp(max(deadline_ms, gs.getCurrentWatermarkMs() + 1))
-        if outs:
-            yield pd.DataFrame(outs, columns=cols)
+        return rows, (max_ts, max(emit_wm, wm), wins), int((max_ts + delay_s + size_s) * 1000)
 
-    return sdf.groupBy(*keys).applyInPandasWithState(
-        run, schema, state_schema, "update", GroupStateTimeout.EventTimeTimeout
+    def on_timeout(key, st, wm_g):
+        max_ts, emit_wm, wins = st
+        # flush only watermark-passed windows; an idle gap must not force
+        # out partials that a later event could legitimately still update
+        rows = emit_ripe(key, wins, wm_g)
+        if not wins:
+            return rows, None, None
+        return rows, (max_ts, max(emit_wm, wm_g), wins), int((min(wins) + size_s) * 1000)
+
+    return run_keyed(
+        sdf, keys, step, schema, "max_ts double, emit_wm double, wins map<bigint, binary>",
+        init=lambda: (float("-inf"), float("-inf"), {}),
+        unpack=lambda t: (t[0], t[1], dict(t[2] or {})),
+        order=[ts_col], event_time=ts_col, on_timeout=on_timeout,
     )

@@ -240,7 +240,6 @@ class Pipeline:
         state_schema=None,
         pack=None,
         unpack=None,
-        timeout: str = "NoTimeout",
     ) -> "Pipeline":
         self._need_keys()
         if self.df.isStreaming:
@@ -248,7 +247,7 @@ class Pipeline:
                 raise ValueError("streaming to_state needs state_schema/pack/unpack")
             out = S.keyed_state_stream(
                 self.df, list(self.key_cols), fn, initial_state, output_schema,
-                state_schema, pack, unpack, ts_col=self.ts_col, timeout=timeout,
+                state_schema, pack, unpack, ts_col=self.ts_col,
             )
         else:
             out = S.keyed_state_batch(

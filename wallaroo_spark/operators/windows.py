@@ -11,8 +11,8 @@ windows and the per-message "global window" aggregation
 - global (running) aggregation → streaming: update-mode groupBy agg; batch:
   ``Window.partitionBy(key).orderBy(ts)`` running frame;
 - count windows → no native operator: batch = row_number over (key, ts) then
-  group by floor((rn-1)/n); streaming = applyInPandasWithState (see
-  ``wallaroo_spark.streaming.state``);
+  group by floor((rn-1)/n); streaming = a step on the keyed-state runner
+  (``wallaroo_spark.streaming.state.count_window_stream``);
 - ephemeral/session windows → native ``F.session_window``.
 
 Windows are **aligned** (epoch-aligned boundaries) by default. The

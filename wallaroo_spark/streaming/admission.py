@@ -9,8 +9,9 @@ without ever re-scanning what was already admitted.
 - **token counting is stateless column math** (``F.size(tokens(text))``)
   before the stateful op — the Python state function never touches text;
 - **state is one BIGINT per domain** (tokens seen so far): bounded by the
-  number of domains, not the stream. ``GroupStateTimeout.NoTimeout`` — a
-  budget is a forever fact, so the counter must outlive any horizon;
+  number of domains, not the stream, kept by the keyed-state runner
+  (``state.run_keyed``) with no timer — a budget is a forever fact, so the
+  counter must outlive any horizon;
 - **admission order**: arrival order, made deterministic within a
   micro-batch by sorting on (event-ts, id). The batch operator admits in
   salted-bucket-then-id order instead; feed the stream in that order (or
@@ -29,25 +30,11 @@ admission — per-key state mutated per message, emitting 0/1 outputs.
 
 from __future__ import annotations
 
-from collections.abc import Iterable, Iterator
-
-import pandas as pd
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from wallaroo_spark.operators.text import tokens
-
-# executors never import wallaroo_spark — serialize closures by value
-import sys as _sys
-
-try:  # pragma: no cover - vendored cloudpickle always present in pyspark>=3.3
-    from pyspark import cloudpickle as _cloudpickle
-
-    _cloudpickle.register_pickle_by_value(_sys.modules[__name__])
-except Exception:  # pragma: no cover
-    pass
+from wallaroo_spark.streaming.state import run_keyed
 
 
 def token_budget_admit_stream(
@@ -70,38 +57,24 @@ def token_budget_admit_stream(
     out_schema = (
         f"{domain} string, {id_col} bigint, n_tokens bigint, cum_tokens bigint"
     )
-    state_schema = "used bigint"
     budget = int(budget)
 
-    def run(
-        key: tuple, pdf_iter: Iterable[pd.DataFrame], gs: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        import pandas as _pd
-
-        used = gs.get[0] if gs.exists else 0
+    def step(key, pdf, used, wm):
         (dom,) = key
         rows = []
-        # deterministic in-batch order: event time, then id — over the
-        # WHOLE micro-batch. A large group arrives as multiple Arrow
-        # chunks in arbitrary order; sorting per-chunk would make the
-        # admission prefix depend on chunking and break batch parity.
-        pdfs = list(pdf_iter)
-        if pdfs:
-            batch = _pd.concat(pdfs, ignore_index=True).sort_values(
-                ["_ts", "_id"], kind="mergesort"
-            )
-            for did, nt in zip(batch["_id"], batch["_nt"]):
-                used += int(nt)
-                if used <= budget:
-                    rows.append((dom, int(did), int(nt), used))
-        gs.update((used,))
-        if rows:
-            yield _pd.DataFrame(
-                rows, columns=[domain, id_col, "n_tokens", "cum_tokens"]
-            )
+        for did, nt in zip(pdf["_id"], pdf["_nt"]):
+            used += int(nt)
+            if used <= budget:
+                rows.append((dom, int(did), int(nt), used))
+        return rows, used, None
 
-    return d.groupBy("_dom").applyInPandasWithState(
-        run, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout
+    # deterministic in-batch order: event time, then id — over the WHOLE
+    # micro-batch, so the admission prefix never depends on Arrow chunking
+    # (batch parity)
+    return run_keyed(
+        d, ["_dom"], step, out_schema, "used bigint",
+        init=lambda: 0, pack=lambda used: (used,), unpack=lambda t: t[0],
+        order=["_ts", "_id"],
     )
 
 

@@ -10,9 +10,9 @@ started by ``exact_dedup_stream``:
   row (no shuffle, no Python);
 - **band buckets are the state keys**: each doc explodes to LSH_BANDS rows
   keyed by the SAME packed ``xxhash64(band, mh...)`` signature the batch
-  operator joins on; ``applyInPandasWithState`` keeps, per bucket, the
-  member docs inside the lateness horizon (id, event-ts, shingle-hash set
-  packed as int64 bytes);
+  operator joins on; the keyed-state runner (``state.run_keyed``) keeps,
+  per bucket, the member docs inside the lateness horizon (id, event-ts,
+  shingle-hash set packed as int64 bytes);
 - **exact verify inline**: a new doc pairs against its bucket's members
   with the exact set-Jaccard (same distinct-shingle semantics as batch,
   over the md5 universe hashes), emitting only pairs >= threshold;
@@ -35,28 +35,13 @@ stream, the drained result equals the batch operator's (parity-tested).
 
 from __future__ import annotations
 
-from collections.abc import Iterable, Iterator
-
-import pandas as pd
+import numpy as np
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-from wallaroo_spark.streaming.epochs import epoch_fn, from_epoch_fn
 
 from wallaroo_spark.functions import hashing as H
-
-# executors never import wallaroo_spark — serialize this module's helpers
-# into closures by value (see api/aggregation.py for the pattern)
-import sys as _sys
-
-try:  # pragma: no cover - vendored cloudpickle always present in pyspark>=3.3
-    from pyspark import cloudpickle as _cloudpickle
-
-    _cloudpickle.register_pickle_by_value(_sys.modules[__name__])
-except Exception:  # pragma: no cover
-    pass
+from wallaroo_spark.streaming.state import EP, from_epoch_fn, run_keyed
 
 
 def _band_rows(
@@ -103,99 +88,80 @@ def minhash_lsh_pairs_stream(
     ``delay_s``) is applied here. Output: (doc_a, doc_b, jaccard, pair_ts),
     doc_a < doc_b, exact Jaccard >= threshold, one row per pair.
     """
-    wm = f"{int(delay_s)} seconds"
-    bands = _band_rows(sdf.withWatermark(ts_col, wm), id_col, text, ts_col)
-
-    out_schema = "doc_a bigint, doc_b bigint, jaccard double, pair_ts timestamp"
-    state_schema = (
-        "ids array<bigint>, tss array<double>, shs array<binary>, mhs array<binary>"
+    bands = _band_rows(
+        sdf.withWatermark(ts_col, f"{int(delay_s)} seconds"), id_col, text, ts_col
     )
-    n_rows, n_bands = H.LSH_ROWS, H.LSH_BANDS
-    # tz-safe: member ages are evicted against the real-epoch watermark;
+
+    n_rows = H.LSH_ROWS
+    horizon = float(delay_s)
     # pair_ts must round-trip back through the session timezone
-    to_ep, from_ep = epoch_fn(sdf), from_epoch_fn(sdf)
+    from_ep = from_epoch_fn(sdf)
 
-    def run(key: tuple, pdf_iter: Iterable[pd.DataFrame], gs: GroupState) -> Iterator[pd.DataFrame]:
-        import numpy as _np
-        import pandas as _pd
+    def unpack(t):
+        return [
+            (int(i), float(ts), np.frombuffer(sh, dtype="<i8"), np.frombuffer(mh, dtype="<i8"))
+            for i, ts, sh, mh in zip(*t)
+        ]
 
-        horizon = float(delay_s)
-        wm_s = gs.getCurrentWatermarkMs() / 1000.0
+    def pack(members):
+        ids, tss, shs, mhs = zip(*[(i, t, a.tobytes(), m.tobytes()) for i, t, a, m in members])
+        return list(ids), list(tss), list(shs), list(mhs)
 
-        if gs.exists:
-            ids, tss, shs, mhs = gs.get
-            members = [
-                (int(i), float(t), _np.frombuffer(s, dtype="<i8"),
-                 _np.frombuffer(m, dtype="<i8"))
-                for i, t, s, m in zip(ids, tss, shs, mhs)
-            ]
-        else:
-            members = []
+    def live(members, wm):
         # watermark-bounded eviction: a member older than the horizon can
         # never pair with a future in-watermark arrival again
-        members = [m for m in members if m[1] + horizon >= wm_s]
+        return [m for m in members if m[1] + horizon >= wm]
 
-        def save(register_from: float | None) -> None:
-            if members:
-                ids, tss, shs, mhs = zip(
-                    *[(i, t, a.tobytes(), m.tobytes()) for i, t, a, m in members]
-                )
-                gs.update((list(ids), list(tss), list(shs), list(mhs)))
-                base = register_from if register_from is not None else max(
-                    t for _, t, _, _ in members
-                )
-                deadline = int((base + horizon) * 1000 + 1000)
-                gs.setTimeoutTimestamp(max(deadline, gs.getCurrentWatermarkMs() + 1))
-            else:
-                gs.remove()
+    def keep(rows, members, base):
+        if not members:
+            return rows, None, None
+        return rows, members, int((base + horizon) * 1000 + 1000)
 
-        if gs.hasTimedOut:  # pragma: no cover - live-stream idle cleanup
-            save(min((t for _, t, _, _ in members), default=None))
-            return
+    def on_timeout(key, members, wm):  # idle bucket: evict, re-arm or clear
+        members = live(members, wm)
+        return keep([], members, min((t for _, t, _, _ in members), default=0.0))
 
+    def step(key, pdf, members, wm):
+        members = live(members, wm)
         rows = []
-        band = None
-        for pdf in pdf_iter:
-            pdf = pdf.sort_values("_ts", kind="mergesort")
-            for did, rts, rhs, rmh, rband in zip(
-                pdf["_id"], pdf["_ts"], pdf["_hs"], pdf["_mh"], pdf["_band"]
-            ):
-                did, band = int(did), int(rband)
-                ts = to_ep(rts)
-                sh = _np.unique(_np.asarray(rhs, dtype="<i8"))
-                mh = _np.asarray(rmh, dtype="<i8")
-                for mid, mts, msh, mmh in members:
-                    if mid == did:
-                        continue
-                    # the horizon guarantee is on EVENT-time distance; the
-                    # watermark-based eviction above only bounds state (it
-                    # lags a micro-batch behind)
-                    if abs(ts - mts) > horizon:
-                        continue
-                    # cross-band dedup: emit from the LOWEST band whose
-                    # 4-row signature agrees (this bucket's band agrees by
-                    # construction — it is the state key)
-                    lower_match = any(
-                        _np.array_equal(
-                            mh[b * n_rows : (b + 1) * n_rows],
-                            mmh[b * n_rows : (b + 1) * n_rows],
-                        )
-                        for b in range(band)
+        for did, ts, rhs, rmh, band in zip(
+            pdf["_id"], pdf[EP], pdf["_hs"], pdf["_mh"], pdf["_band"]
+        ):
+            did, band = int(did), int(band)
+            sh = np.unique(np.asarray(rhs, dtype="<i8"))
+            mh = np.asarray(rmh, dtype="<i8")
+            for mid, mts, msh, mmh in members:
+                if mid == did:
+                    continue
+                # the horizon guarantee is on EVENT-time distance; the
+                # watermark-based eviction above only bounds state (it
+                # lags a micro-batch behind)
+                if abs(ts - mts) > horizon:
+                    continue
+                # cross-band dedup: emit from the LOWEST band whose
+                # 4-row signature agrees (this bucket's band agrees by
+                # construction — it is the state key)
+                lower_match = any(
+                    np.array_equal(
+                        mh[b * n_rows : (b + 1) * n_rows],
+                        mmh[b * n_rows : (b + 1) * n_rows],
                     )
-                    if lower_match:
-                        continue
-                    inter = _np.intersect1d(sh, msh, assume_unique=True).size
-                    union = sh.size + msh.size - inter
-                    jac = round(inter / union, 4) if union else 0.0
-                    if jac >= threshold:
-                        a, b = (mid, did) if mid < did else (did, mid)
-                        rows.append((a, b, jac, from_ep(max(ts, mts))))
-                members.append((did, ts, sh, mh))
+                    for b in range(band)
+                )
+                if lower_match:
+                    continue
+                inter = np.intersect1d(sh, msh, assume_unique=True).size
+                union = sh.size + msh.size - inter
+                jac = round(inter / union, 4) if union else 0.0
+                if jac >= threshold:
+                    a, b = (mid, did) if mid < did else (did, mid)
+                    rows.append((a, b, jac, from_ep(max(ts, mts))))
+            members.append((did, ts, sh, mh))
+        return keep(rows, members, max((t for _, t, _, _ in members), default=0.0))
 
-        save(None)
-        if rows:
-            yield _pd.DataFrame(rows, columns=["doc_a", "doc_b", "jaccard", "pair_ts"])
-
-    return bands.groupBy("sig").applyInPandasWithState(
-        run, out_schema, state_schema, "update", GroupStateTimeout.EventTimeTimeout
+    return run_keyed(
+        bands, ["sig"], step, "doc_a bigint, doc_b bigint, jaccard double, pair_ts timestamp",
+        "ids array<bigint>, tss array<double>, shs array<binary>, mhs array<binary>",
+        init=list, pack=pack, unpack=unpack, order=["_ts"], event_time="_ts",
+        on_timeout=on_timeout,
     )

@@ -10,32 +10,19 @@ Reference (`application.pony:57-60`; `windows.pony:81-104`;
 - then the key's state is DELETED; a later message opens a fresh window.
 
 Native ``session_window`` approximates this (gap-based, merges sessions);
-this module implements the exact one-shot contract as a keyed state op.
-
-Streaming: ``applyInPandasWithState`` with ``EventTimeTimeout`` — the timer
-replaces the reference's step timeout flush (`runner.pony:465-501`).
-Batch: one sorted pass per key (same code path as keyed_state_batch),
-emitting at simulated watermark = max event_ts seen (arrival order).
+this module implements the exact one-shot contract as one per-key step on
+the keyed-state runner (``state.run_keyed``). Streaming: event-time timers
+replace the reference's step timeout flush (`runner.pony:465-501`). Batch:
+the same step over each key's sorted history, emitting at simulated
+watermark = max event_ts seen (arrival order), then an end-of-input flush of
+the open window.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterable, Iterator
-
-import pandas as pd
-
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from wallaroo_spark.streaming.epochs import epoch_fn
-
-
-def _out_schema(keys: list[str], key_types: dict[str, str], with_policy: bool = False) -> str:
-    base = (
-        ", ".join(f"{k} {key_types[k]}" for k in keys)
-        + ", window_start double, n_events bigint, total_value double, closed boolean"
-    )
-    return base + (", is_late_fire boolean" if with_policy else base[:0])
+from wallaroo_spark.streaming.state import EP, key_schema, run_keyed
 
 
 def _check_policy(late_policy: str | None) -> None:
@@ -47,6 +34,85 @@ def _check_policy(late_policy: str | None) -> None:
             f"ephemeral windows support late_policy None|'drop'|'fire_per_message', "
             f"got {late_policy!r}"
         )
+
+
+def _ephemeral(
+    df: DataFrame,
+    keys: list[str],
+    ts_col: str,
+    value_col: str,
+    trigger_range_s: float,
+    post_trigger_range_s: float,
+    late_policy: str | None,
+    state_schema: str | None,
+) -> DataFrame:
+    _check_policy(late_policy)
+    tail = "window_start double, n_events bigint, total_value double, closed boolean"
+    if late_policy is not None:
+        tail += ", is_late_fire boolean"
+
+    def deadline_ms(start, triggered):
+        if late_policy is None:
+            return int((start + trigger_range_s + post_trigger_range_s) * 1000)
+        # next event-time deadline: the trigger point while untriggered
+        # (wm must pass it STRICTLY, hence +1ms), else the remove point
+        d = start + trigger_range_s
+        if triggered:
+            d += post_trigger_range_s
+        return int(d * 1000) + 1
+
+    def step(key, pdf, st, wm):
+        start, cnt, acc, triggered = st
+        rows = []
+        for ep, v in zip(pdf[EP], pdf[value_col]):
+            if late_policy is None:
+                if start is not None and ep > start + trigger_range_s + post_trigger_range_s:
+                    rows.append((*key, start, cnt, acc, True))  # close + delete state
+                    start = None
+                if start is None:
+                    start, cnt, acc = ep, 0, 0.0
+                cnt += 1
+                acc += float(v)
+            else:
+                if start is None:
+                    start, cnt, acc, triggered = ep, 0, 0.0, False
+                if not triggered:
+                    cnt += 1  # update-then-trigger: the triggering row counts
+                    acc += float(v)
+                    if ep > start + trigger_range_s:
+                        rows.append((*key, start, cnt, acc, True, False))
+                        triggered = True
+                elif late_policy == "fire_per_message":
+                    rows.append((*key, ep, 1, float(v), True, True))
+                if triggered and ep >= start + trigger_range_s + post_trigger_range_s:
+                    start = None  # watermark reached remove_point: delete state
+        if start is None:
+            return rows, None, None
+        return rows, (start, cnt, acc, triggered), deadline_ms(start, triggered)
+
+    def on_timeout(key, st, wm):
+        start, cnt, acc, triggered = st
+        if late_policy is None:
+            return [(*key, start, cnt, acc, True)], None, None
+        rows = []
+        if not triggered and wm > start + trigger_range_s:
+            rows.append((*key, start, cnt, acc, True, False))
+            triggered = True
+        if triggered and wm >= start + trigger_range_s + post_trigger_range_s:
+            return rows, None, None  # remove_point passed: silent state deletion
+        return rows, (start, cnt, acc, triggered), deadline_ms(start, triggered)
+
+    def flush(key, st):  # batch end of input: the still-open window, unclosed
+        if st is None or st[3]:
+            return []
+        row = (*key, *st[:3], False)
+        return [row if late_policy is None else (*row, False)]
+
+    return run_keyed(
+        df, keys, step, key_schema(df, keys, tail), state_schema,
+        init=lambda: (None, 0, 0.0, False), order=[ts_col], event_time=ts_col,
+        on_timeout=on_timeout, flush=flush,
+    )
 
 
 def ephemeral_windows_batch(
@@ -74,52 +140,10 @@ def ephemeral_windows_batch(
     reaches start + trigger + post the key's state is deleted (the next row
     opens a fresh window). Adds an ``is_late_fire`` column.
     """
-    _check_policy(late_policy)
-    key_types = {f.name: f.dataType.simpleString() for f in df.schema.fields}
-    schema = _out_schema(keys, key_types, with_policy=late_policy is not None)
-    cols = [c.split()[0] for c in schema.split(",")]
-    to_ep = epoch_fn(df)  # tz-safe: emitted starts are real epoch seconds
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(ts_col, kind="mergesort")
-        kvals = [pdf.iloc[0][k] for k in keys]
-        outs = []
-        start = None
-        cnt, acc = 0, 0.0
-        if late_policy is None:
-            for ts, v in zip(pdf[ts_col], pdf[value_col]):
-                ep = to_ep(ts)
-                if start is not None and ep > start + trigger_range_s + post_trigger_range_s:
-                    outs.append((*kvals, start, cnt, acc, True))  # close + delete state
-                    start = None
-                if start is None:
-                    start, cnt, acc = ep, 0, 0.0
-                cnt += 1
-                acc += float(v)
-            if start is not None:
-                outs.append((*kvals, start, cnt, acc, False))
-        else:
-            triggered = False
-            for ts, v in zip(pdf[ts_col], pdf[value_col]):
-                ep = to_ep(ts)
-                if start is None:
-                    start, cnt, acc, triggered = ep, 0, 0.0, False
-                if not triggered:
-                    cnt += 1  # update-then-trigger: the triggering row counts
-                    acc += float(v)
-                    if ep > start + trigger_range_s:
-                        outs.append((*kvals, start, cnt, acc, True, False))
-                        triggered = True
-                else:
-                    if late_policy == "fire_per_message":
-                        outs.append((*kvals, ep, 1, float(v), True, True))
-                if triggered and ep >= start + trigger_range_s + post_trigger_range_s:
-                    start = None  # watermark reached remove_point: delete state
-            if start is not None and not triggered:
-                outs.append((*kvals, start, cnt, acc, False, False))
-        return pd.DataFrame(outs, columns=cols)
-
-    return df.groupBy(*keys).applyInPandas(run, schema=schema)
+    return _ephemeral(
+        df, keys, ts_col, value_col, trigger_range_s, post_trigger_range_s,
+        late_policy, None,
+    )
 
 
 def ephemeral_windows_stream(
@@ -138,88 +162,7 @@ def ephemeral_windows_stream(
     reference's idle-flush, minus its actor races. ``late_policy`` composes
     the S8 policies with the one-shot window (see ephemeral_windows_batch;
     same semantics, same extra is_late_fire column)."""
-    _check_policy(late_policy)
-    key_types = {f.name: f.dataType.simpleString() for f in sdf.schema.fields}
-    schema = _out_schema(keys, key_types, with_policy=late_policy is not None)
-    cols = [c.split()[0] for c in schema.split(",")]
-    state_schema = "start double, cnt bigint, acc double, triggered boolean"
-    # tz-safe: starts/deadlines are compared against real-epoch watermark ms
-    to_ep = epoch_fn(sdf)
-
-    def run(key: tuple, pdf_iter: Iterable[pd.DataFrame], gs: GroupState) -> Iterator[pd.DataFrame]:
-        if gs.hasTimedOut:
-            start, cnt, acc, triggered = gs.get
-            if late_policy is None:
-                gs.remove()
-                yield pd.DataFrame([(*key, start, cnt, acc, True)], columns=cols)
-                return
-            wm = gs.getCurrentWatermarkMs() / 1000.0
-            outs = []
-            if not triggered and wm > start + trigger_range_s:
-                outs.append((*key, start, cnt, acc, True, False))
-                triggered = True
-            if triggered and wm >= start + trigger_range_s + post_trigger_range_s:
-                gs.remove()  # remove_point passed: silent state deletion
-            else:
-                gs.update((start, cnt, acc, triggered))
-                deadline = (
-                    start + trigger_range_s
-                    if not triggered
-                    else start + trigger_range_s + post_trigger_range_s
-                )
-                gs.setTimeoutTimestamp(
-                    max(int(deadline * 1000) + 1, gs.getCurrentWatermarkMs() + 1)
-                )
-            if outs:
-                yield pd.DataFrame(outs, columns=cols)
-            return
-        start, cnt, acc, triggered = gs.get if gs.exists else (None, 0, 0.0, False)
-        outs = []
-        for pdf in pdf_iter:
-            pdf = pdf.sort_values(ts_col, kind="mergesort")
-            for ts, v in zip(pdf[ts_col], pdf[value_col]):
-                ep = to_ep(ts)
-                if late_policy is None:
-                    if start is not None and ep > start + trigger_range_s + post_trigger_range_s:
-                        outs.append((*key, start, cnt, acc, True))
-                        start = None
-                    if start is None:
-                        start, cnt, acc = ep, 0, 0.0
-                    cnt += 1
-                    acc += float(v)
-                else:
-                    if start is None:
-                        start, cnt, acc, triggered = ep, 0, 0.0, False
-                    if not triggered:
-                        cnt += 1  # update-then-trigger: triggering row included
-                        acc += float(v)
-                        if ep > start + trigger_range_s:
-                            outs.append((*key, start, cnt, acc, True, False))
-                            triggered = True
-                    else:
-                        if late_policy == "fire_per_message":
-                            outs.append((*key, ep, 1, float(v), True, True))
-                    if triggered and ep >= start + trigger_range_s + post_trigger_range_s:
-                        start = None  # remove_point reached: delete state
-        if start is None:
-            gs.remove()
-        else:
-            gs.update((start, cnt, acc, triggered))
-            if late_policy is None:
-                deadline_ms = int((start + trigger_range_s + post_trigger_range_s) * 1000)
-            else:
-                # next event-time deadline: the trigger point while untriggered
-                # (wm must pass it STRICTLY, hence +1ms), else the remove point
-                d = start + trigger_range_s
-                if triggered:
-                    d += post_trigger_range_s
-                deadline_ms = int(d * 1000) + 1
-            # Clamp to the global watermark: a lagging key's deadline can sit
-            # below it, and Spark rejects timeouts <= watermark.
-            gs.setTimeoutTimestamp(max(deadline_ms, gs.getCurrentWatermarkMs() + 1))
-        if outs:
-            yield pd.DataFrame(outs, columns=cols)
-
-    return sdf.groupBy(*keys).applyInPandasWithState(
-        run, schema, state_schema, "update", GroupStateTimeout.EventTimeTimeout
+    return _ephemeral(
+        sdf, keys, ts_col, value_col, trigger_range_s, post_trigger_range_s,
+        late_policy, "start double, cnt bigint, acc double, triggered boolean",
     )

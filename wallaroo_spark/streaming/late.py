@@ -10,20 +10,16 @@ flush via event-time timeout).
 State per key: open windows {win_start: (count, sum)} + the running max ts.
 Emission: closed windows stream out per micro-batch (update mode); a drained
 stream's closed-window set equals the batch operator's closed output — the
-parity the tests assert.
+parity the tests assert. Runs as one per-key step on the keyed-state runner
+(``state.run_keyed``), replaying each micro-batch in arrival order.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterable, Iterator
-
-import pandas as pd
-
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from wallaroo_spark.operators.late_data import DROP, FIRE_PER_MESSAGE, PLACE_IN_OLDEST_WINDOW
-from wallaroo_spark.streaming.epochs import epoch_fn
+from wallaroo_spark.streaming.state import EP, key_schema, run_keyed
 
 
 def windowed_late_policy_stream(
@@ -36,76 +32,53 @@ def windowed_late_policy_stream(
     delay_s: int,
     policy: str,
 ) -> DataFrame:
-    key_types = {f.name: f.dataType.simpleString() for f in sdf.schema.fields}
-    out_schema = (
-        ", ".join(f"{k} {key_types[k]}" for k in keys)
-        + ", window_start bigint, window_end bigint, n_events bigint,"
-        + " total_value double, is_late_fire boolean"
+    tail = (
+        "window_start bigint, window_end bigint, n_events bigint,"
+        " total_value double, is_late_fire boolean"
     )
-    cols = [c.split()[0] for c in out_schema.split(",")]
-    state_schema = "max_ts double, wins map<bigint, array<double>>"
-    # tz-safe epoch: window starts and the idle deadline must be real
-    # epoch (the watermark clamp below is), not naive-as-UTC session-tz
-    to_ep = epoch_fn(sdf)
 
-    def run(key: tuple, pdf_iter: Iterable[pd.DataFrame], gs: GroupState) -> Iterator[pd.DataFrame]:
-        if gs.hasTimedOut:  # pragma: no cover - final flush path for live streams
-            max_ts, wins = gs.get
-            gs.remove()
-            rows = [
-                (*key, int(w), int(w) + size_s, int(ca[0]), ca[1], False)
-                for w, ca in sorted((wins or {}).items())
-            ]
-            if rows:
-                yield pd.DataFrame(rows, columns=cols)
-            return
-
-        if gs.exists:
-            max_ts, wins = gs.get
-            wins = {int(k): [int(v[0]), float(v[1])] for k, v in (wins or {}).items()}
-        else:
-            max_ts, wins = float("-inf"), {}
-        outs = []
-        for pdf in pdf_iter:
-            pdf = pdf.sort_values(arrival_col, kind="mergesort")
-            for ts, v in zip(pdf[ts_col], pdf[value_col]):
-                ep = to_ep(ts)
-                max_ts = max(max_ts, ep)
-                wm = max_ts - delay_s
-                own = int(ep // size_s) * size_s
-                late = own + size_s <= wm
-                if late:
-                    if policy == DROP:
-                        pass
-                    elif policy == FIRE_PER_MESSAGE:
-                        outs.append((*key, int(ep), int(ep), 1, float(v), True))
-                    elif policy == PLACE_IN_OLDEST_WINDOW:
-                        oldest = int(wm // size_s) * size_s
-                        c = wins.setdefault(oldest, [0, 0.0])
-                        c[0] += 1
-                        c[1] += float(v)
-                else:
-                    c = wins.setdefault(own, [0, 0.0])
+    def step(key, pdf, st, wm_g):
+        max_ts, wins = st
+        rows = []
+        for ep, v in zip(pdf[EP], pdf[value_col]):
+            max_ts = max(max_ts, ep)
+            wm = max_ts - delay_s
+            own = int(ep // size_s) * size_s
+            late = own + size_s <= wm
+            if late:
+                if policy == DROP:
+                    pass
+                elif policy == FIRE_PER_MESSAGE:
+                    rows.append((*key, int(ep), int(ep), 1, float(v), True))
+                elif policy == PLACE_IN_OLDEST_WINDOW:
+                    oldest = int(wm // size_s) * size_s
+                    c = wins.setdefault(oldest, [0, 0.0])
                     c[0] += 1
                     c[1] += float(v)
-                # close windows the watermark has passed
-                for w in [w for w in wins if w + size_s <= wm]:
-                    cnt, acc = wins.pop(w)
-                    outs.append((*key, w, w + size_s, int(cnt), acc, False))
-        # counts must be stored as FLOATS: a Python int inside an
-        # array<double> state cell silently round-trips to None (found by
-        # the multi-batch timer test; drained single-batch runs never
-        # restore state and can't see it)
-        gs.update((max_ts, {w: (float(ca[0]), float(ca[1])) for w, ca in wins.items()}))
-        if wins:
-            # Clamp to the query's global watermark: a lagging key's own
-            # max_ts-based deadline can sit below it, and Spark rejects
-            # timeout timestamps <= watermark (IllegalArgumentException).
-            deadline_ms = int((max_ts + delay_s + size_s) * 1000)
-            gs.setTimeoutTimestamp(max(deadline_ms, gs.getCurrentWatermarkMs() + 1))
-        if outs:
-            yield pd.DataFrame(outs, columns=cols)
+            else:
+                c = wins.setdefault(own, [0, 0.0])
+                c[0] += 1
+                c[1] += float(v)
+            # close windows the watermark has passed
+            for w in [w for w in wins if w + size_s <= wm]:
+                cnt, acc = wins.pop(w)
+                rows.append((*key, w, w + size_s, int(cnt), acc, False))
+        deadline = int((max_ts + delay_s + size_s) * 1000) if wins else None
+        return rows, (max_ts, wins), deadline
 
-    return sdf.groupBy(*keys).applyInPandasWithState(
-        run, out_schema, state_schema, "update", GroupStateTimeout.EventTimeTimeout
+    def on_timeout(key, st, wm_g):  # final flush of every still-open window
+        _, wins = st
+        rows = [(*key, w, w + size_s, c, acc, False) for w, (c, acc) in sorted(wins.items())]
+        return rows, None, None
+
+    # counts must be stored as FLOATS: a Python int inside an array<double>
+    # state cell silently round-trips to None (found by the multi-batch timer
+    # test; drained single-batch runs never restore state and can't see it)
+    return run_keyed(
+        sdf, keys, step, key_schema(sdf, keys, tail),
+        "max_ts double, wins map<bigint, array<double>>",
+        init=lambda: (float("-inf"), {}),
+        pack=lambda s: (s[0], {w: (float(c), float(a)) for w, (c, a) in s[1].items()}),
+        unpack=lambda t: (t[0], {int(w): [int(c), float(a)] for w, (c, a) in (t[1] or {}).items()}),
+        order=[arrival_col], event_time=ts_col, on_timeout=on_timeout,
     )

@@ -9,8 +9,8 @@ summary keeps at most ``capacity`` counters and still guarantees:
 
 This is the stream-side complement of ``operators/sketch.countmin_*``
 (which streams natively as a running cell count but cannot enumerate
-items). Implemented as the engine's standard keyed state op
-(``applyInPandasWithState``); one state row per key holds the counter map —
+items). Implemented as one per-key step on the keyed-state runner
+(``state.run_keyed``); one state row per key holds the counter map —
 state size is capacity-bounded regardless of vocabulary, the property that
 matters at 100 TB. The global (un-keyed) variant funnels through one state
 key per partition-group and merges summaries downstream (MG summaries merge
@@ -20,13 +20,10 @@ collect() funnel (`application.pony:250-256`).
 
 from __future__ import annotations
 
-from collections.abc import Iterable, Iterator
-
-import pandas as pd
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from wallaroo_spark.streaming.state import key_schema, run_keyed
 
 
 def misra_gries_update(counters: dict, item, capacity: int) -> None:
@@ -60,31 +57,18 @@ def heavy_hitters_stream(
     counts for non-string item columns.
     """
     sdf = sdf.withColumn(item_col, F.col(item_col).cast("string"))
-    key_types = {f.name: f.dataType.simpleString() for f in sdf.schema.fields}
-    out_schema = (
-        ", ".join(f"{k} {key_types[k]}" for k in keys)
-        + f", {item_col} string, est_count bigint, n_seen bigint"
-    )
-    state_schema = "n_seen bigint, counters map<string, bigint>"
-    cols = [c.split()[0] for c in out_schema.split(",")]
 
-    def run(key: tuple, pdf_iter: Iterable[pd.DataFrame], gs: GroupState) -> Iterator[pd.DataFrame]:
-        if gs.exists:
-            n_seen, counters = gs.get
-            counters = dict(counters or {})
-        else:
-            n_seen, counters = 0, {}
-        for pdf in pdf_iter:
-            for item in pdf[item_col]:
-                misra_gries_update(counters, item, capacity)
-                n_seen += 1
-        gs.update((n_seen, counters))
-        if counters:
-            yield pd.DataFrame(
-                [(*key, item, cnt, n_seen) for item, cnt in sorted(counters.items())],
-                columns=cols,
-            )
+    def step(key, pdf, st, wm):
+        n_seen, counters = st
+        for item in pdf[item_col]:
+            misra_gries_update(counters, item, capacity)
+            n_seen += 1
+        rows = [(*key, item, cnt, n_seen) for item, cnt in sorted(counters.items())]
+        return rows, (n_seen, counters), None
 
-    return sdf.groupBy(*keys).applyInPandasWithState(
-        run, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout
+    return run_keyed(
+        sdf, keys, step,
+        key_schema(sdf, keys, f"{item_col} string, est_count bigint, n_seen bigint"),
+        "n_seen bigint, counters map<string, bigint>",
+        init=lambda: (0, {}), unpack=lambda t: (t[0], dict(t[1] or {})),
     )
