@@ -314,6 +314,12 @@ def main() -> None:
 
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
+    # the parallelism every timing above ran at, so runs on different
+    # hosts or core counts are not compared blind
+    run_env = {
+        "cpus": spark.sparkContext.defaultParallelism,
+        "master": spark.sparkContext.master,
+    }
     throughput = {
         # headline continuity with BENCH_r05 (best-of-two scoring)
         "stream_rows_per_sec": round(n_events * len(stream_qs) / sec_best, 1),
@@ -344,6 +350,7 @@ def main() -> None:
                 "suite_cold_seconds": total_cold,
                 "queries": timings,
                 "sf": sf_val,
+                **run_env,
                 "events_rows": n_events,
                 "stream_single_pass_seconds": single_pass,
                 **throughput,
@@ -364,6 +371,7 @@ def main() -> None:
                 "suite_cold_seconds": total_cold,
                 "queries": top,
                 "sf": sf_val,
+                **run_env,
                 "events_rows": n_events,
                 "n_queries_total": len(timings),
                 "queries_note": f"top-16 costliest of {len(timings)}; "

@@ -56,6 +56,28 @@ def value_hash(rows, colnames):
     return h.hexdigest()
 
 
+def _row_lines(rows, colnames) -> set[str]:
+    order = sorted(range(len(colnames)), key=lambda i: colnames[i])
+    return {"|".join(norm_cell(r[i]) for i in order) for r in rows}
+
+
+def compare(srows, scols, orows, ocols) -> list[str]:
+    """The gate's comparison of Spark rows (tuples) against oracle rows:
+    row count, sorted-column schema, order-insensitive value hash.
+    Returns the problems found; empty means OK."""
+    problems = []
+    if len(srows) != len(orows):
+        problems.append(f"rowcount spark={len(srows)} oracle={len(orows)}")
+    if sorted(scols) != sorted(ocols):
+        problems.append(f"cols spark={sorted(scols)} oracle={sorted(ocols)}")
+    elif value_hash(srows, scols) != value_hash(orows, ocols):
+        sset, oset = _row_lines(srows, scols), _row_lines(orows, ocols)
+        problems.append("value-hash mismatch")
+        problems.append(f"spark-only={list(sset - oset)[:3]}")
+        problems.append(f"oracle-only={list(oset - sset)[:3]}")
+    return problems
+
+
 def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
@@ -95,34 +117,7 @@ def main():
             traceback.print_exc()
             failures.append(name)
             continue
-        problems = []
-        if len(srows) != len(orows):
-            problems.append(f"rowcount spark={len(srows)} oracle={len(orows)}")
-        if sorted(scols) != sorted(ocols):
-            problems.append(f"cols spark={sorted(scols)} oracle={sorted(ocols)}")
-        else:
-            sh = value_hash([tuple(r) for r in srows], scols)
-            oh = value_hash(orows, ocols)
-            if sh != oh:
-                problems.append("value-hash mismatch")
-                sset = {
-                    "|".join(
-                        norm_cell(t[i])
-                        for i in sorted(range(len(scols)), key=lambda i: scols[i])
-                    )
-                    for t in [tuple(r) for r in srows]
-                }
-                oset = {
-                    "|".join(
-                        norm_cell(t[i])
-                        for i in sorted(range(len(ocols)), key=lambda i: ocols[i])
-                    )
-                    for t in orows
-                }
-                so = list(sset - oset)[:3]
-                os_ = list(oset - sset)[:3]
-                problems.append(f"spark-only={so}")
-                problems.append(f"oracle-only={os_}")
+        problems = compare([tuple(r) for r in srows], scols, orows, ocols)
         if problems:
             print(f"FAIL {name}: " + "; ".join(problems))
             failures.append(name)

@@ -21,11 +21,15 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def _union_seconds(ivals: list[tuple[float, float]]) -> float:
+    """Length of the union of [start, end) intervals: overlapping jobs
+    (the concurrent chains `overlap_build` starts) count once."""
     tot = 0.0
+    end = float("-inf")
     for a, b in sorted(ivals):
-        if b <= a:
-            continue
-        tot += b - a
+        a = max(a, end)
+        if b > a:
+            tot += b - a
+            end = b
     return tot
 
 

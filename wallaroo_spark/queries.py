@@ -9,6 +9,7 @@ sides — the driver's compare sorts columns by name before hashing.
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -4639,17 +4640,9 @@ def lsh_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     truth = dedup.ngram_jaccard_pairs(docs, threshold=0.5, shingles_df=sh).select(
         "doc_a", "doc_b"
     )
-    caught = (
-        dedup.minhash_lsh_pairs(docs, threshold=0.5, shingles_df=sh)
-        .select("doc_a", "doc_b")
-        .withColumn("_c", F.lit(1))
-    )
+    found = dedup.minhash_lsh_pairs(docs, threshold=0.5, shingles_df=sh)
     sh.unpersist()
-    return truth.join(caught, ["doc_a", "doc_b"], "left").agg(
-        F.count("*").alias("n_true"),
-        F.count("_c").alias("n_caught"),
-        F.round(F.count("_c") / F.count("*").cast("double"), 4).alias("recall"),
-    )
+    return _hit_count(truth, found, ["doc_a", "doc_b"])
 
 
 _BM25_TERMS = ("table", "window", "fast")
@@ -5482,6 +5475,10 @@ def paragraph_dedup_ccnet(spark: SparkSession, sf_dir: str) -> DataFrame:
     return text.paragraph_dedup(docs, block_tokens=16)
 
 
+# the oracles' default vector source: every embedding as a DOUBLE[] ``v``
+_EMB_SQL = "SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings"
+
+
 def _pq_sqd_sql(a: str, b: str, ds: int = 8) -> str:
     """Index-ordered L2 squared distance — list_reduce is a sequential
     LEFT fold, bit-identical to similarity._sqdist's zip_with + aggregate
@@ -5505,7 +5502,7 @@ def _pq_train_blocks(
     ':pqtrain' hash rank (vec_id tiebreak), while seeds and the encode-
     side sv stay full-corpus — exactly the engine's cut."""
     sqd = _pq_sqd_sql
-    e_def = e_sql or "SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings"
+    e_def = e_sql or _EMB_SQL
     blocks = [f"""
     e AS ({e_def}),
     seeds AS (SELECT row_number() OVER (
@@ -5784,7 +5781,7 @@ def _ivfpq_oracle(
         else f"greatest({k}, {n_cells})"
     )
     geo = f"{geo_sql}," if geo_sql else ""
-    e_def = e_sql or "SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings"
+    e_def = e_sql or _EMB_SQL
     blocks = [f"""
     e AS ({e_def}),
     {geo}
@@ -5930,7 +5927,7 @@ def _ivfpq_res_oracle(
     subtraction (no fold — bit-exact by construction)."""
     sqd = _pq_sqd_sql
     d = m * ds
-    e_def = e_sql or "SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings"
+    e_def = e_sql or _EMB_SQL
     res = f"[ (e.v[i] - cb.cv[i]) for i in generate_series(1, {d}) ]"
     blocks = [f"""
     e AS ({e_def}),
@@ -6144,16 +6141,51 @@ def ivfpq_adaptive_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Round 9: ANN quality loop — recall@k audit across the PQ/IVF-PQ family
 # ---------------------------------------------------------------------------
+#
+# Every recall audit is built from the same stages: the fixed query/corpus
+# split, the exact-L2 truth, index artifacts shared across arms and pinned
+# with localCheckpoint (fine codebook + codes, coarse codebook + cells, the
+# OPQ PQ arm), and one LEFT-JOIN hit count per arm. The SQL oracles mirror
+# it: one truth/hits skeleton (_recall_oracle) over (variant, arm_sql) lists.
 
 
 _ANN_AUDIT_TOPK = 10
 _ANN_AUDIT_SHORTLIST = 30
+_ANN_PROD_SHORTLIST = 60
+# fine-codebook sampled-training set: the same 39-points-per-centroid
+# rule the coarse arm uses, at the fine chain's k=16 centroids/subspace
+# (each subspace trains on the same row cut, so one rule sizes them all)
+_ANN_PROD_FINE_SAMPLE = 39 * 16
+# ivf_auto_size's sqrt-N cell clamp over a corpus count, the SQL twin of
+# the Python function: n_cells = clamp(2, floor(sqrt(n)), n // 8)
+_SQRT_N_CELLS_SQL = (
+    "greatest(2, least(CAST(floor(sqrt(count(*))) AS BIGINT), count(*) // 8))"
+)
+
+
+def _ivf_geo_sql() -> str:
+    """The ivf_auto_size sqrt-N rule as a geo CTE over the corpus count,
+    referenced by the auto-geometry oracle arms as scalar subqueries."""
+    return f"""geo0 AS (SELECT {_SQRT_N_CELLS_SQL} AS n_cells
+               FROM e WHERE vec_id >= 10),
+    geo AS (SELECT n_cells, greatest(1, n_cells // 8) AS nprobe FROM geo0)"""
+
+
+# _ivfpq_oracle arguments of the auto-geometry arms, and the sampled coarse
+# training set (coarse_sample="auto" = 39*n_cells, the FAISS
+# points-per-centroid rule) as a geo expression
+_AUTO_GEO_SQL_KW = dict(
+    n_cells="(SELECT n_cells FROM geo)",
+    nprobe="(SELECT nprobe FROM geo)",
+    geo_sql=_ivf_geo_sql(),
+)
+_AUTO_COARSE_SAMPLE_SQL = "39 * (SELECT n_cells FROM geo)"
 
 
 def _opq_perm_e_sql(
     m: int = 8,
     ds: int = 8,
-    src: str = "SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings",
+    src: str = _EMB_SQL,
 ) -> str:
     """Vector source that fits and applies the variance-balancing
     dimension permutation (similarity.opq_fit_permutation): per-dim
@@ -6177,33 +6209,104 @@ def _opq_perm_e_sql(
     """
 
 
+def _recall_oracle(
+    arms: list[tuple[str, str]],
+    e_sql: str = _EMB_SQL,
+    d: int = 64,
+    topk: int = _ANN_AUDIT_TOPK,
+) -> str:
+    """Recall@k oracle: the exact L2 top-k truth over ``e_sql``'s vectors
+    (6dp-rounded distance, vec_id tiebreak — _ann_exact_truth's cut), each
+    (variant, arm_sql) of ``arms`` nested as a derived CTE, and one
+    LEFT-JOIN hit count per variant, the lsh_recall_audit shape. Each arm
+    is its variant's full, individually hash-gated oracle chain; the
+    nested WITH shadows the outer names, so those chains compose verbatim.
+
+    The truth comes from the untransformed vectors and still holds for an
+    arm that feeds transformed vectors through its chain (the learned
+    permutation, the sign-flipped Hadamard rotation): those transforms are
+    orthogonal, so they preserve L2 distances and the exact ranking."""
+    sqd = _pq_sqd_sql
+    vblocks = ",\n    ".join(f"v_{name} AS ({sql})" for name, sql in arms)
+    hits = "\n    UNION ALL\n".join(
+        f"""    SELECT '{name}' AS variant, count(*) AS n_true,
+           count(a.vec_id) AS n_caught
+    FROM truth t LEFT JOIN v_{name} a
+      ON a.query_id = t.query_id AND a.vec_id = t.vec_id"""
+        for name, _ in arms
+    )
+    return f"""
+    WITH e AS ({e_sql}),
+    truth AS (SELECT query_id, vec_id FROM (
+        SELECT q.vec_id AS query_id, c.vec_id,
+               row_number() OVER (PARTITION BY q.vec_id
+                   ORDER BY round({sqd("c.v", "q.v", d)}, 6), c.vec_id) AS rk
+        FROM e c, e q WHERE c.vec_id >= 10 AND q.vec_id < 10) WHERE rk <= {topk}),
+    {vblocks},
+    hits AS (
+{hits})
+    SELECT variant, CAST(n_true AS BIGINT) AS n_true,
+           CAST(n_caught AS BIGINT) AS n_caught,
+           round(n_caught / CAST(n_true AS DOUBLE), 4) AS recall
+    FROM hits ORDER BY variant
+    """
+
+
+def _auto_ivfpq_oracle_arms(
+    topk: int, e_sql: str | None = None
+) -> list[tuple[str, str]]:
+    """The auto-geometry arms the prod and clustered oracles share: raw
+    ADC, + exact re-rank, + re-rank with sampled coarse TRAINING (the
+    actual production default: the 100 TB posture where the sqrt-N-cell
+    Lloyd never does N^1.5 work), each chain fed ``e_sql``'s vectors."""
+    auto = dict(_AUTO_GEO_SQL_KW, topk=topk, e_sql=e_sql)
+    return [
+        ("ivfpq_auto", _ivfpq_oracle(**auto)),
+        ("ivfpq_auto_rerank",
+         _ivfpq_oracle(**auto, rerank_shortlist=_ANN_PROD_SHORTLIST)),
+        ("ivfpq_auto_sampled_rerank",
+         _ivfpq_oracle(**auto, rerank_shortlist=_ANN_PROD_SHORTLIST,
+                       coarse_sample=_AUTO_COARSE_SAMPLE_SQL)),
+    ]
+
+
+def _query_split(emb: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(corpus, queries) of an audit's vectors: ids >= 10 are the corpus,
+    the first 10 ids the fixed query sample (recall is a STATISTIC over a
+    fixed sample, the lsh_recall_audit argument)."""
+    return emb.filter(F.col("vec_id") >= 10), emb.filter(F.col("vec_id") < 10)
+
+
+def _auto_geo(corpus: DataFrame, topk: int) -> tuple[int, int]:
+    """(n_cells, nprobe) by ivf_auto_size's sqrt-N rule, from one count."""
+    auto = similarity.ivf_auto_size(corpus.count(), topk)
+    return auto["n_cells"], auto["nprobe"]
+
+
 def _ann_exact_truth(emb: DataFrame, topk: int) -> DataFrame:
-    """Exact L2 top-k ground truth shared by ALL recall audits
-    (ann_recall_audit / opq_recall_audit / opq_rotation_audit /
-    ann_recall_prod_audit): the bounded 10-query x corpus broadcast scan
-    (recall is a STATISTIC over a fixed query sample), localCheckpointed
-    to queries x topk rows. One definition so the cut rule (6dp-rounded
-    distance, vec_id tiebreak) can never desynchronize across audits or
-    drift from the shared SQL truth block."""
+    """Exact L2 top-k ground truth shared by all six recall audits
+    (ann_recall_audit, opq_recall_audit, opq_rotation_audit,
+    ann_recall_prod_audit, ann_recall_clustered_audit,
+    opq_rotation_prod_audit): the bounded 10-query x corpus broadcast scan,
+    localCheckpointed to queries x topk rows. One definition so the cut
+    rule (6dp-rounded distance, vec_id tiebreak) can never desynchronize
+    across audits or drift from _recall_oracle's SQL truth block."""
     from pyspark.sql.window import Window
 
-    qv = emb.filter(F.col("vec_id") < 10).select(
+    corpus, queries = _query_split(emb)
+    qv = queries.select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").cast("array<double>").alias("_qv"),
     )
-    exact = (
-        emb.filter(F.col("vec_id") >= 10)
-        .crossJoin(F.broadcast(qv))
-        .select(
-            "query_id",
-            "vec_id",
-            F.round(
-                similarity._sqdist(
-                    F.col("embedding").cast("array<double>"), F.col("_qv")
-                ),
-                6,
-            ).alias("_d"),
-        )
+    exact = corpus.crossJoin(F.broadcast(qv)).select(
+        "query_id",
+        "vec_id",
+        F.round(
+            similarity._sqdist(
+                F.col("embedding").cast("array<double>"), F.col("_qv")
+            ),
+            6,
+        ).alias("_d"),
     )
     w = Window.partitionBy("query_id").orderBy("_d", "vec_id")
     return (
@@ -6214,63 +6317,127 @@ def _ann_exact_truth(emb: DataFrame, topk: int) -> DataFrame:
     )
 
 
+def _fine_artifacts(
+    emb: DataFrame, corpus: DataFrame, sample: int | None = None
+) -> tuple[DataFrame, DataFrame]:
+    """(codebook, codes): the fine PQ codebook trained on ``emb`` (on the
+    bounded ``sample`` rows when given) and the corpus codes, pinned with
+    localCheckpoint so no arm re-runs the encode."""
+    cb = similarity.pq_train(emb, iters=2, sample=sample)
+    return cb, similarity.pq_encode(corpus, cb).localCheckpoint(eager=True)
+
+
+def _coarse_artifacts(
+    emb: DataFrame, corpus: DataFrame, n_cells: int, sampled: bool = False
+) -> tuple[DataFrame, DataFrame]:
+    """(coarse, cells): the coarse codebook, a one-subspace pq_train at
+    ``n_cells`` (trained on the 39-points-per-cell salted-hash sample when
+    ``sampled``), and the corpus cell assignment, each pinned with
+    localCheckpoint."""
+    sample = similarity.IVF_TRAIN_POINTS_PER_CELL * n_cells if sampled else None
+    coarse = similarity.pq_train(
+        emb, m=1, sub_dim=64, k=n_cells, iters=2, sample=sample
+    ).localCheckpoint(eager=True)
+    cells = similarity._coarse_cells(
+        corpus, coarse, 64, "vec_id", "embedding", 6
+    ).localCheckpoint(eager=True)
+    return coarse, cells
+
+
+def _ivfpq_arm(
+    emb: DataFrame,
+    corpus: DataFrame,
+    queries: DataFrame,
+    topk: int,
+    geo: tuple[int, int],
+    coarse_cells: tuple[DataFrame, DataFrame],
+    fine_codes: tuple[DataFrame, DataFrame],
+    rerank: bool = True,
+) -> DataFrame:
+    """One IVF-PQ recall arm over prebuilt artifacts: ``geo`` is
+    (n_cells, nprobe), ``coarse_cells`` a _coarse_artifacts pair and
+    ``fine_codes`` a _fine_artifacts pair; ``rerank`` re-ranks the ADC
+    shortlist by exact L2."""
+    (n_cells, nprobe), (coarse, cells), (fine, codes) = geo, coarse_cells, fine_codes
+    kw = dict(
+        topk=topk, n_cells=n_cells, nprobe=nprobe,
+        coarse=coarse, fine=fine, cells=cells, codes=codes,
+    )
+    if rerank:
+        return similarity.ivfpq_topk_rerank(
+            emb, corpus, queries, shortlist=_ANN_PROD_SHORTLIST, **kw
+        )
+    return similarity.ivfpq_topk(emb, corpus, queries, **kw)
+
+
+def _pq_book(vecs: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(subvectors, codebook): ONE persisted (id, sub, _sv) base per
+    transform arm and the fine codebook trained on it. The base feeds both
+    the Lloyd training and the corpus-side pass (r10 VERDICT #4 — the r9
+    #6 shared-artifact discipline applied inside each arm), so the
+    transform+slice scan runs once."""
+    sv = similarity._pq_subvecs(
+        vecs, 8, 8, "vec_id", "embedding"
+    ).localCheckpoint(eager=True)
+    return sv, similarity.pq_train(vecs, iters=2, subvecs=sv)
+
+
+def _pq_arm(vecs: DataFrame, topk: int) -> DataFrame:
+    """The OPQ audits' PQ arm: ADC top-k of the queries over one
+    (possibly transformed) vector frame, from a _pq_book codebook."""
+    sv, cb = _pq_book(vecs)
+    codes = similarity.pq_encode(
+        vecs, cb, subvecs=sv.filter(F.col("vec_id") >= 10)
+    )
+    return similarity.pq_topk(
+        codes, cb, vecs.filter(F.col("vec_id") < 10), topk=topk
+    )
+
+
+def _opq_permuted(vecs: DataFrame) -> DataFrame:
+    """``vecs`` under its own learned variance-balancing permutation."""
+    return similarity.apply_dim_permutation(
+        vecs, similarity.opq_fit_permutation(vecs)
+    )
+
+
+def _hit_count(
+    truth: DataFrame, found: DataFrame, keys: list[str], *lead
+) -> DataFrame:
+    """One recall row (*lead, n_true, n_caught, recall): ``found`` LEFT
+    JOINed onto ``truth`` by ``keys`` and hit-counted."""
+    caught = found.select(*keys).withColumn("_c", F.lit(1))
+    return truth.join(caught, keys, "left").agg(
+        *lead,
+        F.count("*").alias("n_true"),
+        F.count("_c").alias("n_caught"),
+        F.round(F.count("_c") / F.count("*").cast("double"), 4).alias("recall"),
+    )
+
+
 def _recall_table(truth: DataFrame, arms: dict) -> DataFrame:
     """Per-arm recall rows (variant, n_true, n_caught, recall) against a
-    shared truth — the LEFT-JOIN hit-count shape every audit emits."""
+    shared truth, one _hit_count per arm."""
     out = None
     for name, df in arms.items():
-        approx = df.select("query_id", "vec_id").withColumn("_c", F.lit(1))
-        part = truth.join(approx, ["query_id", "vec_id"], "left").agg(
-            F.lit(name).alias("variant"),
-            F.count("*").alias("n_true"),
-            F.count("_c").alias("n_caught"),
-            F.round(F.count("_c") / F.count("*").cast("double"), 4).alias("recall"),
+        part = _hit_count(
+            truth, df, ["query_id", "vec_id"], F.lit(name).alias("variant")
         )
         out = part if out is None else out.unionAll(part)
     return out.orderBy("variant")
 
 
 def _ann_recall_oracle(topk: int = _ANN_AUDIT_TOPK) -> str:
-    """Recall@k audit oracle: exact L2 top-k ground truth joined against
-    every ANN variant's replayed result set. Each variant's full oracle
-    chain (each individually driver-verified) nests as a derived CTE — the
-    nested WITH shadows the outer names, so the tested builders compose
-    verbatim; recall is a LEFT-JOIN hit count, the lsh_recall_audit shape."""
-    sqd = _pq_sqd_sql
-    variants = [
+    """Recall@k oracle of ann_recall_audit: one arm per ANN variant."""
+    return _recall_oracle([
         ("ivfpq_adaptive", _ivfpq_adaptive_oracle(topk=topk)),
         ("ivfpq_plain", _ivfpq_oracle(topk=topk)),
         ("ivfpq_residual", _ivfpq_res_oracle(topk=topk)),
-        # residual encoding composed with the OPQ-lite permutation: the
-        # permutation is orthogonal, so the raw-vector truth still applies
         ("ivfpq_residual_opq",
          _ivfpq_res_oracle(topk=topk, e_sql=_opq_perm_e_sql())),
         ("pq_adc", _pq_oracle(topk=topk)),
         ("pq_rerank", _pq_oracle(topk=topk, rerank_shortlist=_ANN_AUDIT_SHORTLIST)),
-    ]
-    vblocks = ",\n    ".join(f"v_{name} AS ({sql})" for name, sql in variants)
-    hits = "\n    UNION ALL\n".join(
-        f"""    SELECT '{name}' AS variant, count(*) AS n_true,
-           count(a.vec_id) AS n_caught
-    FROM truth t LEFT JOIN v_{name} a
-      ON a.query_id = t.query_id AND a.vec_id = t.vec_id"""
-        for name, _ in variants
-    )
-    return f"""
-    WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-    truth AS (SELECT query_id, vec_id FROM (
-        SELECT q.vec_id AS query_id, c.vec_id,
-               row_number() OVER (PARTITION BY q.vec_id
-                   ORDER BY round({sqd("c.v", "q.v", 64)}, 6), c.vec_id) AS rk
-        FROM e c, e q WHERE c.vec_id >= 10 AND q.vec_id < 10) WHERE rk <= {topk}),
-    {vblocks},
-    hits AS (
-{hits})
-    SELECT variant, CAST(n_true AS BIGINT) AS n_true,
-           CAST(n_caught AS BIGINT) AS n_caught,
-           round(n_caught / CAST(n_true AS DOUBLE), 4) AS recall
-    FROM hits ORDER BY variant
-    """
+    ], topk=topk)
 
 
 @query("ann_recall_audit", oracle=_ann_recall_oracle())
@@ -6295,67 +6462,40 @@ def ann_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     topk-bounded pair set."""
     topk = _ANN_AUDIT_TOPK
     emb = read_table(spark, sf_dir, "embeddings")
-    corpus = emb.filter(F.col("vec_id") >= 10)
-    qs = emb.filter(F.col("vec_id") < 10)
+    corpus, qs = _query_split(emb)
 
     # shared index artifacts, trained ONCE (r9 VERDICT #6): the fine
     # codebook/codes serve pq_adc, pq_rerank, ivfpq_plain and
     # ivfpq_adaptive (identical pq_train calls by construction); the
     # coarse codebook + cell assignment serve all three IVF arms
     # (residual's FINE book can't be shared — it trains on residuals).
-    # localCheckpoint pins each so no arm re-runs a Lloyd chain.
+    # The permuted frame is pinned: the residual arm's internal
+    # coarse/fine chains consume it many times.
     #
-    # r16: the four artifact chains below are mutually independent, so
-    # they build OVERLAPPED (overlap_build, guide §2.6) instead of serially —
-    # each chain is a string of tiny jobs that left the cluster idle;
-    # artifacts and results are identical, only the driver-side
-    # sequencing changed (profiled 163 jobs/run, build:exec ≈ 6:1).
-    def _fine_chain():
-        cb = similarity.pq_train(emb, iters=2)
-        return cb, similarity.pq_encode(corpus, cb).localCheckpoint(eager=True)
-
-    def _coarse_chain():
-        coarse = similarity.pq_train(
-            emb, m=1, sub_dim=64, k=8, iters=2
-        ).localCheckpoint(eager=True)
-        cells = (
-            similarity.pq_encode(corpus, coarse, m=1, sub_dim=64)
-            .select("vec_id", F.element_at("codes", 1).alias("_cell"))
-            .localCheckpoint(eager=True)
-        )
-        return coarse, cells
-
-    def _perm_chain():
-        # pin the permuted frame: the residual arm's internal coarse/fine
-        # chains consume it many times, and without the cut each consumer
-        # re-runs the crossJoin+transform lineage from the raw scan
-        return similarity.apply_dim_permutation(
-            emb.select("vec_id", "embedding"),
-            similarity.opq_fit_permutation(emb),
-        ).localCheckpoint(eager=True)
-
+    # r16: the artifact chains are mutually independent, so they build
+    # OVERLAPPED (guide §2.6) — each is a string of tiny jobs that left
+    # the cluster idle when run serially (profiled 163 jobs/run,
+    # build:exec ≈ 6:1). The arms that need artifacts start from a
+    # dependency-aware future graph, not after a barrier: residual needs
+    # only the coarse artifacts, adaptive coarse+fine, residual_opq the
+    # permuted frame, so each starts as soon as its own inputs resolve
+    # (with a barrier, jobs_busy was 5.9 s of a 12.3 s build wall).
+    #
     # r10 NOTES candidate #4 (pre-share the permuted-space coarse chain)
     # was MEASURED MOOT in r11: pq_train localCheckpoints its codebook
     # per iteration, so the permuted Lloyd chain never re-executes per
     # consumer anyway — pre-sharing only added eager-checkpoint barriers
     # (same-host A/B: 28.2 s without vs 29.8 s with). Left unshared.
-    #
-    # r16 second pass: the two-group overlap_build left a BARRIER between the
-    # artifact chains and the dependent residual/adaptive/residual_opq
-    # constructions — each of which needs only SOME group-1 artifacts
-    # (residual: coarse; adaptive: coarse+fine; residual_opq: perm), so a
-    # dependency-aware future graph starts each as soon as its own inputs
-    # resolve (guide §2.6: back-fill the tail instead of a full barrier).
-    # Chains and artifacts are unchanged — only the driver-side start
-    # times move; profiled jobs_busy 5.9 s vs 12.3 s build wall at the
-    # two-group form (half the wall was barrier dead time).
     from concurrent.futures import ThreadPoolExecutor
 
     with ThreadPoolExecutor(max_workers=7) as pool:
         truth_f = pool.submit(_ann_exact_truth, emb, topk)
-        fine_f = pool.submit(_fine_chain)
-        coarse_f = pool.submit(_coarse_chain)
-        perm_f = pool.submit(_perm_chain)
+        fine_f = pool.submit(_fine_artifacts, emb, corpus)
+        coarse_f = pool.submit(_coarse_artifacts, emb, corpus, 8)
+        perm_f = pool.submit(
+            lambda: _opq_permuted(emb.select("vec_id", "embedding"))
+            .localCheckpoint(eager=True)
+        )
         res_f = pool.submit(
             lambda: similarity.ivfpq_residual_topk(
                 emb, corpus, qs, topk=topk, n_cells=8, nprobe=3,
@@ -6369,78 +6509,43 @@ def ann_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
                 cells=coarse_f.result()[1], codes=fine_f.result()[1],
             )
         )
-
-        def _res_opq_chain():
-            p_emb = perm_f.result()
-            return similarity.ivfpq_residual_topk(
-                p_emb,
-                p_emb.filter(F.col("vec_id") >= 10),
-                p_emb.filter(F.col("vec_id") < 10),
+        res_opq_f = pool.submit(
+            lambda: similarity.ivfpq_residual_topk(
+                perm_f.result(), *_query_split(perm_f.result()),
                 topk=topk, n_cells=8, nprobe=3,
             )
-
-        res_opq_f = pool.submit(_res_opq_chain)
-        truth = truth_f.result()
-        cb, codes = fine_f.result()
-        coarse, cells = coarse_f.result()
-        res_arm = res_f.result()
-        adapt_arm = adapt_f.result()
-        res_opq_arm = res_opq_f.result()
-    variants = {
+        )
+        truth, fine, coarse_cells = (
+            truth_f.result(), fine_f.result(), coarse_f.result()
+        )
+        res_arm, adapt_arm, res_opq_arm = (
+            res_f.result(), adapt_f.result(), res_opq_f.result()
+        )
+    cb, codes = fine
+    return _recall_table(truth, {
         "pq_adc": similarity.pq_topk(codes, cb, qs, topk=topk),
         "pq_rerank": similarity.pq_topk_rerank(
             codes, cb, qs, corpus, topk=topk, shortlist=_ANN_AUDIT_SHORTLIST
         ),
-        "ivfpq_plain": similarity.ivfpq_topk(
-            emb, corpus, qs, topk=topk, n_cells=8, nprobe=3,
-            coarse=coarse, fine=cb, cells=cells, codes=codes,
+        "ivfpq_plain": _ivfpq_arm(
+            emb, corpus, qs, topk, (8, 3), coarse_cells, fine, rerank=False
         ),
-    }
-    variants["ivfpq_residual"] = res_arm
-    variants["ivfpq_adaptive"] = adapt_arm
-    variants["ivfpq_residual_opq"] = res_opq_arm
-    return _recall_table(truth, variants)
+        "ivfpq_residual": res_arm,
+        "ivfpq_adaptive": adapt_arm,
+        "ivfpq_residual_opq": res_opq_arm,
+    })
 
 
 def _opq_recall_oracle(topk: int = _ANN_AUDIT_TOPK, d: int = 64) -> str:
-    """Recall@k for the OPQ-lite arms vs plain PQ, same shape as
-    _ann_recall_oracle: the truth is the exact L2 top-k on the ORIGINAL
-    vectors (valid for every arm — permutations and the sign-flipped
-    Hadamard rotation are orthogonal, so they preserve the exact ranking);
-    each arm feeds its transformed vectors through the SAME _pq_oracle
-    replay chain via e_sql."""
-    sqd = _pq_sqd_sql
-    rr_src = similarity.hadamard_rotate_sql(
-        d, "SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings"
-    )
-    variants = [
+    """Recall@k for the OPQ-lite arms vs plain PQ: each arm feeds its
+    transformed vectors through the SAME _pq_oracle replay chain via
+    e_sql, scored against the raw-vector truth."""
+    rr_src = similarity.hadamard_rotate_sql(d, _EMB_SQL)
+    return _recall_oracle([
         ("opq_perm", _pq_oracle(topk=topk, e_sql=_opq_perm_e_sql())),
         ("opq_rr", _pq_oracle(topk=topk, e_sql=_opq_perm_e_sql(src=rr_src))),
         ("pq_plain", _pq_oracle(topk=topk)),
-    ]
-    vblocks = ",\n    ".join(f"v_{name} AS ({sql})" for name, sql in variants)
-    hits = "\n    UNION ALL\n".join(
-        f"""    SELECT '{name}' AS variant, count(*) AS n_true,
-           count(a.vec_id) AS n_caught
-    FROM truth t LEFT JOIN v_{name} a
-      ON a.query_id = t.query_id AND a.vec_id = t.vec_id"""
-        for name, _ in variants
-    )
-    return f"""
-    WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-    truth AS (SELECT query_id, vec_id FROM (
-        SELECT q.vec_id AS query_id, c.vec_id,
-               row_number() OVER (PARTITION BY q.vec_id
-                   ORDER BY round({sqd("c.v", "q.v", d)}, 6), c.vec_id) AS rk
-        FROM e c, e q WHERE c.vec_id >= 10 AND q.vec_id < 10) WHERE rk <= {topk}),
-    {vblocks},
-    hits AS (
-{hits})
-    SELECT variant, CAST(n_true AS BIGINT) AS n_true,
-           CAST(n_caught AS BIGINT) AS n_caught,
-           round(n_caught / CAST(n_true AS DOUBLE), 4) AS recall
-    FROM hits ORDER BY variant
-    """
+    ], d=d, topk=topk)
 
 
 @query("opq_recall_audit", oracle=_opq_recall_oracle())
@@ -6469,24 +6574,7 @@ def opq_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = read_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     d = 64
 
-    def pq_arm(vecs: DataFrame) -> DataFrame:
-        # ONE persisted subvector base per transform arm feeds BOTH the
-        # Lloyd training and the corpus encode (r10 VERDICT #4 — the
-        # r9 #6 shared-artifact discipline applied inside each arm);
-        # results are identical by construction, only the repeated
-        # transform+slice scans disappear
-        sv = similarity._pq_subvecs(
-            vecs, 8, 8, "vec_id", "embedding"
-        ).localCheckpoint(eager=True)
-        cb = similarity.pq_train(vecs, iters=2, subvecs=sv)
-        codes = similarity.pq_encode(
-            vecs, cb, subvecs=sv.filter(F.col("vec_id") >= 10)
-        )
-        return similarity.pq_topk(
-            codes, cb, vecs.filter(F.col("vec_id") < 10), topk=topk
-        )
-
-    # pin each transformed frame once: every pq_arm consumes its input
+    # pin each transformed frame once: every _pq_arm consumes its input
     # from several branches (seed scan, subvector persist, encode, query
     # side), and the transform lineage would re-run per branch.
     # r16: the three transform+PQ arms and the exact truth are mutually
@@ -6494,24 +6582,15 @@ def opq_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # serial build profiled 21-31 s against a 3 s final exec). Same
     # artifacts and results, the tiny Lloyd/encode jobs just share the
     # idle cores.
-    def _perm_arm():
-        permuted = similarity.apply_dim_permutation(
-            emb, similarity.opq_fit_permutation(emb)
-        ).localCheckpoint(eager=True)
-        return pq_arm(permuted)
-
-    def _rr_arm():
-        rot = similarity.hadamard_rotate(emb, d=d)
-        rr = similarity.apply_dim_permutation(
-            rot, similarity.opq_fit_permutation(rot)
-        ).localCheckpoint(eager=True)
-        return pq_arm(rr)
-
     truth, plain_arm, perm_arm, rr_arm = overlap_build(
         lambda: _ann_exact_truth(emb, topk),
-        lambda: pq_arm(emb),
-        _perm_arm,
-        _rr_arm,
+        lambda: _pq_arm(emb, topk),
+        lambda: _pq_arm(_opq_permuted(emb).localCheckpoint(eager=True), topk),
+        lambda: _pq_arm(
+            _opq_permuted(similarity.hadamard_rotate(emb, d=d))
+            .localCheckpoint(eager=True),
+            topk,
+        ),
     )
     return _recall_table(truth, {
         "pq_plain": plain_arm,
@@ -6522,10 +6601,9 @@ def opq_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ivf_sizing_report",
-    oracle="""
-    WITH c AS (SELECT count(*) AS n FROM embeddings WHERE vec_id >= 10),
-    s AS (SELECT n, greatest(2, least(CAST(floor(sqrt(n)) AS BIGINT),
-                                      n // 8)) AS n_cells FROM c),
+    oracle=f"""
+    WITH s AS (SELECT count(*) AS n, {_SQRT_N_CELLS_SQL} AS n_cells
+               FROM embeddings WHERE vec_id >= 10),
     p AS (SELECT n, n_cells,
                  greatest(1, n_cells // 8) AS nprobe FROM s)
     SELECT CAST(n AS BIGINT) AS n_corpus,
@@ -7080,23 +7158,6 @@ def opq_rotation_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     topk = _ANN_AUDIT_TOPK
     emb = read_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
 
-    def pq_arm(vecs: DataFrame) -> DataFrame:
-        # ONE persisted subvector base per transform arm feeds BOTH the
-        # Lloyd training and the corpus encode (r10 VERDICT #4 — the
-        # r9 #6 shared-artifact discipline applied inside each arm);
-        # results are identical by construction, only the repeated
-        # transform+slice scans disappear
-        sv = similarity._pq_subvecs(
-            vecs, 8, 8, "vec_id", "embedding"
-        ).localCheckpoint(eager=True)
-        cb = similarity.pq_train(vecs, iters=2, subvecs=sv)
-        codes = similarity.pq_encode(
-            vecs, cb, subvecs=sv.filter(F.col("vec_id") >= 10)
-        )
-        return similarity.pq_topk(
-            codes, cb, vecs.filter(F.col("vec_id") < 10), topk=topk
-        )
-
     # r16: truth and the four arms are independent chains given the
     # rotation fits — overlapped (overlap_build, guide §2.6; serial build
     # profiled 17-23 s vs 1.8 s exec). The parametric fit gates both
@@ -7110,27 +7171,23 @@ def opq_rotation_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             # the non-parametric alternation (opq_refine_rotation) from
             # the parametric start — the full Ge et al. surface pipeline
             rot_np, _hist = similarity.opq_refine_rotation(emb, rot=rot)
-            return pq_arm(
-                similarity.apply_rotation(emb, rot_np).localCheckpoint(
-                    eager=True
-                )
+            return _pq_arm(
+                similarity.apply_rotation(emb, rot_np).localCheckpoint(eager=True),
+                topk,
             )
 
         return overlap_build(
-            lambda: pq_arm(
-                similarity.apply_rotation(emb, rot).localCheckpoint(eager=True)
+            lambda: _pq_arm(
+                similarity.apply_rotation(emb, rot).localCheckpoint(eager=True),
+                topk,
             ),
             _rot_np_arm,
         )
 
     truth, plain_arm, perm_arm, (rot_arm, rot_np_arm) = overlap_build(
         lambda: _ann_exact_truth(emb, topk),
-        lambda: pq_arm(emb),
-        lambda: pq_arm(
-            similarity.apply_dim_permutation(
-                emb, similarity.opq_fit_permutation(emb)
-            )
-        ),
+        lambda: _pq_arm(emb, topk),
+        lambda: _pq_arm(_opq_permuted(emb), topk),
         _rot_chain,
     )
     return _recall_table(truth, {
@@ -7165,25 +7222,13 @@ def opq_rotation_distortion(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus_filter = F.col("vec_id") >= 10
 
     def arm(name: str, vecs: DataFrame) -> DataFrame:
-        # shared subvector base per arm: train + distortion scan read one
-        # persisted (id, sub, _sv) frame (r10 VERDICT #4)
-        sv = similarity._pq_subvecs(
-            vecs, 8, 8, "vec_id", "embedding"
-        ).localCheckpoint(eager=True)
-        cb = similarity.pq_train(vecs, iters=2, subvecs=sv)
+        sv, cb = _pq_book(vecs)
         return similarity.pq_distortion_report(
             vecs.filter(corpus_filter), cb, subvecs=sv.filter(corpus_filter)
         ).select(F.lit(name).alias("variant"), "*")
 
     out = arm("pq_plain", emb)
-    out = out.unionAll(
-        arm(
-            "opq_perm",
-            similarity.apply_dim_permutation(
-                emb, similarity.opq_fit_permutation(emb)
-            ),
-        )
-    )
+    out = out.unionAll(arm("opq_perm", _opq_permuted(emb)))
     out = out.unionAll(
         arm(
             "opq_rot",
@@ -7318,85 +7363,24 @@ def opq_rotation_invariants(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.orderBy("variant")
 
 
-_ANN_PROD_SHORTLIST = 60
-# fine-codebook sampled-training set: the same 39-points-per-centroid
-# rule the coarse arm uses, at the fine chain's k=16 centroids/subspace
-# (each subspace trains on the same row cut, so one rule sizes them all)
-_ANN_PROD_FINE_SAMPLE = 39 * 16
-
-
-def _ivf_geo_sql() -> str:
-    """The ivf_auto_size sqrt-N rule as a geo CTE over the corpus count —
-    the SQL twin of the Python function (same integer clamps), referenced
-    by the auto-geometry oracle arms as scalar subqueries."""
-    return """geo0 AS (SELECT greatest(2, least(CAST(floor(sqrt(count(*))) AS BIGINT),
-                                       count(*) // 8)) AS n_cells
-               FROM e WHERE vec_id >= 10),
-    geo AS (SELECT n_cells, greatest(1, n_cells // 8) AS nprobe FROM geo0)"""
-
-
 def _ann_recall_prod_oracle(topk: int = _ANN_AUDIT_TOPK) -> str:
-    """Recall@k for the PRODUCTION search configs: auto-sized geometry
-    (replayed via the geo CTE's sqrt-N scalar subqueries) with and
-    without the exact re-rank stage, plus re-rank at the hand-pinned toy
-    dials. Same truth/hits shape as _ann_recall_oracle."""
-    sqd = _pq_sqd_sql
-    nc = "(SELECT n_cells FROM geo)"
-    np_ = "(SELECT nprobe FROM geo)"
-    variants = [
-        ("ivfpq_auto",
-         _ivfpq_oracle(topk=topk, n_cells=nc, nprobe=np_,
-                       geo_sql=_ivf_geo_sql())),
-        ("ivfpq_auto_rerank",
-         _ivfpq_oracle(topk=topk, n_cells=nc, nprobe=np_,
-                       geo_sql=_ivf_geo_sql(),
-                       rerank_shortlist=_ANN_PROD_SHORTLIST)),
-        # sampled coarse TRAINING at auto geometry + rerank — the actual
-        # production default (coarse_sample="auto" = 39*n_cells, the
-        # FAISS points-per-centroid rule): the 100 TB posture where the
-        # sqrt-N-cell Lloyd never does N^1.5 work, hash-gated against
-        # the same sqrt-N geo CTE with the sample as a geo expression
-        ("ivfpq_auto_sampled_rerank",
-         _ivfpq_oracle(topk=topk, n_cells=nc, nprobe=np_,
-                       geo_sql=_ivf_geo_sql(),
-                       rerank_shortlist=_ANN_PROD_SHORTLIST,
-                       coarse_sample="39 * (SELECT n_cells FROM geo)")),
+    """Recall@k for the PRODUCTION search configs: the auto-geometry arms
+    (replayed via the geo CTE's sqrt-N scalar subqueries), both quantizers
+    sampled, and re-rank at the hand-pinned toy dials."""
+    return _recall_oracle([
+        *_auto_ivfpq_oracle_arms(topk),
         # BOTH quantizers sampled (r12 VERDICT #4): the fine chain is
         # O(N)/step so sampling it is an accuracy experiment, not a
         # complexity fix — hash-gated exactly like the coarse arm, with
         # the fine Lloyd over the 39*k ':pqtrain'-ranked rows
         ("ivfpq_auto_sampled_fine_rerank",
-         _ivfpq_oracle(topk=topk, n_cells=nc, nprobe=np_,
-                       geo_sql=_ivf_geo_sql(),
+         _ivfpq_oracle(topk=topk, **_AUTO_GEO_SQL_KW,
                        rerank_shortlist=_ANN_PROD_SHORTLIST,
-                       coarse_sample="39 * (SELECT n_cells FROM geo)",
+                       coarse_sample=_AUTO_COARSE_SAMPLE_SQL,
                        fine_sample=_ANN_PROD_FINE_SAMPLE)),
         ("ivfpq_toy_rerank",
          _ivfpq_oracle(topk=topk, rerank_shortlist=_ANN_PROD_SHORTLIST)),
-    ]
-    vblocks = ",\n    ".join(f"v_{name} AS ({sql})" for name, sql in variants)
-    hits = "\n    UNION ALL\n".join(
-        f"""    SELECT '{name}' AS variant, count(*) AS n_true,
-           count(a.vec_id) AS n_caught
-    FROM truth t LEFT JOIN v_{name} a
-      ON a.query_id = t.query_id AND a.vec_id = t.vec_id"""
-        for name, _ in variants
-    )
-    return f"""
-    WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-    truth AS (SELECT query_id, vec_id FROM (
-        SELECT q.vec_id AS query_id, c.vec_id,
-               row_number() OVER (PARTITION BY q.vec_id
-                   ORDER BY round({sqd("c.v", "q.v", 64)}, 6), c.vec_id) AS rk
-        FROM e c, e q WHERE c.vec_id >= 10 AND q.vec_id < 10) WHERE rk <= {topk}),
-    {vblocks},
-    hits AS (
-{hits})
-    SELECT variant, CAST(n_true AS BIGINT) AS n_true,
-           CAST(n_caught AS BIGINT) AS n_caught,
-           round(n_caught / CAST(n_true AS DOUBLE), 4) AS recall
-    FROM hits ORDER BY variant
-    """
+    ], topk=topk)
 
 
 @query("ann_recall_prod_audit", oracle=_ann_recall_prod_oracle())
@@ -7428,96 +7412,36 @@ def ann_recall_prod_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus."""
     topk = _ANN_AUDIT_TOPK
     emb = read_table(spark, sf_dir, "embeddings")
-    corpus = emb.filter(F.col("vec_id") >= 10)
-    qs = emb.filter(F.col("vec_id") < 10)
-
-    auto = similarity.ivf_auto_size(corpus.count(), topk)
-    nc, np_ = auto["n_cells"], auto["nprobe"]
+    corpus, qs = _query_split(emb)
+    geo = _auto_geo(corpus, topk)
 
     # shared artifacts (the r9 #6 discipline): ONE fine codebook/code set
-    # serves every arm; one coarse book per geometry.
-    # r16: the six artifact chains (fine, 3 coarse geometries, sampled
-    # fine, truth) are mutually independent — built OVERLAPPED
-    # (overlap_build, guide §2.6; profiled build:exec 44-112 s : 2-4 s
-    # serial). Same artifacts, same results, overlapped tiny jobs.
-    def _fine_chain():
-        cb = similarity.pq_train(emb, iters=2)
-        return cb, similarity.pq_encode(corpus, cb).localCheckpoint(eager=True)
-
-    def coarse_and_cells(n_cells, sample=None):
-        coarse = similarity.pq_train(
-            emb, m=1, sub_dim=64, k=n_cells, iters=2, sample=sample
-        ).localCheckpoint(eager=True)
-        cells = (
-            similarity.pq_encode(corpus, coarse, m=1, sub_dim=64)
-            .select("vec_id", F.element_at("codes", 1).alias("_cell"))
-            .localCheckpoint(eager=True)
-        )
-        return coarse, cells
-
-    def _sampled_fine_chain():
-        # sampled-FINE-codebook artifacts (r12 VERDICT #4): one sampled
-        # fine book + its codes serve the both-sampled arm; every other
-        # arm keeps the shared full-training fine artifacts
-        cb_sf = similarity.pq_train(emb, iters=2, sample=_ANN_PROD_FINE_SAMPLE)
-        return cb_sf, similarity.pq_encode(corpus, cb_sf).localCheckpoint(
-            eager=True
-        )
-
-    (
-        truth,
-        (cb, codes),
-        (coarse_a, cells_a),
-        (coarse_t, cells_t),
-        # sampled-coarse-training arm (r10 VERDICT #1): the SAME auto
-        # geometry, but the coarse Lloyd trains on the bounded
-        # salted-hash sample (39 points/cell). At 100 TB this is the only
-        # arm whose TRAINING cost stays O(s) per step; recall must land
-        # within noise of the full-corpus arm.
-        (coarse_s, cells_s),
-        (cb_sf, codes_sf),
-    ) = overlap_build(
+    # serves every arm but the both-sampled one; one coarse book per
+    # geometry. The sampled-coarse arm (r10 VERDICT #1) trains the same
+    # auto geometry on the bounded 39-points-per-cell salted-hash sample —
+    # at 100 TB the only arm whose TRAINING cost stays O(s) per step; the
+    # sampled-fine book (r12 VERDICT #4) serves only the both-sampled arm.
+    # r16: the six artifact chains are mutually independent — built
+    # OVERLAPPED (overlap_build, guide §2.6; profiled build:exec 44-112 s
+    # : 2-4 s serial). Same artifacts, same results, overlapped tiny jobs.
+    truth, fine, full, toy, sampled, sampled_fine = overlap_build(
         lambda: _ann_exact_truth(emb, topk),
-        _fine_chain,
-        lambda: coarse_and_cells(nc),
-        lambda: coarse_and_cells(8),
-        lambda: coarse_and_cells(
-            nc, sample=similarity.IVF_TRAIN_POINTS_PER_CELL * nc
-        ),
-        _sampled_fine_chain,
+        lambda: _fine_artifacts(emb, corpus),
+        lambda: _coarse_artifacts(emb, corpus, geo[0]),
+        lambda: _coarse_artifacts(emb, corpus, 8),
+        lambda: _coarse_artifacts(emb, corpus, geo[0], sampled=True),
+        lambda: _fine_artifacts(emb, corpus, sample=_ANN_PROD_FINE_SAMPLE),
     )
-    variants = {
-        "ivfpq_auto": similarity.ivfpq_topk(
-            emb, corpus, qs, topk=topk, n_cells=nc, nprobe=np_,
-            coarse=coarse_a, fine=cb, cells=cells_a, codes=codes,
-        ),
-        "ivfpq_auto_rerank": similarity.ivfpq_topk_rerank(
-            emb, corpus, qs, topk=topk, shortlist=_ANN_PROD_SHORTLIST,
-            n_cells=nc, nprobe=np_,
-            coarse=coarse_a, fine=cb, cells=cells_a, codes=codes,
-        ),
-        "ivfpq_auto_sampled_rerank": similarity.ivfpq_topk_rerank(
-            emb, corpus, qs, topk=topk, shortlist=_ANN_PROD_SHORTLIST,
-            n_cells=nc, nprobe=np_,
-            coarse=coarse_s, fine=cb, cells=cells_s, codes=codes,
-        ),
-        # BOTH quantizers sampled (r12 VERDICT #4): fine Lloyd over the
-        # 39*k ':pqtrain'-ranked rows (encode stays full-corpus); delta
-        # vs ivfpq_auto_sampled_rerank isolates what sampling the fine
-        # chain costs in recall — the accuracy experiment, since the
-        # fine chain is already O(N)/step
-        "ivfpq_auto_sampled_fine_rerank": similarity.ivfpq_topk_rerank(
-            emb, corpus, qs, topk=topk, shortlist=_ANN_PROD_SHORTLIST,
-            n_cells=nc, nprobe=np_,
-            coarse=coarse_s, fine=cb_sf, cells=cells_s, codes=codes_sf,
-        ),
-        "ivfpq_toy_rerank": similarity.ivfpq_topk_rerank(
-            emb, corpus, qs, topk=topk, shortlist=_ANN_PROD_SHORTLIST,
-            n_cells=8, nprobe=3,
-            coarse=coarse_t, fine=cb, cells=cells_t, codes=codes,
-        ),
-    }
-    return _recall_table(truth, variants)
+    arm = functools.partial(_ivfpq_arm, emb, corpus, qs, topk)
+    return _recall_table(truth, {
+        "ivfpq_auto": arm(geo, full, fine, rerank=False),
+        "ivfpq_auto_rerank": arm(geo, full, fine),
+        "ivfpq_auto_sampled_rerank": arm(geo, sampled, fine),
+        # delta vs ivfpq_auto_sampled_rerank isolates what sampling the
+        # fine chain costs in recall (encode stays full-corpus)
+        "ivfpq_auto_sampled_fine_rerank": arm(geo, sampled, sampled_fine),
+        "ivfpq_toy_rerank": arm((8, 3), toy, fine),
+    })
 
 
 def _clustered_e_sql() -> str:
@@ -7533,9 +7457,7 @@ def _clustered_e_sql() -> str:
     mh = H.md5int_sql
     return f"""
     WITH raw AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-    geoc AS (SELECT greatest(2, least(CAST(floor(sqrt(count(*))) AS BIGINT),
-                                      count(*) // 8)) AS n_cells
-             FROM raw WHERE vec_id >= 10),
+    geoc AS (SELECT {_SQRT_N_CELLS_SQL} AS n_cells FROM raw WHERE vec_id >= 10),
     cent AS (SELECT cc.c, d.dim,
                     ({mh("'clucent:' || CAST(cc.c AS VARCHAR) || ':' || CAST(d.dim - 1 AS VARCHAR)")}
                      % 2001 - 1000) / 100.0 AS cv
@@ -7599,50 +7521,11 @@ def _clustered_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _ann_recall_clustered_oracle(topk: int = _ANN_AUDIT_TOPK) -> str:
-    """Recall@k over the derived CLUSTERED corpus: same truth/hits shape
-    as the prod audit, every arm's full chain fed the clustered vectors
-    through _ivfpq_oracle's e_sql hook."""
-    sqd = _pq_sqd_sql
+    """Recall@k over the derived CLUSTERED corpus: the prod audit's
+    auto-geometry arms, every arm's full chain and the truth fed the
+    clustered vectors through the e_sql hook."""
     e_clu = _clustered_e_sql()
-    nc = "(SELECT n_cells FROM geo)"
-    np_ = "(SELECT nprobe FROM geo)"
-    variants = [
-        ("ivfpq_auto",
-         _ivfpq_oracle(topk=topk, n_cells=nc, nprobe=np_,
-                       geo_sql=_ivf_geo_sql(), e_sql=e_clu)),
-        ("ivfpq_auto_rerank",
-         _ivfpq_oracle(topk=topk, n_cells=nc, nprobe=np_,
-                       geo_sql=_ivf_geo_sql(), e_sql=e_clu,
-                       rerank_shortlist=_ANN_PROD_SHORTLIST)),
-        ("ivfpq_auto_sampled_rerank",
-         _ivfpq_oracle(topk=topk, n_cells=nc, nprobe=np_,
-                       geo_sql=_ivf_geo_sql(), e_sql=e_clu,
-                       rerank_shortlist=_ANN_PROD_SHORTLIST,
-                       coarse_sample="39 * (SELECT n_cells FROM geo)")),
-    ]
-    vblocks = ",\n    ".join(f"v_{name} AS ({sql})" for name, sql in variants)
-    hits = "\n    UNION ALL\n".join(
-        f"""    SELECT '{name}' AS variant, count(*) AS n_true,
-           count(a.vec_id) AS n_caught
-    FROM truth t LEFT JOIN v_{name} a
-      ON a.query_id = t.query_id AND a.vec_id = t.vec_id"""
-        for name, _ in variants
-    )
-    return f"""
-    WITH e AS ({e_clu}),
-    truth AS (SELECT query_id, vec_id FROM (
-        SELECT q.vec_id AS query_id, c.vec_id,
-               row_number() OVER (PARTITION BY q.vec_id
-                   ORDER BY round({sqd("c.v", "q.v", 64)}, 6), c.vec_id) AS rk
-        FROM e c, e q WHERE c.vec_id >= 10 AND q.vec_id < 10) WHERE rk <= {topk}),
-    {vblocks},
-    hits AS (
-{hits})
-    SELECT variant, CAST(n_true AS BIGINT) AS n_true,
-           CAST(n_caught AS BIGINT) AS n_caught,
-           round(n_caught / CAST(n_true AS DOUBLE), 4) AS recall
-    FROM hits ORDER BY variant
-    """
+    return _recall_oracle(_auto_ivfpq_oracle_arms(topk, e_clu), e_clu, topk=topk)
 
 
 @query("ann_recall_clustered_audit", oracle=_ann_recall_clustered_oracle())
@@ -7667,60 +7550,24 @@ def ann_recall_clustered_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     audit's cost envelope."""
     topk = _ANN_AUDIT_TOPK
     embc = _clustered_embeddings(spark, sf_dir).localCheckpoint(eager=True)
-    corpus = embc.filter(F.col("vec_id") >= 10)
-    qs = embc.filter(F.col("vec_id") < 10)
-
-    auto = similarity.ivf_auto_size(corpus.count(), topk)
-    nc, np_ = auto["n_cells"], auto["nprobe"]
-
-    def _fine_chain():
-        cb = similarity.pq_train(embc, iters=2)
-        return cb, similarity.pq_encode(corpus, cb).localCheckpoint(eager=True)
-
-    def coarse_and_cells(sample):
-        coarse = similarity.pq_train(
-            embc, m=1, sub_dim=64, k=nc, iters=2, sample=sample
-        ).localCheckpoint(eager=True)
-        cells = (
-            similarity.pq_encode(corpus, coarse, m=1, sub_dim=64)
-            .select("vec_id", F.element_at("codes", 1).alias("_cell"))
-            .localCheckpoint(eager=True)
-        )
-        return coarse, cells
+    corpus, qs = _query_split(embc)
+    geo = _auto_geo(corpus, topk)
 
     # r16: the four chains (truth, fine book, full-trained coarse,
     # sampled coarse) are independent given embc — overlapped
     # (overlap_build, guide §2.6). Same artifacts, same results.
-    (
-        truth,
-        (cb, codes),
-        (coarse_f, cells_f),
-        (coarse_s, cells_s),
-    ) = overlap_build(
+    truth, fine, full, sampled = overlap_build(
         lambda: _ann_exact_truth(embc, topk),
-        _fine_chain,
-        lambda: coarse_and_cells(None),
-        lambda: coarse_and_cells(
-            similarity.IVF_TRAIN_POINTS_PER_CELL * nc
-        ),
+        lambda: _fine_artifacts(embc, corpus),
+        lambda: _coarse_artifacts(embc, corpus, geo[0]),
+        lambda: _coarse_artifacts(embc, corpus, geo[0], sampled=True),
     )
-    variants = {
-        "ivfpq_auto": similarity.ivfpq_topk(
-            embc, corpus, qs, topk=topk, n_cells=nc, nprobe=np_,
-            coarse=coarse_f, fine=cb, cells=cells_f, codes=codes,
-        ),
-        "ivfpq_auto_rerank": similarity.ivfpq_topk_rerank(
-            embc, corpus, qs, topk=topk, shortlist=_ANN_PROD_SHORTLIST,
-            n_cells=nc, nprobe=np_,
-            coarse=coarse_f, fine=cb, cells=cells_f, codes=codes,
-        ),
-        "ivfpq_auto_sampled_rerank": similarity.ivfpq_topk_rerank(
-            embc, corpus, qs, topk=topk, shortlist=_ANN_PROD_SHORTLIST,
-            n_cells=nc, nprobe=np_,
-            coarse=coarse_s, fine=cb, cells=cells_s, codes=codes,
-        ),
-    }
-    return _recall_table(truth, variants)
+    arm = functools.partial(_ivfpq_arm, embc, corpus, qs, topk, geo)
+    return _recall_table(truth, {
+        "ivfpq_auto": arm(full, fine, rerank=False),
+        "ivfpq_auto_rerank": arm(full, fine),
+        "ivfpq_auto_sampled_rerank": arm(sampled, fine),
+    })
 
 
 def _ivf_cell_skew_oracle() -> str:
@@ -7841,14 +7688,12 @@ def opq_rotation_prod_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     truth = _ann_exact_truth(emb, topk)
 
     def arm(vecs: DataFrame) -> DataFrame:
-        corpus = vecs.filter(F.col("vec_id") >= 10)
-        qs = vecs.filter(F.col("vec_id") < 10)
-        auto = similarity.ivf_auto_size(corpus.count(), topk)
+        corpus, qs = _query_split(vecs)
+        nc, np_ = _auto_geo(corpus, topk)
         return similarity.ivfpq_topk_rerank(
             vecs, corpus, qs, topk=topk, shortlist=_ANN_PROD_SHORTLIST,
-            n_cells=auto["n_cells"], nprobe=auto["nprobe"],
-            coarse_sample=similarity.IVF_TRAIN_POINTS_PER_CELL
-            * auto["n_cells"],
+            n_cells=nc, nprobe=np_,
+            coarse_sample=similarity.IVF_TRAIN_POINTS_PER_CELL * nc,
         )
 
     rot = similarity.opq_fit_rotation(emb)
